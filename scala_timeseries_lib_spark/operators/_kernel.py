@@ -17,10 +17,11 @@ borders relationally.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .._env import env_int
 
 __all__ = ["apply_per_series", "apply_per_bucket"]
 
@@ -28,21 +29,23 @@ __all__ = ["apply_per_series", "apply_per_bucket"]
 # salt bucket. Each bucket is materialized as ONE pandas frame in a Python
 # worker, so this bounds kernel-stage worker memory at any input size; it
 # also sets the task-wave count at toy size (see _default_buckets).
-_BUCKET_BYTES = int(os.environ.get("SPARK_GRAFT_KERNEL_BUCKET_BYTES", str(8 << 20)))
+_BUCKET_BYTES = env_int("SPARK_GRAFT_KERNEL_BUCKET_BYTES", 8 << 20)
 
 
 def _default_buckets(df: DataFrame) -> int:
     """Size-adaptive salt-bucket count for the kernel stage.
 
     ``ceil(estimated_bytes / _BUCKET_BYTES)`` clamped to
-    ``[defaultParallelism, defaultParallelism * 32]``. The estimate is
-    Catalyst's driver-side ``sizeInBytes`` on the already-built plan (no job
-    runs). Rationale, measured round 6 (OPTIMIZATION_r06.md): per-task
-    Arrow/Python overhead dominates small inputs, so tiny inputs want
-    exactly ONE task wave (n = defaultParallelism: 1.33 s -> 0.97 s on the
-    sf0.1 gorilla roundtrip vs the old fixed 4x); huge inputs want buckets
-    bounded by BYTES, not core count, so worker memory stays flat while
-    parallelism grows with the data. Falls back to the old fixed
+    ``[max(defaultParallelism, 16), defaultParallelism * 32]``. The estimate
+    is Catalyst's driver-side ``sizeInBytes`` on the already-built plan (no
+    job runs). Rationale, measured round 6 (OPTIMIZATION_r06.md): per-task
+    Arrow/Python overhead dominates small inputs, so tiny inputs want as few
+    buckets as possible -- the floor of ``max(defaultParallelism, 16)`` is
+    one task wave only when there are >= 16 cores, and more waves below
+    that (1.33 s -> 0.97 s on the sf0.1 gorilla roundtrip vs the old fixed
+    4x); huge inputs want buckets bounded by BYTES, not core count, so
+    worker memory stays flat while parallelism grows with the data. Falls
+    back to the old fixed
     ``4 * defaultParallelism`` when the estimate is unusable (streaming
     frames, unknown-stat sources report 2^63-ish sentinels).
     """

@@ -337,11 +337,15 @@ def rollup_time_weighted(
 
     Crossover (measured, BENCH/BASELINE.md): the split's win is the
     eliminated ~n_pieces-entry hash table, its cost is ~2 extra stages.
-    Below ~10^7 pieces the job is scheduling-bound and the single-aggregate
-    ``disjoint=False`` plan is faster (0.7 s vs 1.9 s at sf0.1/1h); above,
-    the split wins up to 7x (0.9 s vs 6.7 s at 76M pieces, 32 cores).
-    Callers that know they are small may pass ``disjoint=False`` purely as
-    a physical hint -- results are identical on well-formed input.
+    Small jobs are scheduling-bound and the single-aggregate
+    ``disjoint=False`` plan is faster (0.7 s vs 1.9 s at sf0.1/1h); at
+    scale the split wins up to 7x (0.9 s vs 6.7 s at 76M pieces, 32
+    cores), and it is the hot-key plan (a key's 16M pieces aggregate in one
+    task at ~1 us a piece, 17 s; the split took 2.3 s). Callers that know
+    they are small may pass ``disjoint=False`` purely as a physical hint --
+    results are identical on well-formed input. ``TierPipeline`` picks by
+    a piece bound: single aggregate below 1M pieces (<= ~1 s even if one key
+    owns them all), split from there (``plans/tiers.py:SPLIT_MIN_PIECES``).
 
     Physical shape (both paths): the compact input is repartitioned on the
     series key to full parallelism BEFORE the explode -- AQE happily

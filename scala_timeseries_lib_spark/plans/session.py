@@ -12,9 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .._env import env_int
+
 __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = env_int("SPARK_GRAFT_SHUFFLE", 32)
 
 
 def _default_driver_mem() -> str:

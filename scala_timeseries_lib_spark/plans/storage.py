@@ -23,11 +23,16 @@ Both backends implement the same contract the pipeline needs:
 - ``ref(base_dir, name)`` -- backend-native table reference (a path for
   parquet, a catalog table identifier for Iceberg).
 - ``append(df, ref)`` -- append-only side tables (lineage metrics).
+- ``partition_stats(spark, ref, keep)`` -- the committed partitions of a
+  table with their row count and on-disk bytes, read from what the write
+  left behind (parquet: file listing + footers; Iceberg: the
+  ``.partitions`` metadata table), so lineage costs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +77,29 @@ class StorageBackend:
     def append(self, df: DataFrame, ref: str) -> None:
         raise NotImplementedError
 
+    def partition_stats(
+        self,
+        spark: SparkSession,
+        ref: str,
+        keep: Callable[[dict], bool] | None = None,
+    ) -> list[dict]:
+        """One dict per committed partition of ``ref``: its (integer)
+        partition values plus ``rows`` and ``bytes`` on disk. ``keep`` is
+        called with the partition values known so far (outermost column
+        first) and prunes a partition subtree by returning False."""
+        raise NotImplementedError
+
+
+def _hidden(name: str) -> bool:
+    # Spark's convention: _SUCCESS, _temporary, .crc siblings are not data
+    return name.startswith(("_", "."))
+
+
+def _part_value(name: str) -> tuple[str, int] | None:
+    """``p_day=123`` -> ("p_day", 123); None for non-partition entries."""
+    col, sep, val = name.partition("=")
+    return (col, int(val)) if sep and not _hidden(name) else None
+
 
 class ParquetBackend(StorageBackend):
     """Plain partitioned parquet with dynamic partition overwrite."""
@@ -100,6 +128,88 @@ class ParquetBackend(StorageBackend):
 
     def append(self, df: DataFrame, ref: str) -> None:
         df.write.mode("append").parquet(ref)
+
+    def partition_stats(
+        self,
+        spark: SparkSession,
+        ref: str,
+        keep: Callable[[dict], bool] | None = None,
+    ) -> list[dict]:
+        """Walk the ``col=value`` dirs under ``ref``; rows come from the
+        parquet footers, bytes from the data files' sizes. Scheme paths
+        (``file://``, ``hdfs://``, ``s3a://``) go through the Hadoop
+        FileSystem, scheme-less ones through the local OS and pyarrow -- the
+        same routing as :class:`~.stateio.StateIO`. The local Hadoop FS
+        forks a ``stat`` per file status: a footer read that way took ~4 ms
+        against ~0.04 ms through pyarrow (4-core VM)."""
+        keep = keep or (lambda _part: True)
+        ls, num_rows, root = (
+            _hadoop_fs(spark, ref) if "://" in ref else _local_fs(ref)
+        )
+        out = []
+
+        def walk(path, part: dict) -> None:
+            files = []
+            for name, is_dir, child, size in ls(path):
+                kv = _part_value(name) if is_dir else None
+                if kv is not None:
+                    sub = {**part, kv[0]: kv[1]}
+                    if keep(sub):
+                        walk(child, sub)
+                elif not is_dir and not _hidden(name):
+                    files.append((child, size))
+            if files and part:
+                out.append({
+                    **part,
+                    "rows": sum(num_rows(f) for f, _ in files),
+                    "bytes": sum(size for _, size in files),
+                })
+
+        if root is not None:
+            walk(root, {})
+        return out
+
+
+def _local_fs(ref: str):
+    """(ls, num_rows, root) over the local OS; ls yields
+    (name, is_dir, child handle, size)."""
+    import pyarrow.parquet as pq
+
+    def ls(path):
+        for e in os.scandir(path):
+            is_dir = e.is_dir()
+            yield e.name, is_dir, e.path, 0 if is_dir else e.stat().st_size
+
+    return ls, lambda f: pq.read_metadata(f).num_rows, (
+        ref if os.path.isdir(ref) else None
+    )
+
+
+def _hadoop_fs(spark: SparkSession, ref: str):
+    """(ls, num_rows, root) over the Hadoop FileSystem of ``ref``'s scheme;
+    a file's handle is its FileStatus, so the footer open needs no second
+    status lookup."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(ref)
+    fs = root.getFileSystem(conf)
+    open_footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.open
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus
+
+    def ls(path):
+        for st in fs.listStatus(path):
+            is_dir = st.isDirectory()
+            p = st.getPath()
+            yield p.getName(), is_dir, p if is_dir else st, st.getLen()
+
+    def num_rows(st) -> int:
+        reader = open_footer(input_file(st, conf))
+        try:
+            return int(reader.getRecordCount())
+        finally:
+            reader.close()
+
+    return ls, num_rows, root if fs.exists(root) else None
 
 
 class IcebergBackend(StorageBackend):
@@ -155,6 +265,25 @@ class IcebergBackend(StorageBackend):
             df.writeTo(ref).using("iceberg").create()
         else:
             df.writeTo(ref).append()
+
+    def partition_stats(
+        self,
+        spark: SparkSession,
+        ref: str,
+        keep: Callable[[dict], bool] | None = None,
+    ) -> list[dict]:
+        """From the table's ``.partitions`` metadata table (current
+        snapshot): record count and data-file bytes per partition."""
+        out = []
+        for r in spark.table(f"{ref}.partitions").collect():
+            part = {k: int(v) for k, v in r["partition"].asDict().items()}
+            if keep is None or keep(part):
+                out.append({
+                    **part,
+                    "rows": int(r["record_count"]),
+                    "bytes": int(r["total_data_file_size_in_bytes"]),
+                })
+        return out
 
 
 def default_backend(spark: SparkSession | None = None) -> StorageBackend:

@@ -10,15 +10,27 @@ an ``iceberg-spark-runtime`` jar is on the classpath -- the partition spec
 and the idempotent-rerun contract carry over unchanged, pinned by
 tests/test_storage_backend.py.
 
+Finest-tier plan, chosen by size: the run's stats aggregate (one job,
+needed anyway for rows in and watermarks) also sums entry validity, which
+bounds the finest-tier pieces by ``sum(validity) // step + 2 * rows``.
+Below ``SPLIT_MIN_PIECES`` (1M) the tier is one explode + hash aggregate
+(``rollup_time_weighted(disjoint=False)``) and 1h/1d reaggregate it; at or
+above, the full/partial split of ``rollup_time_weighted_parts`` takes over
+(no hash table for fully-covered buckets; its ~2 extra stages only pay off
+at scale). The choice is logged as one INFO record (``op``
+``tiers.finest_plan``) on the ``scala_timeseries_lib_spark`` logger.
+
 Incremental maintenance: each run processes, per key-salt partition, only
 entries whose domain reaches past that partition's checkpointed watermark
 minus one full day of overlap (a late-arriving entry can extend the last,
 still-open bucket), recomputes exactly the affected day partitions, and
 overwrites them idempotently (dynamic partition overwrite). The checkpoint
-stores PER-SALT-PARTITION watermarks; lineage row/byte metrics are emitted
-per (day, salt) output partition to a side table. A killed job rerun from
-the same checkpoint produces byte-identical tables (pinned by
-tests/test_pipeline_e2e.py).
+stores PER-SALT-PARTITION watermarks. Lineage is read from what the write
+committed, not from a count job: per (day, salt) partition of the run's
+rewrite window, ``rows`` from the parquet footers and ``bytes_approx`` the
+data files' real size on disk (``StorageBackend.partition_stats``); the
+records go to the ``_metrics`` side table. A killed job rerun from the same
+checkpoint produces the same tables (pinned by tests/test_pipeline_e2e.py).
 
 Scale: writes are partitioned by (time slab, key-hash bucket) -- the salted
 (url-bucket, time-bucket) scheme from the north rule -- so hot domains
@@ -32,13 +44,18 @@ data is only ever scanned by the finest tier.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.series_ops import reaggregate_rollup, rollup_time_weighted_parts
+from ..operators.series_ops import (
+    reaggregate_rollup,
+    rollup_time_weighted,
+    rollup_time_weighted_parts,
+)
 from .stateio import StateIO
 from .storage import ParquetBackend, StorageBackend
 
@@ -46,16 +63,40 @@ __all__ = ["TierPipeline", "TIER_STEPS"]
 
 TIER_STEPS = {"1m": 60_000, "1h": 3_600_000, "1d": 86_400_000}
 
+# Finest-tier piece bound from which the full/partial split plan is built.
+# Below it the single explode + hash aggregate is cheaper (fewer stages and
+# one persisted frame instead of two), and still safe for a hot key: the
+# aggregate runs ~1 us per piece in one task (16M hot-key pieces took 17 s,
+# BENCH/BASELINE.md), so <= 1M pieces cost <= ~1 s even if one key owns
+# them all.
+SPLIT_MIN_PIECES = 1_000_000
+
+# "no lower bound" for per-salt maps
+_NO_LOW = -(1 << 62)
+
+_METRICS_SCHEMA = (
+    "run_id string, tier string, p_day long, p_salt int, rows long, "
+    "bytes_approx long, rows_in long, started long"
+)
+_METRICS_COLS = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
+
+_log = logging.getLogger("scala_timeseries_lib_spark")
+
 
 class TierPipeline:
     """Materialize and incrementally maintain the 1m/1h/1d rollup tiers.
 
+    One ``update`` runs one stats job, then one write per tier and one
+    metrics append (plus their AQE shuffle stages); the finest tier's plan
+    is chosen by size (module docstring).
+
     Rerun idempotence is **up to rounding, not byte-exact** (ADVICE r3):
     coarser-tier float aggregates (``twmean``/``integral_s``) are sums of
     doubles, and IEEE summation order differs between the first-run chain
-    (per-branch partial reaggregation of the in-memory finest tier) and an
-    incremental rerun (single reaggregation of the stored tier) -- and is
-    not even deterministic WITHIN one path, since hash-aggregate
+    (reaggregation of the in-memory finest tier, per branch under the
+    split plan) and an incremental rerun (single reaggregation of the
+    stored tier), and between the single and split finest-tier plans --
+    and is not even deterministic WITHIN one path, since hash-aggregate
     accumulation order follows row arrival order. A rewrite of an unchanged
     partition may therefore flip the last ulp of a float column. Exact
     columns (``bucket``, ``vmin``/``vmax``, ``support_ms``, ``n_pieces``)
@@ -150,7 +191,7 @@ class TierPipeline:
         pairs = [x for s, lo in lows.items() for x in (F.lit(s), F.lit(lo))]
         lookup = F.create_map(*pairs) if pairs else F.create_map()
         return lambda salt_col: F.coalesce(
-            F.element_at(lookup, salt_col.cast("int")), F.lit(-(1 << 62))
+            F.element_at(lookup, salt_col.cast("int")), F.lit(_NO_LOW)
         )
 
     def _per_salt_bucket_filter(self, lows: dict[int, int]):
@@ -205,10 +246,13 @@ class TierPipeline:
         else:
             new_entries = salted_in
 
+        t0 = time.perf_counter()
         stats = new_entries.groupBy("p_salt").agg(
             F.count(F.lit(1)).alias("rows"),
             F.max(F.col("ts") + F.col("validity")).alias("max_until"),
+            F.sum("validity").alias("validity_ms"),
         ).collect()
+        stats_ms = (time.perf_counter() - t0) * 1000.0
         rows_in = sum(r["rows"] for r in stats)
         lineage = {
             "run_id": run_id or f"run-{len(ckpt['runs'])}",
@@ -224,31 +268,77 @@ class TierPipeline:
             return lineage
 
         new_entries = new_entries.drop("p_salt")
-        # finest tier via the full/partial split: fully-covered buckets come
-        # straight out of a Generate+Project (no hash aggregate); only the
-        # <=2 edge pieces per entry aggregate. Both branches stay
-        # key-partitioned, so the first-run in-memory chain below
-        # reaggregates each branch shuffle-free (a union would report
-        # UnknownPartitioning and force a full finest-tier exchange).
-        par = spark.sparkContext.defaultParallelism * 2
-        base = new_entries.repartition(par, *self.key_cols)
-        b_full, b_part = rollup_time_weighted_parts(
-            base, self.key_cols, self.steps[finest]
+        step = self.steps[finest]
+        # an entry splits into at most validity // step + 2 finest pieces
+        pieces_bound = (
+            sum(int(r["validity_ms"] or 0) for r in stats) // step + 2 * rows_in
         )
-        if changed_from:
+        split = pieces_bound >= SPLIT_MIN_PIECES
+        plan = "split" if split else "single"
+        _log.info(
+            "tiers.finest_plan: %s (piece bound %d, split from %d)",
+            plan,
+            pieces_bound,
+            SPLIT_MIN_PIECES,
+            extra={
+                "op": "tiers.finest_plan",
+                "decision": plan,
+                "inputs": {
+                    "pieces_bound": pieces_bound,
+                    "rows_in": int(rows_in),
+                    "split_min_pieces": SPLIT_MIN_PIECES,
+                },
+                "elapsed_ms": stats_ms,
+            },
+        )
+        keep = (
+            self._per_salt_bucket_filter(lows[finest]) if changed_from else None
+        )
+
+        def window(df: DataFrame) -> DataFrame:
             # drop partial buckets below the rewritten partitions (per salt)
-            keep = self._per_salt_bucket_filter(lows[finest])
-            b_full, b_part = b_full.filter(keep), b_part.filter(keep)
-        # persist each tier's PRE-salted frame: both its own write and the
-        # next tier's reaggregation read it, so every tier is computed once
-        # (caching the salted projection instead would not match the
-        # reaggregation's subplan and each tier would recompute the chain)
-        persisted = [b_full.persist(), b_part.persist()]
-        tier_df = b_full.unionByName(b_part)
+            return df if keep is None else df.filter(keep)
+
+        # first run: each coarser tier chains from the previous tier's
+        # in-memory frame, so that frame is persisted -- its own write and
+        # the next tier's reaggregation both read it, and every tier is
+        # computed once (caching the salted projection instead would not
+        # match the reaggregation's subplan and each tier would recompute
+        # the chain). Incremental runs read the stored finer tier back, so
+        # nothing is read twice and nothing is persisted.
+        chain = not changed_from
+        persisted: list[DataFrame] = []
+        if split:
+            # full/partial split: fully-covered buckets come straight out
+            # of a Generate+Project (no hash aggregate); only the <=2 edge
+            # pieces per entry aggregate. Both branches stay
+            # key-partitioned, so the first-run chain below reaggregates
+            # each branch shuffle-free (a union would report
+            # UnknownPartitioning and force a full finest-tier exchange).
+            par = spark.sparkContext.defaultParallelism * 2
+            base = new_entries.repartition(par, *self.key_cols)
+            b_full, b_part = (
+                window(b)
+                for b in rollup_time_weighted_parts(base, self.key_cols, step)
+            )
+            if chain:
+                persisted = [b_full.persist(), b_part.persist()]
+            tier_df = b_full.unionByName(b_part)
+        else:
+            # below the split's crossover one explode + one hash aggregate
+            # is cheaper: fewer stages, one persisted frame
+            tier_df = window(
+                rollup_time_weighted(
+                    new_entries, self.key_cols, step, disjoint=False
+                )
+            )
+            if chain:
+                tier_df = tier_df.persist()
+                persisted = [tier_df]
         try:
             for i, name in enumerate(names):
                 if i > 0:
-                    if changed_from:
+                    if not chain:
                         # a coarser tier's partitions are wider than the
                         # finer tier's increment, so read the STORED finer
                         # tier back for the full rewrite window -- coarser
@@ -262,10 +352,10 @@ class TierPipeline:
                         tier_df = reaggregate_rollup(
                             src, self.key_cols, self.steps[name]
                         )
-                    elif i == 1:
-                        # first run: chain from the persisted finest-tier
-                        # branches (each key-partitioned -> shuffle-free
-                        # partial reaggregation; only the per-branch partial
+                    elif split and i == 1:
+                        # chain from the persisted finest-tier branches
+                        # (each key-partitioned -> shuffle-free partial
+                        # reaggregation; only the per-branch partial
                         # results shuffle for the final combine)
                         h_parts = reaggregate_rollup(
                             b_full, self.key_cols, self.steps[name]
@@ -278,14 +368,16 @@ class TierPipeline:
                             h_parts, self.key_cols, self.steps[name]
                         )
                     else:
-                        # coarser first-run tiers chain from the previous
-                        # (small, persisted) tier frame
+                        # chain from the previous (persisted) tier frame
                         tier_df = reaggregate_rollup(
-                            persisted[-1], self.key_cols, self.steps[name]
+                            tier_df, self.key_cols, self.steps[name]
                         )
-                    tier_df = tier_df.persist()
-                    persisted.append(tier_df)
-                self._write_tier(name, tier_df, lineage)
+                    if chain and i < len(names) - 1:
+                        tier_df = tier_df.persist()
+                        persisted.append(tier_df)
+                self._write_tier(
+                    name, tier_df, lineage, lows[name] if changed_from else None
+                )
         finally:
             for df in persisted:
                 df.unpersist()
@@ -298,47 +390,68 @@ class TierPipeline:
         self._write_metrics(spark, lineage)
         return lineage
 
-    # rough on-disk row width for byte lineage: bucket/twmean/vmin/vmax/
-    # integral_s/support_ms/n_pieces numerics + key overhead
-    _ROW_BYTES = 64
-
-    def _write_tier(self, name: str, df: DataFrame, lineage: dict) -> None:
-        """``df`` must already be persisted by the caller (both the metrics
-        pass and the write below read it, and so does the next tier)."""
-        out = self._salted(df, self._part_step(name))
+    def _write_tier(
+        self,
+        name: str,
+        df: DataFrame,
+        lineage: dict,
+        lows: dict[int, int] | None,
+    ) -> None:
+        """Overwrite the (day, salt) partitions present in ``df``, then
+        record per-partition row/byte lineage from the committed files of
+        this run's rewrite window: every partition on a first run (``lows``
+        is None), ``p_day >= lows[p_salt]`` on an incremental one."""
+        spark = df.sparkSession
         path = self.tier_path(name)
-        # per-output-partition row/byte lineage (the north rule's
-        # "lineage + row/byte metrics emitted per partition")
-        parts = out.groupBy("p_day", "p_salt").count().collect()
-        n = sum(r["count"] for r in parts)
         # user-numbered repartition: AQE's size-based coalescing would squash
         # a small tier to ONE task, which then writes every (day, salt)
         # partition dir serially; pinning the count keeps the file fan-out
         # parallel (same trap as the Arrow kernel stages, operators/_kernel.py)
-        n_write = min(
-            max(len(parts), 1),
-            df.sparkSession.sparkContext.defaultParallelism * 2,
-        )
+        n_write = spark.sparkContext.defaultParallelism * 2
         self.backend.overwrite_partitions(
-            out.repartition(n_write, "p_day", "p_salt"),
+            self._salted(df, self._part_step(name)).repartition(
+                n_write, "p_day", "p_salt"
+            ),
             path,
             ["p_day", "p_salt"],
         )
+        parts = self.backend.partition_stats(
+            spark, path, None if lows is None else self._in_window(lows)
+        )
+        # per-output-partition row/byte lineage (the north rule's
+        # "lineage + row/byte metrics emitted per partition")
         lineage["tiers"][name] = {
-            "points": n,
+            "points": sum(p["rows"] for p in parts),
             "path": path,
             "partitions": [
                 {
-                    "p_day": int(r["p_day"]),
-                    "p_salt": int(r["p_salt"]),
-                    "rows": int(r["count"]),
-                    "bytes_approx": int(r["count"]) * self._ROW_BYTES,
+                    "p_day": p["p_day"],
+                    "p_salt": p["p_salt"],
+                    "rows": p["rows"],
+                    "bytes_approx": p["bytes"],
                 }
-                for r in sorted(parts, key=lambda r: (r["p_day"], r["p_salt"]))
+                for p in sorted(parts, key=lambda p: (p["p_day"], p["p_salt"]))
             ],
         }
 
+    def _in_window(self, lows: dict[int, int]):
+        """Partition pruning predicate for :meth:`StorageBackend.partition_stats`:
+        ``p_day >= lows[p_salt]``; before the salt is known, the smallest
+        low of any salt (a salt without a low keeps everything)."""
+        floor = min(lows.get(s, _NO_LOW) for s in range(self.n_salt))
+
+        def keep(part: dict) -> bool:
+            lo = lows.get(part["p_salt"], _NO_LOW) if "p_salt" in part else floor
+            return part.get("p_day", lo) >= lo
+
+        return keep
+
     def _write_metrics(self, spark: SparkSession, lineage: dict) -> None:
+        """Append one row per (tier, partition) to the ``_metrics`` side
+        table. The rows go through the Arrow path of ``createDataFrame``
+        (a JVM-local relation: no Python worker starts) as one file."""
+        import pandas as pd
+
         rec = [
             (
                 lineage["run_id"],
@@ -353,12 +466,9 @@ class TierPipeline:
             for name, t in lineage["tiers"].items()
             for p in t["partitions"]
         ]
+        pdf = pd.DataFrame.from_records(rec, columns=_METRICS_COLS)
         self.backend.append(
-            spark.createDataFrame(
-                rec,
-                "run_id string, tier string, p_day long, p_salt int, rows long, "
-                "bytes_approx long, rows_in long, started long",
-            ),
+            spark.createDataFrame(pdf, _METRICS_SCHEMA).coalesce(1),
             self.backend.ref(self.base_dir, "_metrics"),
         )
 
