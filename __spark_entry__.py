@@ -779,10 +779,11 @@ def _q_minhash_pairs(spark, sf_dir):
 
 def _q_dedup_clusters(spark, sf_dir):
     """Near-dup clustering: connected components over the (capped) MinHash
-    LSH candidate pairs; canonical_id = min doc_id of the component.
-    Pinned to the label-propagation TWIN (star is the engine default since
-    the round-4 shootout) so the driver keeps both algorithms green
-    against the same oracle."""
+    LSH candidate pairs; canonical_id = min doc_id of the component, via
+    the large-star/small-star contraction (Kiveris et al. SoCC 2014):
+    O(log n) rounds regardless of component diameter. Registered twice,
+    as dedup_clusters and dedup_clusters_star, with one recursive-CTE
+    oracle."""
     from scala_timeseries_lib_spark.functions.dedup import (
         minhash_lsh_pairs,
         neardup_clusters,
@@ -790,22 +791,7 @@ def _q_dedup_clusters(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     pairs = minhash_lsh_pairs(docs, max_bucket_size=MINHASH_MAX_BUCKET)
-    return neardup_clusters(docs, pairs, algorithm="label_prop")
-
-
-def _q_dedup_clusters_star(spark, sf_dir):
-    """Same components via the large-star/small-star contraction (Kiveris
-    et al. SoCC 2014): O(log n) rounds regardless of component diameter --
-    the escalation path for adversarially chainy candidate graphs. Same
-    recursive-CTE oracle as dedup_clusters (identical output)."""
-    from scala_timeseries_lib_spark.functions.dedup import (
-        minhash_lsh_pairs,
-        neardup_clusters,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, max_bucket_size=MINHASH_MAX_BUCKET)
-    return neardup_clusters(docs, pairs, algorithm="star")
+    return neardup_clusters(docs, pairs)
 
 
 def _q_simhash(spark, sf_dir):
@@ -1088,7 +1074,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_sig": _q_minhash_sig,
         "dedup_minhash_pairs": _q_minhash_pairs,
         "dedup_clusters": _q_dedup_clusters,
-        "dedup_clusters_star": _q_dedup_clusters_star,
+        "dedup_clusters_star": _q_dedup_clusters,
         "dedup_simhash": _q_simhash,
         "text_token_stats": _q_token_stats,
         "text_bpe_tokens": _q_bpe_tokens,

@@ -238,88 +238,24 @@ def neardup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs: every doc gets
     ``canonical_id`` = the minimum doc id reachable through the pair graph
     (its own id when unpaired). This is the keep-one-per-cluster step a
     dedup pipeline runs after LSH/Jaccard candidate generation.
 
-    ``algorithm="star"`` (DEFAULT since the round-4 shootout,
-    tools/cc_shootout.py + BENCH/BASELINE.md): the two-phase
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014): alternating rounds
-    rewire every node's strictly-larger (large-star) / smaller-or-equal
-    (small-star) neighbors to its neighborhood minimum, converging in
-    O(log n) rounds regardless of component DIAMETER. Measured: a
-    100k-doc chain (label-prop's worst case) converges in 39.5 s where
-    label propagation extrapolates to ~10^5 rounds / ~23 h; a 256-chain
-    runs 13x faster; on a trivial flat LSH graph it concedes ~0.5 s of
-    fixed round overhead. At web scale candidate graphs can be
-    adversarially chainy (pairwise near-dup chains from sliding shingle
-    windows), so the diameter-independent algorithm is the safe default.
-
-    ``algorithm="label_prop"`` (the twin): distributed min-label
-    propagation (Pregel-style). Each round is one equi-join of labels onto
-    edges + a min-aggregate; rounds repeat until no label changes --
-    rounds = component diameter. Fine when components are known dense and
-    flat (shared-bucket cliques); kept as the independent semantics twin
-    (identical output, pinned by test and by the shared oracle).
-    """
-    if algorithm == "star":
-        return _neardup_clusters_star(docs, pairs, id_col, max_iterations)
-    if algorithm != "label_prop":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    edges = pairs.select(
-        F.col("doc_a").alias("s"), F.col("doc_b").alias("t")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("t"))
-    )
-    # materialize the edge list ONCE: every propagation round joins against
-    # it, and without truncation each round would re-run the whole upstream
-    # candidate-generation pipeline (LSH banding etc.)
-    edges = edges.localCheckpoint(eager=True)
-    labels = docs.select(F.col(id_col).alias("s"), F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iterations):
-        prop = (
-            edges.join(
-                labels.select(F.col("s").alias("t"), F.col("label").alias("nlabel")),
-                "t",
-            )
-            .groupBy("s")
-            .agg(F.min("nlabel").alias("nmin"))
-        )
-        new_labels = labels.join(prop, "s", "left").select(
-            "s",
-            F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.select("s", F.col("label").alias("new_label"))
-            .join(labels, "s")
-            .filter(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"neardup_clusters did not converge in {max_iterations} rounds"
-        )
-    return labels.select(
-        F.col("s").alias(id_col), F.col("label").alias("canonical_id")
-    )
-
-
-def _neardup_clusters_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    max_iterations: int,
-) -> DataFrame:
-    """Large-star/small-star alternation (see neardup_clusters docstring).
+    Two-phase large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): alternating
+    rounds rewire every node's strictly-larger (large-star) /
+    smaller-or-equal (small-star) neighbors to its neighborhood minimum,
+    converging in O(log n) rounds regardless of component DIAMETER.
+    Measured against min-label propagation (BENCH/*shootout_r4.json): a
+    100k-doc chain converges in 39.5 s where label propagation
+    extrapolates to ~10^5 rounds / ~23 h; a 256-chain runs 13x faster; on
+    the flat sf0.01 LSH graph it concedes fixed round overhead (1.45 s vs
+    0.88 s). At web scale candidate graphs can be adversarially chainy
+    (pairwise near-dup chains from sliding shingle windows), so the
+    diameter-independent algorithm is the only one kept.
 
     Invariant per round: the edge set stays within one connected component
     and always contains, for every non-minimal node, a path to its
@@ -389,7 +325,7 @@ def _neardup_clusters_star(
         fp = nfp
     else:
         raise RuntimeError(
-            f"neardup_clusters(star) did not converge in {max_iterations} rounds"
+            f"neardup_clusters did not converge in {max_iterations} rounds"
         )
     # fixed point: star edges (node -> component minimum)
     stars = _sym(edges).groupBy("u").agg(F.min("v").alias("m")).filter(

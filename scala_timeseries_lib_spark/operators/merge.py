@@ -610,21 +610,40 @@ _GUARD_SAMPLE_MIN_ROWS = 50
 _GUARD_BOUND_MAX_FILES = 256
 
 
+# analyzed-plan node classes that never emit more rows than their children
+# together, so a leaf row total bounds any tree built from them alone.
+# Everything else -- joins, generate/explode, expand, pandas/Arrow map
+# nodes, sampling (with replacement it can repeat rows), and classes this
+# list has not met -- voids the bound.
+_NON_EXPANDING_NODES = frozenset({
+    "Deduplicate", "Distinct", "Filter", "GlobalLimit", "LocalLimit",
+    "LocalRelation", "LogicalRelation", "Project", "Repartition",
+    "RepartitionByExpression", "ResolvedHint", "Sort", "SubqueryAlias",
+    "Union", "View", "Window",
+})
+
+
 def _plan_leaves(df: DataFrame):
-    """Leaves of the analyzed plan, or None when the plan contains a
-    row-expanding operator (join, generate/explode, expand) -- leaf-based
-    row bounds are then unsound. The ANALYZED plan is already computed
-    eagerly at DataFrame construction, so reading it costs no new Catalyst
-    pass (the optimizer only ever removes/fuses operators, never adds
-    row-expanding ones, so the expansion check is equivalent). A column
-    NAME containing a marker word only makes the check conservative."""
+    """Leaves of the analyzed plan, or None unless every node's class is in
+    ``_NON_EXPANDING_NODES`` -- leaf-based row bounds are then unsound.
+    The ANALYZED plan is already computed eagerly at DataFrame
+    construction, so walking it costs no new Catalyst pass (the optimizer
+    only ever removes/fuses operators, never adds row-expanding ones, so
+    the check carries over to the executed plan). Classes are read from
+    the JVM nodes, so column names cannot sway the check."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        tree = plan.toString()
-        if any(m in tree for m in ("Join", "Generate", "Expand", "Repeat")):
-            return None
-        leaves = plan.collectLeaves()
-        return [leaves.apply(i) for i in range(leaves.size())]
+        stack = [df._jdf.queryExecution().analyzed()]
+        leaves = []
+        while stack:
+            node = stack.pop()
+            if node.getClass().getSimpleName() not in _NON_EXPANDING_NODES:
+                return None
+            kids = node.children()
+            n = kids.size()
+            if n == 0:
+                leaves.append(node)
+            stack.extend(kids.apply(i) for i in reversed(range(n)))
+        return leaves
     except Exception:
         return None
 
@@ -633,11 +652,10 @@ def _leaf_row_bound(df: DataFrame) -> int | None:
     """Upper bound on ``df``'s row count with NO Spark job: the sum of leaf
     row counts (parquet footer metadata / local-relation sizes), valid only
     when the plan contains no row-expanding operator (see
-    :func:`_plan_leaves`). Filters, projections, windows, aggregations,
-    repartitions and unions never emit more rows than their children, so
-    the leaf total bounds every such plan. Returns None when the bound is
-    unavailable or would be unsound -- callers must then detect the hard
-    way. Cost: one footer read per leaf file, capped at
+    :func:`_plan_leaves`). Those node classes never emit more rows than
+    their children, so the leaf total bounds every such plan. Returns None
+    when the bound is unavailable or would be unsound -- callers must then
+    detect the hard way. Cost: one footer read per leaf file, capped at
     ``_GUARD_BOUND_MAX_FILES``."""
     leaves = _plan_leaves(df)
     if leaves is None:

@@ -10,7 +10,12 @@ Two execution strategies, chosen by semantics (SURVEY.md 2.9 / 3.3):
 
 - ``sliding_window_exact``: the reference-exact sweep (arbitrary emission
   boundaries, holes, time-unaware aggregators) via the numpy kernel per
-  series group.
+  series group; the un-resampled ``sum`` sweep runs as a pure-Catalyst
+  boundary union (``sliding_window_exact_relational``).
+
+One engine per shape: ``sample_closest`` is kernel-only; each relational
+engine here (rolling sum/mean, dynamic window over column predicates, the
+exact ``sum`` sweep) is the one ``engine="auto"`` picks for its shape.
 """
 
 from __future__ import annotations
@@ -28,7 +33,6 @@ __all__ = [
     "dynamic_window_exact",
     "dynamic_window_relational",
     "sample_closest",
-    "sample_closest_relational",
 ]
 
 
@@ -134,34 +138,28 @@ def sliding_window_exact(
     (prefix-difference vs add/drop rounding), and std inflates true-zero
     variances to ~1e-7 -- round before comparing across paths/engines.
 
-    ``engine="relational"`` opts sum/mean into the zero-Python twin
-    (:func:`sliding_window_exact_relational`, boundary-union + running
-    carries — bit-identical to the SEQUENTIAL sweep's accumulation order).
     ``"auto"`` routes by MEASUREMENT (BENCH/BASELINE.md exact-sweep
-    crossover row): the un-resampled ``sum`` sweep goes relational (2.5×
-    the kernel at sf0.1 — the sweep is pure boundary algebra, Catalyst's
-    home turf); resampled aggs stay on the kernel (the dense resample grid
-    is numpy's home turf, same verdict as sample_closest).
+    crossover row): the un-resampled ``sum`` sweep goes to the zero-Python
+    :func:`sliding_window_exact_relational` (2.5x the kernel at sf0.1 --
+    the sweep is pure boundary algebra, Catalyst's home turf); every other
+    shape stays on the kernel (the dense resample grid is numpy's home
+    turf, same verdict as sample_closest). ``engine="relational"`` forces
+    that same shape onto the relational sweep and rejects any other;
+    ``engine="kernel"`` forces the kernel.
     """
     import numpy as np
     import pandas as pd
 
     if engine not in ("auto", "kernel", "relational"):
         raise ValueError(f"unknown engine {engine!r}")
-    relational_ok = agg in ("sum", "mean") and (
-        sample_rate is None or use_closest
-    ) and not (agg == "mean" and sample_rate is None)
-    if engine == "relational" and not relational_ok:
+    relational = agg == "sum" and sample_rate is None
+    if engine == "relational" and not relational:
         raise ValueError(
-            "engine='relational' supports agg in (sum, mean) with "
-            "closest-in-window resampling only (mean needs a sample_rate)"
+            "engine='relational' supports only the un-resampled sum sweep"
         )
-    if engine == "relational" or (
-        engine == "auto" and agg == "sum" and sample_rate is None
-    ):
+    if relational and engine != "kernel":
         return sliding_window_exact_relational(
-            df, key_cols, window_width, agg,
-            sample_rate=sample_rate, compress=compress,
+            df, key_cols, window_width, compress=compress
         )
 
     from ..kernel import window as kwin
@@ -274,12 +272,10 @@ def sliding_window_exact_relational(
     df: DataFrame,
     key_cols: list[str],
     window_width: int,
-    agg: str,
-    sample_rate: int | None = None,
     compress: bool = True,
 ) -> DataFrame:
-    """Pure-Catalyst exact sliding sweep (WindowSlider.scala:114-269) for
-    the decomposable aggregators ``sum`` and ``mean`` — zero Python stages.
+    """Pure-Catalyst exact sliding ``sum`` sweep over un-resampled entries
+    (WindowSlider.scala:114-269) -- zero Python stages.
 
     The sweep's emission boundaries are exactly the union of ADD events
     (every entry ``ts``) and DROP events (every ``ts + validity + width``,
@@ -291,56 +287,39 @@ def sliding_window_exact_relational(
     retracts before adding — same float accumulation order, bit-identical
     sums), running-sum the signed contributions, keep the last row of each
     tie group via the ``lead(p) > p`` filter, and clip segments to the
-    sweep domain ``[min ts, max until)``. For ``sum`` an empty window
-    correctly emits 0.0 (the running sum of a fully retracted prefix); for
-    ``mean`` (time-aware: requires ``sample_rate``, closest-in-window
-    resample via :func:`sample_closest_relational`) an empty window is a
-    hole (``sum(validity) = 0``). NaN values surface as null, matching the
-    kernel twin's NaN across the Arrow boundary.
+    sweep domain ``[min ts, max until)``. An empty window correctly emits
+    0.0 (the running sum of a fully retracted prefix). NaN values surface
+    as null, matching the kernel twin's NaN across the Arrow boundary.
 
-    Matches ``sliding_window_exact(engine="kernel")`` exactly (twin-tested,
-    tests/test_relational_merge.py); crossover vs the vectorized kernel is
-    measured in BENCH/BASELINE.md and sets the ``auto`` default."""
+    Matches the sequential sweep bit-for-bit and
+    ``sliding_window_exact(engine="kernel")`` up to its ~1e-13 rounding
+    (twin-tested, tests/test_relational_merge.py); crossover vs the
+    vectorized kernel is measured in BENCH/BASELINE.md and sets the
+    ``auto`` default."""
     from .merge import _rle_repair
 
     if window_width <= 0:
         raise ValueError("Needs a strictly positive window size")
-    if agg not in ("sum", "mean"):
-        raise ValueError(
-            f"relational exact sweep supports sum|mean, got {agg!r}"
-        )
-    if agg == "mean" and sample_rate is None:
-        raise ValueError("time-aware aggregators require a sample_rate")
-    if sample_rate is not None:
-        df = sample_closest_relational(
-            df, key_cols, sample_rate, compress=False
-        )
 
     w_key = Window.partitionBy(*key_cols)
     ent = df.select(*key_cols, "ts", "value", "validity").withColumn(
         "_maxu", F.max(F.col("ts") + F.col("validity")).over(w_key)
     )
-    if agg == "sum":
-        x = F.col("value")
-        d = F.lit(0).cast("long")
-    else:
-        x = F.col("value") * F.col("validity")
-        d = F.col("validity")
     add = F.struct(
         F.col("ts").alias("p"), F.lit(1).alias("ord"),
-        x.alias("x"), d.alias("d"),
+        F.col("value").alias("x"),
     )
     drop = F.struct(
         (F.col("ts") + F.col("validity") + F.lit(window_width)).alias("p"),
         F.lit(0).alias("ord"),
-        (-x).alias("x"), (-d).alias("d"),
+        (-F.col("value")).alias("x"),
     )
     ev = ent.select(
         *key_cols, "_maxu", F.explode(F.array(add, drop)).alias("e")
     ).select(
         *key_cols, "_maxu",
         F.col("e.p").alias("p"), F.col("e.ord").alias("ord"),
-        F.col("e.x").alias("x"), F.col("e.d").alias("d"),
+        F.col("e.x").alias("x"),
     )
     w_sort = Window.partitionBy(*key_cols).orderBy("p", "ord")
     w_run = w_sort.rowsBetween(Window.unboundedPreceding, 0)
@@ -348,25 +327,18 @@ def sliding_window_exact_relational(
         ev.select(
             *key_cols, "_maxu", "p",
             F.sum("x").over(w_run).alias("sx"),
-            F.sum("d").over(w_run).alias("sd"),
             F.lead("p").over(w_sort).alias("np"),
         )
         .where(F.col("np").isNull() | (F.col("np") > F.col("p")))
         .where(F.col("p") < F.col("_maxu"))
     )
-    value = (
-        F.col("sx") if agg == "sum"
-        else F.when(F.col("sd") > 0, F.col("sx") / F.col("sd"))
-    )
     out = segs.select(
         *key_cols,
         F.col("p").alias("ts"),
-        value.alias("value"),
+        F.col("sx").alias("value"),
         (F.least(F.coalesce(F.col("np"), F.col("_maxu")), F.col("_maxu"))
          - F.col("p")).alias("validity"),
     ).where(F.col("validity") > 0)
-    if agg == "mean":
-        out = out.where(F.col("value").isNotNull())
     if compress:
         out = _rle_repair(out, key_cols)
     # NaN sums surface as null, like the kernel's NaN across Arrow
@@ -673,151 +645,11 @@ def dynamic_window_relational(
     )
 
 
-def sample_closest_relational(
-    df: DataFrame,
-    key_cols: list[str],
-    rate: int,
-    compress: bool = False,
-) -> DataFrame:
-    """Pure-Catalyst closest-in-window sampling, zero Python stages.
-
-    Declarative restatement of the vectorized kernel
-    (kernel/sample.py:sample_arrays_closest — itself pinned against the
-    reference's sequential cursor): at grid point p the candidates are
-    ``lo`` (last entry with ts <= p) and ``cand_after`` (first entry with
-    ts >= p, index-clipped to R = last entry with ts <= p + rate/2); the
-    chosen entry is the closer start (ties to the later), accepted iff its
-    take rule holds.
-
-    Physical shape: entries get (index j, nxt, until, n) from one per-key
-    window; each grid point emits TWO probe rows (at p and at p + rate/2);
-    ONE ascending (point, kind) sort carries the last entry with ts <=
-    point (entries sort before probes at ties — `<=` semantics) and the
-    SAME partition re-sorted descending carries the first entry with ts >=
-    point; the two probe rows of each p merge back with a shuffle-free
-    groupBy (hash-partitioning on key satisfies (key, p) clustering) and
-    the choose/take rule is a CASE expression. Two shuffles total, matches
-    ``sample_closest(engine="kernel")`` exactly (twin-tested)."""
-    from .merge import _rle_repair
-
-    half = rate // 2
-    w_ent = Window.partitionBy(*key_cols).orderBy("ts")
-    w_key = Window.partitionBy(*key_cols)
-    ent = df.select(
-        *key_cols, "ts", "value", "validity",
-        F.row_number().over(w_ent).alias("j"),
-        F.lead("ts").over(w_ent).alias("nxt"),
-        (F.col("ts") + F.col("validity")).alias("until"),
-        F.count(F.lit(1)).over(w_key).alias("n"),
-        F.min("ts").over(w_key).alias("gstart"),
-        F.max(F.col("ts") + F.col("validity")).over(w_key).alias("gend"),
-    )
-    # grid: start + k*rate for p < gend (kernel: k = (end-1-start)//rate)
-    heads = ent.where(F.col("j") == 1).select(
-        *key_cols,
-        F.explode(
-            F.sequence(
-                F.col("gstart"),
-                F.col("gstart")
-                + ((F.col("gend") - 1 - F.col("gstart")) / rate).cast("long")
-                * rate,
-                F.lit(rate),
-            )
-        ).alias("p"),
-    )
-    estruct = F.struct("j", "ts", "value", "until", "nxt", "n")
-    e_rows = ent.select(
-        *key_cols,
-        F.col("ts").alias("pt"),
-        F.lit(0).alias("kind"),
-        estruct.alias("e"),
-        F.lit(None).cast("bigint").alias("p"),
-        F.lit(None).cast("int").alias("probe"),
-    )
-    p_rows = heads.select(
-        *key_cols,
-        F.col("p").alias("pt"),
-        F.lit(1).alias("kind"),
-        F.lit(None).cast(e_rows.schema["e"].dataType.simpleString()).alias("e"),
-        F.col("p"),
-        F.lit(0).alias("probe"),  # probe at p itself
-    ).unionByName(
-        heads.select(
-            *key_cols,
-            (F.col("p") + half).alias("pt"),
-            F.lit(1).alias("kind"),
-            F.lit(None).cast(
-                e_rows.schema["e"].dataType.simpleString()
-            ).alias("e"),
-            F.col("p"),
-            F.lit(1).alias("probe"),  # probe at p + half
-        )
-    )
-    # user-numbered repartition: AQE would coalesce this small exchange to
-    # a handful of partitions and serialize the two window sorts (the
-    # round-2 coalescing trap); pinning the count keeps them parallel
-    par = df.sparkSession.sparkContext.defaultParallelism * 2
-    rows = e_rows.unionByName(p_rows).repartition(par, *key_cols)
-    w_asc = (
-        Window.partitionBy(*key_cols)
-        .orderBy("pt", "kind")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # descending pass: entries must precede probes at equal pt here too so
-    # the probe's running frame includes a ts == pt entry ('>=')
-    w_desc = (
-        Window.partitionBy(*key_cols)
-        .orderBy(F.col("pt").desc(), F.col("kind").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = (
-        rows.withColumn("le", F.last("e", ignorenulls=True).over(w_asc))
-        .withColumn("ge", F.last("e", ignorenulls=True).over(w_desc))
-        .where(F.col("kind") == 1)
-    )
-    # merge the two probe rows of each grid point (no shuffle: key hash
-    # partitioning satisfies the (key, p) clustering)
-    per_p = carried.groupBy(*key_cols, "p").agg(
-        F.max(F.when(F.col("probe") == 0, F.col("le"))).alias("lo"),
-        F.max(F.when(F.col("probe") == 0, F.col("ge"))).alias("after"),
-        F.max(F.when(F.col("probe") == 1, F.col("le"))).alias("r"),
-    )
-    # kernel index arithmetic: lo=clip(L,0); cand_after=min(after, clip(R,0))
-    lo = F.coalesce(F.col("lo"), F.col("after"))  # L=-1 -> first entry
-    r_clip = F.coalesce(F.col("r"), F.col("after"))  # R=-1 handled by `has`
-    cand = F.when(
-        F.col("after").isNull() | (F.col("after.j") > r_clip["j"]), r_clip
-    ).otherwise(F.col("after"))
-    d_lo = F.abs(lo["ts"] - F.col("p"))
-    d_cand = F.abs(cand["ts"] - F.col("p"))
-    chosen = F.when(d_lo < d_cand, lo).otherwise(cand)
-    has = F.col("r").isNotNull()  # R >= 0
-    is_last = chosen["j"] == chosen["n"]
-    take_last = F.col("p") < chosen["until"]
-    take_mid = (
-        (F.col("p") < chosen["until"])
-        & (chosen["nxt"] > F.col("p") + half)
-    ) | (F.abs(chosen["ts"] - F.col("p")) < F.abs(chosen["nxt"] - F.col("p")))
-    ok = has & F.when(is_last, take_last).otherwise(take_mid)
-    out = per_p.where(ok).select(
-        *key_cols,
-        F.col("p").alias("ts"),
-        chosen["value"].alias("value"),
-        F.lit(rate).cast("long").alias("validity"),
-    )
-    if not compress:
-        return out
-    return _rle_repair(out, key_cols).select(
-        *key_cols, "ts", "value", "validity"
-    )
-
-
 def sample_closest(
     df: DataFrame,
     key_cols: list[str],
     rate: int,
     compress: bool = False,
-    engine: str = "auto",
 ) -> DataFrame:
     """Closest-in-window sampling (TimeSeries.scala:598-646,
     useClosestInWindow=true): at each grid point ``first_ts + k*rate`` take
@@ -825,24 +657,13 @@ def sample_closest(
     ``[p - rate/2, p + rate/2)``, falling back to the entry defined at the
     point.
 
-    ``engine="auto"`` keeps the KERNEL: measured (sf0.01/sf0.1, 32 cores,
-    best-of-3) the vectorized kernel wins ~1.2x on the realistic sliced
-    query shape and 19x on dense grids (27.6M grid points: numpy arange +
-    searchsorted vs 55M rows through two window sorts) — dense-grid
-    generation is the kernel's home turf, unlike the merge family where
-    the relational engine won and became the default.
-    ``engine="relational"`` opts into the pure-Catalyst
-    :func:`sample_closest_relational` (zero Python stages, twin-tested
-    equal) for deployments that must avoid Python workers entirely.
-    The kernel is the vectorized restatement of the sequential cursor
-    (kernel.sample.sample_arrays_closest, pinned against the sequential
-    sampler by fuzz and against DuckDB by the ts_sample_closest oracle)."""
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational":
-        return sample_closest_relational(
-            df, key_cols, rate, compress=compress
-        )
+    Runs the vectorized kernel (kernel.sample.sample_arrays_closest, pinned
+    against the sequential sampler by fuzz and against DuckDB by the
+    ts_sample_closest oracle). A pure-Catalyst twin (two as-of carries over
+    one per-key sort) was measured slower on every shape (sf0.01/sf0.1, 32
+    cores, best-of-3): ~1.2x on the sliced query shape and 19x on dense
+    grids (27.6M grid points: numpy arange + searchsorted vs 55M rows
+    through two window sorts), so dense-grid generation stays in numpy."""
     import numpy as np
     import pandas as pd
 

@@ -1,14 +1,13 @@
-"""Small-state (JSON checkpoint / pointer) IO for any Hadoop-visible filesystem.
+"""Small-state (JSON checkpoint) IO for any Hadoop-visible filesystem.
 
-TierPipeline and AppendStream keep tiny driver-side control state (a
-checkpoint JSON, an epoch pointer) next to their parquet data. On a real
-cluster the pipeline base dir is a DFS path (``hdfs://``, ``s3a://``, shared
-``file://``); plain ``open``/``os.replace`` would silently write to the
-driver's LOCAL disk and a restarted driver on another node would never see
-the state. This router dispatches through Spark's JVM Hadoop FileSystem
-whenever the path carries a scheme (or a session is supplied), and keeps a
-python-only fallback for scheme-less paths so the classes stay usable
-without a session.
+TierPipeline keeps tiny driver-side control state (a checkpoint JSON) next
+to its parquet data. On a real cluster the pipeline base dir is a DFS path
+(``hdfs://``, ``s3a://``, shared ``file://``); plain ``open``/``os.replace``
+would silently write to the driver's LOCAL disk and a restarted driver on
+another node would never see the state. This router dispatches through
+Spark's JVM Hadoop FileSystem whenever the path carries a scheme (or a
+session is supplied), and keeps a python-only fallback for scheme-less
+paths so the classes stay usable without a session.
 
 Commit protocol: write ``<path>.tmp``, delete the target, rename the tmp
 over it. The local branch (``os.replace``) is atomic. The Hadoop branch is
@@ -16,9 +15,9 @@ NOT fully atomic: a driver crash between the delete and the rename leaves
 only ``<path>.tmp`` behind. ``read_json_state`` closes that window on the
 read side -- if the target is missing but a COMPLETE (JSON-parseable) tmp
 survives, it is returned as the state (read-only: the next commit rewrites
-both files); a torn/partial tmp is ignored. State readers (TierPipeline
-checkpoint, AppendStream pointer) go through ``read_json_state``, so a
-crashed commit recovers instead of silently restarting from empty state.
+both files); a torn/partial tmp is ignored. State readers (the TierPipeline
+checkpoint) go through ``read_json_state``, so a crashed commit recovers
+instead of silently restarting from empty state.
 Intentional resets go through ``delete_state`` (target + tmp) so a stale
 tmp cannot resurrect deliberately-deleted state.
 """
@@ -72,13 +71,6 @@ class StateIO:
             _jvm, fs, p = self._hadoop(path)
             return bool(fs.exists(p))
         return os.path.exists(path)
-
-    def makedirs(self, path: str) -> None:
-        if self._use_hadoop(path):
-            _jvm, fs, p = self._hadoop(path)
-            fs.mkdirs(p)
-        else:
-            os.makedirs(path, exist_ok=True)
 
     def read_text(self, path: str) -> str:
         if self._use_hadoop(path):

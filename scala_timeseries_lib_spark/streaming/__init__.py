@@ -1,2 +1,4 @@
 """Incremental ingestion: the reference's AppendableEntryStream as
-checkpointed micro-batches."""
+Structured Streaming operators (``structured.stream_fit_entries`` and its
+rollup, dedup and merge siblings), restartable from the streaming
+checkpoint."""

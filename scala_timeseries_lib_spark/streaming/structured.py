@@ -13,9 +13,7 @@ counts-and-drops).
 Scale notes: state is one tiny fixed-width row per series key, managed by
 Spark's state store (RocksDB-backed on a real cluster), so hundreds of
 millions of series are fine; the shuffle is the usual hash on the key.
-Restart/exactly-once comes from the streaming checkpoint -- the batch-side
-twin of this file (append.py) implements the same semantics for
-non-streaming callers with an explicit state table.
+Restart/exactly-once comes from the streaming checkpoint.
 """
 
 from __future__ import annotations

@@ -4,11 +4,9 @@
   (BASELINE.json per-row invariant);
 - tier pipeline: incremental updates converge to the same tables as a
   single full build; checkpoint + lineage recorded; rerun idempotent;
-- streaming append: multi-batch ingestion == one-shot fitting; late data
-  dropped; crashed-epoch rerun idempotent.
+- control state (StateIO) on scheme'd paths and across crashed commits.
 """
 
-import glob
 import os
 
 import pytest
@@ -18,7 +16,6 @@ from scala_timeseries_lib_spark.operators.entries import derive_entries
 from scala_timeseries_lib_spark.plans.tiers import TierPipeline
 from scala_timeseries_lib_spark.sources.extract import extract_text_py
 from scala_timeseries_lib_spark.sources.pages import pages_table
-from scala_timeseries_lib_spark.streaming.append import AppendStream
 
 pytestmark = pytest.mark.spark
 
@@ -118,85 +115,10 @@ class TestTiers:
         assert before == after
 
 
-class TestStreamingAppend:
-    def _batches(self, spark):
-        rows = [
-            ("k1", 1000, 1.0, 500),
-            ("k1", 2000, 1.0, 1000),   # contiguous equal -> compresses
-            ("k1", 3000, 2.0, 10_000),  # overlaps next batch's first -> trim
-            ("k2", 1000, 5.0, 2000),
-        ]
-        rows2 = [
-            ("k1", 5000, 3.0, 1000),
-            ("k1", 4000, 9.9, 1000),   # LATE (<= pending ts 3000? no, < 5000) kept
-            ("k2", 500, 7.0, 100),     # late vs pending ts 1000 -> dropped
-            ("k2", 4000, 6.0, 1000),
-        ]
-        schema = "key string, ts long, value double, validity long"
-        return (
-            spark.createDataFrame(rows, schema),
-            spark.createDataFrame(rows2, schema),
-        )
-
-    def test_multibatch_equals_oneshot(self, spark, tmp_path):
-        from scala_timeseries_lib_spark.kernel.fitter import fit
-
-        b1, b2 = self._batches(spark)
-        stream = AppendStream(str(tmp_path / "s"), ["key"])
-        m1 = stream.append(b1)
-        m2 = stream.append(b2)
-        assert m2["rows_late_dropped"] == 1
-
-        got = {
-            k: [
-                (r["ts"], r["value"], r["validity"])
-                for r in stream.entries(spark).filter(F.col("key") == k)
-                .orderBy("ts").collect()
-            ]
-            for k in ("k1", "k2")
-        }
-        # oracle: kernel fit over the union (minus the late row)
-        expected_k1 = fit(
-            [(1000, 1.0, 500), (2000, 1.0, 1000), (3000, 2.0, 10_000),
-             (4000, 9.9, 1000), (5000, 3.0, 1000)]
-        )
-        expected_k2 = fit([(1000, 5.0, 2000), (4000, 6.0, 1000)])
-        assert got["k1"] == expected_k1
-        assert got["k2"] == expected_k2
-
-    def test_crash_rerun_idempotent(self, spark, tmp_path):
-        b1, b2 = self._batches(spark)
-        stream = AppendStream(str(tmp_path / "s2"), ["key"])
-        stream.append(b1)
-        stream.append(b2)
-        snapshot = sorted(map(tuple, stream.entries(spark).collect()))
-        # crash after writes but before pointer commit: epoch 1 replays
-        stream._commit_pointer(0)
-        stream.append(b2)
-        assert sorted(map(tuple, stream.entries(spark).collect())) == snapshot
-
-
 class TestDfsSchemePaths:
-    """Checkpoint/pointer state must survive on a scheme'd (DFS-style) base
+    """Checkpoint state must survive on a scheme'd (DFS-style) base
     dir: a ``file://`` URI routes through the Hadoop FileSystem API, the
     same code path hdfs:// / s3a:// would take on a cluster."""
-
-    def test_append_stream_resume_on_scheme_path(self, spark, tmp_path):
-        base = "file://" + str(tmp_path / "dfs_stream")
-        b1, b2 = TestStreamingAppend()._batches(spark)
-        stream = AppendStream(base, ["key"])
-        stream.append(b1)
-        # a NEW driver-side object (fresh pointer read) resumes the state
-        resumed = AppendStream(base, ["key"])
-        assert resumed._read_pointer() == 0
-        m2 = resumed.append(b2)
-        assert m2["epoch"] == 1
-        assert m2["rows_late_dropped"] == 1
-        # crash-rerun idempotence through the Hadoop FS pointer too
-        snapshot = sorted(map(tuple, resumed.entries(spark).collect()))
-        resumed._commit_pointer(0)
-        resumed.append(b2)
-        assert sorted(map(tuple, resumed.entries(spark).collect())) == snapshot
 
     def test_tier_pipeline_checkpoint_on_scheme_path(self, spark, tmp_path):
         base = "file://" + str(tmp_path / "dfs_tiers")

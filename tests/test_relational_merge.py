@@ -374,43 +374,73 @@ def test_rolling_relational_matches_kernel(spark):
         rolling_values(df, ["user_id"], 60, agg="min", engine="relational")
 
 
-def test_sample_closest_relational_matches_kernel(spark):
-    """Closest-in-window sampling via two as-of carries over one per-key
-    sort (operators/window.py sample_closest_relational) must match the
-    vectorized kernel across rates, raw and compressed."""
+def _per_key(df):
+    per_key = {}
+    for r in df.collect():
+        per_key.setdefault(r["user_id"], []).append(
+            (r["ts"], r["value"], r["validity"])
+        )
+    for entries in per_key.values():
+        entries.sort()
+    return per_key
+
+
+def _seq_sweep(df, width, agg_factory, sample_rate=None, compress=True):
+    """The sequential per-series exact sweep (kernel.window.window_sweep),
+    closest-in-window resampled when ``sample_rate`` is set."""
+    from scala_timeseries_lib_spark.kernel import window as kwin
+    from scala_timeseries_lib_spark.kernel.fitter import fit
+
+    out = []
+    for key, entries in _per_key(df).items():
+        emitted = [
+            (ts, float(a), validity)
+            for (ts, _c, validity), a in kwin.window_sweep(
+                entries, width, agg_factory(), sample_rate, True
+            )
+            if a is not None
+        ]
+        if compress:
+            emitted = fit(emitted, compress=True)
+        out += [(key, ts, v, d) for ts, v, d in emitted]
+    return sorted(out)
+
+
+def _rounded(rows):
+    return sorted((k, t, round(v, 9), d) for k, t, v, d in rows)
+
+
+def test_sample_closest_matches_sequential(spark):
+    """The Spark closest-in-window sampler (vectorized kernel per salt
+    bucket) must match the sequential reference sampler per series
+    across rates, raw and compressed."""
+    from scala_timeseries_lib_spark.kernel.sample import sample
     from scala_timeseries_lib_spark.operators.window import sample_closest
 
     df = _mk(spark, 111, max_entries=60)
+    per_key = _per_key(df)
     for rate in (7, 20, 121):
         for compress in (False, True):
-            kernel = _canon(sample_closest(
-                df, ["user_id"], rate, compress=compress, engine="kernel"
+            want = sorted(
+                (key, *e)
+                for key, entries in per_key.items()
+                for e in sample(entries, entries[0][0], rate,
+                                use_closest=True, compress=compress)
+            )
+            got = _canon(sample_closest(
+                df, ["user_id"], rate, compress=compress
             ))
-            rel = _canon(sample_closest(
-                df, ["user_id"], rate, compress=compress,
-                engine="relational",
-            ))
-            assert kernel == rel, (rate, compress)
-            assert len(kernel) > 0
-    # the relational path is zero-Python; the AUTO default stays on the
-    # kernel (measured faster on every realistic shape -- see docstring)
-    rel_plan = sample_closest(
-        df, ["user_id"], 20, engine="relational"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in rel_plan
-    auto_plan = sample_closest(
-        df, ["user_id"], 20
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in auto_plan
+            assert got == want, (rate, compress)
+            assert len(got) > 0
 
 
 def test_sliding_exact_relational_matches_sequential(spark):
     """The zero-Python exact-sweep twin must reproduce the SEQUENTIAL
     sweep's accumulation bit-for-bit (drops retract before adds at each
-    cursor, same float order), for sum over raw holey entries and mean
-    over the closest-in-window resampled grid."""
+    cursor, same float order) for sum over raw holey entries; mean over
+    the closest-in-window resampled grid runs on the kernel and matches
+    it to 9 decimals."""
     from scala_timeseries_lib_spark.kernel import window as kwin
-    from scala_timeseries_lib_spark.kernel.fitter import fit
     from scala_timeseries_lib_spark.operators.window import (
         sliding_window_exact,
     )
@@ -418,79 +448,65 @@ def test_sliding_exact_relational_matches_sequential(spark):
     df = _mk(spark, 301, n_keys=8, max_entries=50)
     width = 60
 
-    def seq_ref(agg_factory, sample_rate=None):
-        per_key = {}
-        for r in df.collect():
-            per_key.setdefault(r["user_id"], []).append(
-                (r["ts"], r["value"], r["validity"])
-            )
-        out = []
-        for key, entries in per_key.items():
-            entries.sort()
-            emitted = []
-            for (ts, _c, validity), a in kwin.window_sweep(
-                entries, width, agg_factory(), sample_rate, True
-            ):
-                if a is not None:
-                    emitted.append((ts, float(a), validity))
-            for ts, v, d in fit(emitted, compress=True):
-                out.append((key, ts, v, d))
-        return sorted(out)
-
-    for agg, factory, rate in (
-        ("sum", kwin.SumAggregator, None),
-        ("mean", kwin.MeanAggregator, 20),
-    ):
-        rel = _canon(sliding_window_exact(
-            df, ["user_id"], width, agg,
-            sample_rate=rate, engine="relational", compress=True,
-        ))
-        assert rel == seq_ref(factory, rate), agg
-        assert len(rel) > 50
-        # compress=False twin too (every emission, no RLE)
-        rel_raw = _canon(sliding_window_exact(
-            df, ["user_id"], width, agg,
-            sample_rate=rate, engine="relational", compress=False,
-        ))
-        assert len(rel_raw) >= len(rel)
-    # the relational plan is zero-Python; auto stays on the kernel
+    rel = _canon(sliding_window_exact(
+        df, ["user_id"], width, "sum", engine="relational", compress=True,
+    ))
+    assert rel == _seq_sweep(df, width, kwin.SumAggregator)
+    assert len(rel) > 50
+    # compress=False twin too (every emission, no RLE)
+    rel_raw = _canon(sliding_window_exact(
+        df, ["user_id"], width, "sum", engine="relational", compress=False,
+    ))
+    assert len(rel_raw) >= len(rel)
+    mean = _canon(sliding_window_exact(
+        df, ["user_id"], width, "mean", sample_rate=20, engine="kernel",
+        compress=True,
+    ))
+    assert _rounded(mean) == _rounded(
+        _seq_sweep(df, width, kwin.MeanAggregator, 20)
+    )
+    assert len(mean) > 50
+    # the relational plan is zero-Python
     plan = sliding_window_exact(
         df, ["user_id"], width, "sum", engine="relational"
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
-    with pytest.raises(ValueError):
-        sliding_window_exact(
-            df, ["user_id"], width, "median", engine="relational"
-        )
+    # the relational sweep takes only the un-resampled sum
+    for agg, rate in (("median", None), ("sum", 20), ("mean", 20)):
+        with pytest.raises(ValueError):
+            sliding_window_exact(
+                df, ["user_id"], width, agg, sample_rate=rate,
+                engine="relational",
+            )
 
 
 def test_sliding_exact_relational_matches_kernel_rounded(spark):
     """Vs the VECTORIZED kernel engine: identical up to the documented
     ~1e-13 prefix-difference float divergence (compare at 9 decimals,
-    same rounding the oracle queries apply)."""
+    same rounding the oracle queries apply); the resampled mean runs on
+    the kernel only and is held to the sequential sweep the same way."""
+    from scala_timeseries_lib_spark.kernel import window as kwin
     from scala_timeseries_lib_spark.operators.window import (
         sliding_window_exact,
     )
 
     df = _mk(spark, 311, n_keys=6, max_entries=40)
 
-    def rounded(rows):
-        return sorted(
-            (r[0], r[1], round(r[2], 9), r[3]) for r in rows
-        )
-
-    for agg, rate in (("sum", None), ("mean", 25)):
-        kernel = rounded(_canon(sliding_window_exact(
-            df, ["user_id"], 80, agg, sample_rate=rate, engine="kernel",
+    def run(agg, engine, rate=None):
+        return _rounded(_canon(sliding_window_exact(
+            df, ["user_id"], 80, agg, sample_rate=rate, engine=engine,
             compress=False,
         )))
-        rel = rounded(_canon(sliding_window_exact(
-            df, ["user_id"], 80, agg, sample_rate=rate,
-            engine="relational", compress=False,
-        )))
-        assert kernel == rel, agg
-        assert len(kernel) > 50
+
+    kernel = run("sum", "kernel")
+    assert kernel == run("sum", "relational")
+    assert len(kernel) > 50
+    mean = run("mean", "kernel", 25)
+    assert mean == _rounded(
+        _seq_sweep(df, 80, kwin.MeanAggregator, 25, compress=False)
+    )
+    assert len(mean) > 50
 
 
 def test_relational_stress_high_entropy(spark):
@@ -542,29 +558,13 @@ def test_relational_stress_high_entropy(spark):
     # sequential kernel (negative timestamps, dense RLE chains, huge
     # magnitudes, singleton series — bit-exact, both widths)
     from scala_timeseries_lib_spark.kernel import window as kwin
-    from scala_timeseries_lib_spark.kernel.fitter import fit
     from scala_timeseries_lib_spark.operators.window import (
         sliding_window_exact,
     )
 
-    per_key = {}
-    for key, ts, v, dur in rows_a:
-        per_key.setdefault(key, []).append((ts, v, dur))
     for width in (7, 100_000):
-        expected = []
-        for key, entries in per_key.items():
-            entries.sort()
-            emitted = [
-                (ts, float(agg), dur)
-                for (ts, _c, dur), agg in kwin.window_sweep(
-                    entries, width, kwin.SumAggregator()
-                )
-                if agg is not None
-            ]
-            for ts, v, d in fit(emitted, compress=True):
-                expected.append((key, ts, v, d))
         got = _canon(sliding_window_exact(
             a, ["user_id"], width, "sum", engine="relational",
         ))
-        assert got == sorted(expected), width
+        assert got == _seq_sweep(a, width, kwin.SumAggregator), width
         assert len(got) > 1000

@@ -58,6 +58,29 @@ def test_leaf_row_bound_on_parquet_union(spark, pq_sides):
     assert _leaf_row_bound(exploded) is None
 
 
+def test_leaf_row_bound_reads_classes_not_names(spark, pq_sides):
+    from scala_timeseries_lib_spark.operators.merge import _leaf_row_bound
+
+    named = pq_sides[0].withColumnRenamed("value", "JoinedValue")
+    assert _leaf_row_bound(named) == 22_000
+
+
+def test_leaf_row_bound_voids_pandas_expansion(spark, tmp_path):
+    """A pandas map node can emit more rows than it reads: the bound must
+    be void, not the leaf count."""
+    from scala_timeseries_lib_spark.operators.merge import _leaf_row_bound
+    from scala_timeseries_lib_spark.operators.window import sample_closest
+
+    p = str(tmp_path / "e.parquet")
+    spark.createDataFrame(
+        [(f"u{i % 4}", i * 100, float(i), 90) for i in range(40)],
+        "user_id string, ts long, value double, validity long",
+    ).write.parquet(p)
+    sampled = sample_closest(spark.read.parquet(p), ["user_id"], 7)
+    assert sampled.count() > 40
+    assert _leaf_row_bound(sampled) is None
+
+
 def test_leaf_key_frame_requires_key_by_name(spark, pq_sides):
     from scala_timeseries_lib_spark.operators.merge import (
         _leaf_key_frame,

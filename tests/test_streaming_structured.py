@@ -3,8 +3,7 @@
 Two micro-batches are delivered through a file source with availableNow
 triggers and a persistent checkpoint (a restart between them), and the
 emitted finalized entries + the withheld pending entries must together equal
-the one-shot batch fitter over all in-contract rows -- the same invariant
-the micro-batch AppendStream pins.
+the one-shot batch fitter over all in-contract rows.
 """
 
 import os

@@ -149,15 +149,15 @@ def test_minhash_bucket_cap_bounds_pairs(spark):
 
 
 def test_neardup_clusters_connected_components(spark):
-    """Chain graphs require label propagation across multiple rounds: a
-    4-hop chain, a separate pair, and singletons must each resolve to the
-    component minimum."""
+    """Chain graphs need several contraction rounds: a 4-hop chain, a
+    separate pair, and singletons must each resolve to the component
+    minimum."""
     from scala_timeseries_lib_spark.functions.dedup import neardup_clusters
 
     docs = spark.createDataFrame(
         [(i,) for i in range(10)], "doc_id long"
     ).withColumn("text", (F.col("doc_id") * 0).cast("string"))
-    # chain 9-7-5-3-1 (descending links force propagation) + pair (2, 8)
+    # chain 9-7-5-3-1 (descending links force rewiring) + pair (2, 8)
     pairs = spark.createDataFrame(
         [(7, 9), (5, 7), (3, 5), (1, 3), (2, 8)],
         "doc_a long, doc_b long",
@@ -225,31 +225,38 @@ def test_deterministic_sample_nests_and_shards_are_stable(spark):
         deterministic_sample(docs, 20_000)
 
 
-def test_star_cc_matches_label_prop_and_converges_logarithmically(spark):
-    """large-star/small-star must produce identical components to label
-    propagation, and converge on a 200-node CHAIN within ~log2(n) rounds
-    (label propagation needs diameter-many rounds there)."""
+def test_star_cc_matches_union_find_and_converges_logarithmically(spark):
+    """large-star/small-star must produce the same components as a
+    sequential union-find over the same pairs, and converge on a 200-node
+    CHAIN within ~log2(n) rounds (min-label propagation would need
+    diameter-many rounds there)."""
     from scala_timeseries_lib_spark.functions.dedup import neardup_clusters
 
     n = 200
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     docs = docs.withColumn("text", (F.col("doc_id") * 0).cast("string"))
     # one long chain 0-1-2-...-149, a pair, singletons
-    chain = [(i, i + 1) for i in range(149)]
-    extra = [(160, 170)]
-    pairs = spark.createDataFrame(chain + extra, "doc_a long, doc_b long")
+    edges = [(i, i + 1) for i in range(149)] + [(160, 170)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
 
     # star converges in O(log n) rounds: 12 rounds is ample for n=200,
-    # while label_prop would need ~149 (its default cap of 50 would fail)
-    star = neardup_clusters(docs, pairs, algorithm="star", max_iterations=12)
+    # while a diameter-bound algorithm would need ~149
+    star = neardup_clusters(docs, pairs, max_iterations=12)
     got = {r["doc_id"]: r["canonical_id"] for r in star.collect()}
-    for i in range(150):
-        assert got[i] == 0
-    assert got[160] == got[170] == 160
-    assert got[199] == 199
 
-    prop = neardup_clusters(docs, pairs, max_iterations=200)
-    assert got == {r["doc_id"]: r["canonical_id"] for r in prop.collect()}
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)
+    assert got == {i: find(i) for i in range(n)}
+    assert got[149] == 0 and got[170] == 160 and got[199] == 199
 
 
 def test_minhash_hot_bucket_oracle_parity(spark):
@@ -283,13 +290,12 @@ def test_minhash_hot_bucket_oracle_parity(spark):
     assert got == want
 
     # and the recursive-CTE cluster oracle over the same mpairs agrees with
-    # the engine's connected components (star algorithm)
+    # the engine's connected components
     from scala_timeseries_lib_spark.functions.dedup import neardup_clusters
 
     cl = neardup_clusters(
         docs,
         minhash_lsh_pairs(docs, max_bucket_size=entry_mod.MINHASH_MAX_BUCKET),
-        algorithm="star",
     )
     got_cl = sorted((r.doc_id, r.canonical_id) for r in cl.collect())
     want_cl = sorted(
