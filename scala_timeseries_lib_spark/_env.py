@@ -1,16 +1,18 @@
-"""Integer ``SPARK_GRAFT_*`` knobs, read once at import.
+"""``SPARK_GRAFT_*`` knobs, validated where they are read.
 
-A malformed knob must never crash the package at import: a value that is
+A malformed knob must never crash the package: an integer knob that is
 not an integer falls back to the default, one below 1 is clamped to 1
-(a zero bucket size or shuffle width is meaningless), each with a warning.
+(a zero bucket size or shuffle width is meaningless); a string knob that
+does not match its pattern falls back to the default. Each warns.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import warnings
 
-__all__ = ["env_int"]
+__all__ = ["env_int", "env_str"]
 
 
 def env_int(name: str, default: int) -> int:
@@ -33,3 +35,19 @@ def env_int(name: str, default: int) -> int:
         )
         return 1
     return value
+
+
+def env_str(name: str, default: str, pattern: str) -> str:
+    """``$name`` when it fully matches ``pattern`` (case-insensitive);
+    ``default`` when unset or malformed."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    if re.fullmatch(pattern, raw, re.IGNORECASE):
+        return raw
+    warnings.warn(
+        f"{name}={raw!r} does not match {pattern!r}; using the default {default!r}",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return default

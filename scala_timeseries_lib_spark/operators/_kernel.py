@@ -12,18 +12,45 @@ lands in one bucket (its kernel is order-dependent); the escape hatch for
 that shape is time-slicing -- see ``merge_series(time_slice=...)``, which
 splits the series at absolute time boundaries and repairs the RLE at the
 borders relationally.
+
+Most operators run a grouped numpy kernel over the whole bucket through
+:func:`apply_grouped`, which owns the bucket chores around it. Per bucket:
+
+1. an empty bucket returns an empty frame;
+2. rows are sorted by ``(*key_cols, "ts")`` (stable) and the keys are
+   factorized (``use_na_sentinel=False``, so a null key component is a
+   series of its own), giving ascending series codes;
+3. ``kernel(codes, ts, value, validity[, side])`` runs once; ``side`` is
+   passed when the input carries the merge family's side tag column. It
+   returns ``(codes, ts, *values, validity)``, or ``None`` when its
+   offset-packed time axis would overflow (n_series x span >= 2^62 ms);
+4. on ``None`` the same kernel runs once per series with all codes 0, and
+   the parts are concatenated; a single series that still overflows (its
+   own span plus the window or rate reaches 2^62 ms) raises ``ValueError``;
+5. ``compress=True`` RLE-fits the result with ``fit_arrays_grouped``
+   (one value column; a kernel with several compresses itself);
+6. the codes map back to key values. Output schema: the key fields, ``ts``
+   long, the ``values`` columns, ``validity`` long. A value column named by
+   a string is a double (the input ``value`` is cast to float64); one given
+   as a ``StructField`` keeps that type and the input is passed uncast.
+
+The Spark side is :func:`apply_per_bucket`, looked up as a module global
+on every call, so a wrapper installed on that name sees every grouped
+kernel too.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .._env import env_int
 
-__all__ = ["apply_per_series", "apply_per_bucket"]
+__all__ = ["apply_per_series", "apply_per_bucket", "apply_grouped"]
 
 # Estimated (Catalyst sizeInBytes, i.e. roughly compressed-input) bytes per
 # salt bucket. Each bucket is materialized as ONE pandas frame in a Python
@@ -131,3 +158,75 @@ def _dispatch(df, key_cols, bucket_fn, out_schema, n_buckets):
     return salted.groupBy("_salt").applyInPandas(
         lambda pdf: bucket_fn(pdf.drop(columns=["_salt"])), schema=out_schema
     )
+
+
+def apply_grouped(df, key_cols, kernel, values=("value",), compress=False):
+    """Run a grouped numpy ``kernel`` once per salt bucket; the bucket
+    contract (sort, factorize, per-series overflow fallback, RLE fit, key
+    re-attach, output schema) is in the module docstring. Dispatches through
+    :func:`apply_per_bucket`."""
+    import numpy as np
+
+    fields = [v if isinstance(v, StructField) else StructField(v, DoubleType())
+              for v in values]
+    out_schema = StructType([
+        *(df.schema[k] for k in key_cols),
+        StructField("ts", LongType()),
+        *fields,
+        StructField("validity", LongType()),
+    ])
+    value_dtype = np.float64 if isinstance(fields[0].dataType, DoubleType) else None
+    bucket = functools.partial(
+        _grouped_bucket, key_cols=list(key_cols), kernel=kernel,
+        out_names=out_schema.fieldNames(), value_dtype=value_dtype,
+        compress=compress,
+    )
+    return apply_per_bucket(df, key_cols, bucket, out_schema)
+
+
+def _grouped_bucket(pdf, key_cols, kernel, out_names, value_dtype, compress):
+    import numpy as np
+    import pandas as pd
+
+    from ..kernel.fitter import fit_arrays_grouped
+
+    if len(pdf) == 0:
+        return pd.DataFrame(columns=out_names)
+    pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort", ignore_index=True)
+    codes, uniques = pd.factorize(
+        pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
+    )
+    codes = codes.astype(np.int64)
+    cols = [pdf["ts"].to_numpy(np.int64), pdf["value"].to_numpy(value_dtype),
+            pdf["validity"].to_numpy(np.int64)]
+    if "side" in pdf.columns:
+        cols.append(pdf["side"].to_numpy())
+    res = kernel(codes, *cols)
+    if res is None:
+        res = _per_series(kernel, codes, cols)
+    oc, ot, *ov, od = res
+    if compress:
+        keep, ot, v0, od = fit_arrays_grouped(oc, ot, ov[0], od, compress=True)
+        oc, ov = oc[keep], [v0]
+    key_vals = uniques[oc].to_frame(index=False)
+    key_vals.columns = key_cols
+    out = pd.DataFrame(dict(zip(out_names[len(key_cols):], [ot, *ov, od])))
+    return pd.concat([key_vals, out], axis=1)
+
+
+def _per_series(kernel, codes, cols):
+    """Packed-axis overflow fallback: the same kernel once per series (codes
+    0), results re-coded and concatenated."""
+    import numpy as np
+
+    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+    parts = []
+    for s0, s1 in zip(starts, np.r_[starts[1:], codes.size]):
+        res = kernel(np.zeros(s1 - s0, np.int64), *(c[s0:s1] for c in cols))
+        if res is None:
+            raise ValueError(
+                "a single series spans >= 2^62 ms together with its window "
+                "or rate; the packed int64 time axis cannot hold it"
+            )
+        parts.append((np.full(res[0].size, codes[s0], np.int64), *res[1:]))
+    return [np.concatenate(p) for p in zip(*parts)]

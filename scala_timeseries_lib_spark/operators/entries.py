@@ -87,28 +87,14 @@ def fit_entries(df: DataFrame, key_cols: list[str], compress: bool = True) -> Da
     never cross a series boundary, kernel.fitter.fit_arrays_grouped) -- no
     per-series Python loop.
     """
-    import pandas as pd
-
     from ..kernel.fitter import fit_arrays_grouped
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_grouped
 
-    out_schema = df.select(*key_cols, *ENTRY_COLS).schema
-    out_names = [f.name for f in out_schema.fields]
-
-    def _fit_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, _ = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        keep_idx, ts, value, validity = fit_arrays_grouped(
-            codes, pdf["ts"].to_numpy(), pdf["value"].to_numpy(),
-            pdf["validity"].to_numpy(), compress=compress,
+    def _fit(codes, ts, value, validity):
+        keep, ts, value, validity = fit_arrays_grouped(
+            codes, ts, value, validity, compress=compress
         )
-        out = pdf.iloc[keep_idx][key_cols].reset_index(drop=True)
-        out["ts"] = ts
-        out["value"] = value
-        out["validity"] = validity
-        return out[out_names]
+        return codes[keep], ts, value, validity
 
-    return apply_per_bucket(df, key_cols, _fit_bucket, out_schema)
+    # the value column keeps its input type (a fit never computes values)
+    return apply_grouped(df, key_cols, _fit, values=(df.schema["value"],))

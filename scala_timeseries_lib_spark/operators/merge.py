@@ -14,12 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType
 
 __all__ = [
     "merge_series",
@@ -41,25 +36,12 @@ NUMERIC_OPS = (
 _PACK_LIMIT = 1 << 62
 
 
-def _series_groups(codes, ts, val, dur, side):
-    """Shared scaffolding for the int64-overflow per-series fallbacks:
-    sort all arrays by (code, side, ts) and return them with the group
-    start offsets, so each fallback loop only supplies its kernel call."""
-    import numpy as np
-
-    order = np.lexsort((ts, side, codes))
-    codes_s = codes[order]
-    starts = np.flatnonzero(np.r_[True, codes_s[1:] != codes_s[:-1]])
-    bounds = list(zip(starts, np.r_[starts[1:], codes_s.size]))
-    return (codes_s, ts[order], val[order], dur[order], side[order], bounds)
-
-
 def _pack_codes(codes, ts, dur):
     """Disjoint per-series int64 time regions, or None when the bucket's
-    (n_series x time-span) product would overflow the packed axis -- callers
-    then fall back to a per-series loop (correct, just not batch-vectorized).
-    Millions of series x multi-year ms spans approach 2^63 silently without
-    this guard."""
+    (n_series x time-span) product would overflow the packed axis --
+    ``_kernel.apply_grouped`` then reruns the kernel once per series
+    (correct, just not batch-vectorized). Millions of series x multi-year
+    ms spans approach 2^63 silently without this guard."""
     import numpy as np
 
     base = int(ts.min())
@@ -68,6 +50,52 @@ def _pack_codes(codes, ts, dur):
     if n_codes * stride >= _PACK_LIMIT:
         return None, stride, base
     return codes.astype(np.int64) * stride + (ts - base), stride, base
+
+
+def _packed_sides(codes, ts, val, dur, side, n_sides, merge_fn, needs_ranges=False):
+    """The merge family's grouped kernel body: offset-pack the bucket (every
+    series gets a disjoint ``[code*stride, (code+1)*stride)`` region of the
+    int64 time axis, so segments never cross series), split it by side
+    (each side is already time-ordered: ``apply_grouped`` sorts by key and ts),
+    run ``merge_fn(sides, valid_ranges) -> (ts, *values, validity)`` once
+    for the whole bucket and unpack to ``(codes, ts, *values, validity)``.
+    Returns None on packed-axis overflow. ``needs_ranges`` passes the
+    per-series packed spans so ops that fill (undefined, undefined) segments
+    leave the inter-series gaps as holes."""
+    import numpy as np
+
+    packed, stride, base = _pack_codes(codes, ts, dur)
+    if packed is None:
+        return None
+    valid_ranges = None
+    if needs_ranges:
+        n_codes = int(codes.max()) + 1
+        span_lo = np.full(n_codes, np.iinfo(np.int64).max)
+        span_hi = np.full(n_codes, np.iinfo(np.int64).min)
+        np.minimum.at(span_lo, codes, packed)
+        np.maximum.at(span_hi, codes, packed + dur)
+        valid_ranges = (span_lo, span_hi)
+    sides = [(packed[m], val[m], dur[m]) for m in (side == i for i in range(n_sides))]
+    out_ts, *rest = merge_fn(sides, valid_ranges)
+    return (out_ts // stride, out_ts % stride + base, *rest)
+
+
+def _route_engine(engine, relational_ok, tagged, key_cols, merge_fn,
+                  skew_guard, hot_threshold, time_slice=None):
+    """The merge family's engine choice. ``"auto"`` builds the relational
+    plan ``merge_fn(tagged, time_slice)`` when ``relational_ok``, through
+    the hot-key routing when ``skew_guard``; returns None when the kernel
+    must run (``"kernel"``, or a shape only the kernel supports)."""
+    if engine not in ("auto", "kernel"):
+        raise ValueError(f"unknown engine {engine!r}")
+    if engine == "kernel" or not relational_ok:
+        return None
+    if not skew_guard:
+        return merge_fn(tagged, time_slice)
+    return _route_hot_keys(
+        tagged, key_cols, merge_fn,
+        hot_threshold if hot_threshold is not None else HOT_KEY_THRESHOLD,
+    )
 
 
 def merge_series(
@@ -98,20 +126,17 @@ def merge_series(
     with the empty series (strict ops yield nothing; non-strict ops pass the
     defined side through).
 
-    ``engine`` picks the physical strategy for the NAMED numeric ops:
+    ``engine`` picks the physical strategy:
 
-    - ``"relational"`` — pure Catalyst (no Python stage): boundary explode →
-      one per-key window sort computing segment ``lead`` and per-side
-      carried values → op expression → gaps-and-islands RLE. One shuffle
-      end-to-end; whole plan is JVM codegen. Requires ``compress=True``.
-      ``time_slice`` works here too: (key, slice) window partitions plus
-      the per-key RLE border repair (the hot-key escape hatch without
-      leaving the JVM).
-    - ``"kernel"`` — the offset-packed Arrow/numpy bucket kernel (always
-      used for callable ``op``; required for ``compress=False``).
-    - ``"auto"`` (default) — relational for named ops when its requirements
-      hold (measured faster at sf0.1, see BENCH/BASELINE.md crossover
-      note), kernel otherwise. With ``skew_guard`` (default on), auto also
+    - ``"auto"`` (default) — named ops with ``compress=True`` run the
+      pure-Catalyst plan (:func:`merge_series_relational`, no Python stage):
+      boundary explode → one per-key window sort computing segment ``lead``
+      and per-side carried values → op expression → gaps-and-islands RLE.
+      One shuffle end-to-end; measured faster than the kernel at sf0.1 (see
+      BENCH/BASELINE.md crossover note). ``time_slice`` works here too:
+      (key, slice) window partitions plus the per-key RLE border repair.
+      Callable ops and ``compress=False`` run the kernel. With
+      ``skew_guard`` (default on), auto also
       routes by KEY POPULATION: any key above ``hot_threshold`` (default
       ``HOT_KEY_THRESHOLD`` = 1M entries, the measured crossover) merges
       through an auto-sized ``time_slice`` while the rest keep the plain
@@ -122,9 +147,12 @@ def merge_series(
       keeps the plan FULLY LAZY; otherwise a 1% sampled count probes for
       candidates (one lightweight job, no materialization); only a flagged
       candidate triggers the exact materialize-and-count routing pass.
-      Set ``skew_guard=False`` to skip even the probe. The guard is
-      skipped for ops that cannot slice (minus with both defaults) and
-      when ``time_slice`` is given.
+      Set ``skew_guard=False`` to skip even the probe (the plain relational
+      plan). The guard is skipped for ops that cannot slice (minus with
+      both defaults) and when ``time_slice`` is given.
+    - ``"kernel"`` — the offset-packed Arrow/numpy bucket kernel for every
+      op (``operators._kernel.apply_grouped``; one vectorized call per salt
+      bucket, per series only when the packed time axis would overflow).
 
     ``time_slice`` (ms) is the hot-series escape hatch: one series is
     otherwise inherently sequential inside its kernel call, so a single
@@ -136,192 +164,68 @@ def merge_series(
     slice borders -- the result is identical to the unsliced merge (pinned
     by test). Requires ``compress=True`` (the border re-fit is an RLE).
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.merge import merge_apply_callable, merge_apply_numeric
-
     is_callable = callable(op)
     if not is_callable and op not in NUMERIC_OPS:
         raise ValueError(f"unknown op {op!r}; expected callable or {NUMERIC_OPS}")
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
     # ops that may emit a value on an (undefined, undefined) segment cannot
-    # be time-sliced on either engine: holes crossing slice borders would
-    # be filled per-slice (checked again below for the kernel path)
-    _needs_ranges = is_callable or (
-        op == "minus" and left_default is not None and right_default is not None
-    )
-    relational_ok = (
-        not is_callable and compress
-        and not (time_slice is not None and _needs_ranges)
-    )
-    if engine == "relational" and not relational_ok:
-        raise ValueError(
-            "engine='relational' supports only named ops with "
-            "compress=True (and no time_slice for ops that fill "
-            "(undefined, undefined) segments)"
-        )
-    if engine in ("relational", "auto") and relational_ok:
-        if (
-            engine == "auto" and skew_guard and time_slice is None
-            and not _needs_ranges
-        ):
-            return _merge_auto_skew(
-                left, right, key_cols, op,
-                left_default, right_default,
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return merge_series_relational(
-            left, right, key_cols, op=op,
-            left_default=left_default, right_default=right_default,
-            time_slice=time_slice,
-        )
-    # ops that may emit a value on an (undefined, undefined) segment need
-    # the per-series span windows so packed inter-region gaps stay holes
+    # be time-sliced on either engine (holes crossing slice borders would be
+    # filled per-slice), and the kernel passes them the per-series spans so
+    # packed inter-region gaps stay holes
     needs_ranges = is_callable or (
         op == "minus" and left_default is not None and right_default is not None
     )
+    if time_slice is not None and needs_ranges:
+        raise ValueError(
+            "time_slice cannot be combined with an op that fills "
+            "(undefined, undefined) segments (callable op, or minus with "
+            "both defaults): holes crossing slice borders would not be "
+            "filled"
+        )
+    tagged = _tag_sides_n([left, right], key_cols)
+    routed = _route_engine(
+        engine, not is_callable and compress, tagged, key_cols,
+        lambda t, ts: _merge_tagged_relational(
+            t, key_cols, op=op, left_default=left_default,
+            right_default=right_default, time_slice=ts,
+        ),
+        skew_guard and time_slice is None and not needs_ranges,
+        hot_threshold, time_slice,
+    )
+    if routed is not None:
+        return routed
 
-    def _kernel(a, b, valid_ranges=None):
+    from ..kernel.merge import merge_apply_callable, merge_apply_numeric
+    from ._kernel import apply_grouped
+
+    def _merge(sides, valid_ranges):
         if is_callable:
             return merge_apply_callable(
-                *a, *b, op=op, compress=compress, valid_ranges=valid_ranges
+                *sides[0], *sides[1], op=op, compress=compress,
+                valid_ranges=valid_ranges,
             )
         return merge_apply_numeric(
-            *a, *b, op=op, compress=compress,
+            *sides[0], *sides[1], op=op, compress=compress,
             left_default=left_default, right_default=right_default,
             valid_ranges=valid_ranges,
         )
 
+    group_cols = key_cols
     if time_slice is not None:
         if not compress:
             raise ValueError("time_slice requires compress=True")
-        if needs_ranges:
-            raise ValueError(
-                "time_slice cannot be combined with an op that fills "
-                "(undefined, undefined) segments (callable op, or minus with "
-                "both defaults): holes crossing slice borders would not be "
-                "filled"
-            )
         from .series_ops import split_at_buckets
 
-        left = split_at_buckets(left, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        right = split_at_buckets(right, time_slice).withColumnRenamed(
+        # split_at_buckets carries the side tag through the explode
+        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
             "bucket", "_slice"
         )
         group_cols = [*key_cols, "_slice"]
-    else:
-        group_cols = key_cols
-
-    key_fields = [left.schema[k] for k in group_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    merged = apply_grouped(
+        tagged, group_cols,
+        lambda c, t, v, d, side: _packed_sides(
+            c, t, v, d, side, 2, _merge, needs_ranges
+        ),
     )
-
-    from ._kernel import apply_per_bucket
-
-    def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Offset-packed merge of a whole salt bucket in ONE vectorized call.
-
-        Every series gets a disjoint [idx*stride, (idx+1)*stride) region of
-        the int64 time axis (stride > the bucket's full time span, so
-        regions can never touch and segments never cross series). The
-        boundary-union merge kernel then processes all series of the bucket
-        at once -- no per-series Python loop, no per-series numpy-call
-        overhead.
-        """
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        keys = pdf[group_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(group_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
-        )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
-        packed, stride, base = _pack_codes(codes, ts, dur)
-
-        if packed is None:
-            # packed axis would overflow int64: per-series loop (correct,
-            # just not batch-vectorized; forced time_slice also re-bounds
-            # the stride if this path ever dominates)
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
-            )
-            idx_parts, ts_p, val_p, dur_p = [], [], [], []
-            for s0, s1 in bounds:
-                sm = side_s[s0:s1] == 0
-                m_ts, m_val, m_dur = _kernel(
-                    (ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm]),
-                    (ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm]),
-                )
-                ts_p.append(m_ts)
-                val_p.append(m_val)
-                dur_p.append(m_dur)
-                idx_parts.append(np.full(m_ts.size, codes_s[s0], np.int64))
-            m_ts = np.concatenate(ts_p)
-            out = pd.DataFrame(
-                {
-                    "ts": m_ts,
-                    "value": np.concatenate(val_p),
-                    "validity": np.concatenate(dur_p),
-                }
-            )
-            idx = np.concatenate(idx_parts)
-        else:
-            valid_ranges = None
-            if needs_ranges:
-                n_codes = int(codes.max()) + 1
-                span_lo = np.full(n_codes, np.iinfo(np.int64).max)
-                span_hi = np.full(n_codes, np.iinfo(np.int64).min)
-                np.minimum.at(span_lo, codes, packed)
-                np.maximum.at(span_hi, codes, packed + dur)
-                valid_ranges = (span_lo, span_hi)
-
-            def pick(s):
-                m = side == s
-                order = np.argsort(packed[m], kind="stable")
-                return packed[m][order], val[m][order], dur[m][order]
-
-            m_ts, m_val, m_dur = _kernel(pick(0), pick(1), valid_ranges)
-            idx = m_ts // stride
-            out = pd.DataFrame(
-                {
-                    "ts": m_ts % stride + base,
-                    "value": m_val,
-                    "validity": m_dur,
-                }
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(group_cols) > 1
-            else pd.DataFrame({group_cols[0]: uniques[idx]})
-        )
-        key_vals.columns = group_cols
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[[f.name for f in out_schema.fields]]
-
-    # union with a side tag + single salted bucket kernel: one shuffle
-    # total, and it sidesteps Spark's self-cogroup attribute ambiguity when
-    # both inputs share lineage (two filters of the same parent DataFrame)
-    tagged = left.select(
-        *group_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*group_cols, "ts", "value", "validity", F.lit(1).alias("side"))
-    )
-    merged = apply_per_bucket(tagged, group_cols, _merge_bucket, out_schema)
     if time_slice is None:
         return merged
     return _rle_repair(merged.drop("_slice"), key_cols)
@@ -485,14 +389,6 @@ def _merge_value_expr(op, a, b, left_default, right_default):
     raise ValueError(f"unknown relational op {op!r}")
 
 
-def _tag_sides(left: DataFrame, right: DataFrame, key_cols: list[str]) -> DataFrame:
-    return left.select(
-        *key_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*key_cols, "ts", "value", "validity", F.lit(1).alias("side"))
-    )
-
-
 def merge_series_relational(
     left: DataFrame,
     right: DataFrame,
@@ -536,7 +432,7 @@ def merge_series_relational(
             "(undefined, undefined) segments"
         )
     return _merge_tagged_relational(
-        _tag_sides(left, right, key_cols), key_cols, op=op,
+        _tag_sides_n([left, right], key_cols), key_cols, op=op,
         left_default=left_default, right_default=right_default,
         time_slice=time_slice,
     )
@@ -862,28 +758,11 @@ def _route_hot_keys(
     return out.unionByName(cold)
 
 
-def _merge_auto_skew(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    op: str,
-    left_default: float | None,
-    right_default: float | None,
-    hot_threshold: int,
-) -> DataFrame:
-    """Skew routing for the binary relational merge — see _route_hot_keys."""
-    return _route_hot_keys(
-        _tag_sides(left, right, key_cols),
-        key_cols,
-        lambda t, ts: _merge_tagged_relational(
-            t, key_cols, op=op, left_default=left_default,
-            right_default=right_default, time_slice=ts,
-        ),
-        hot_threshold,
-    )
-
-
 def _tag_sides_n(dfs: list[DataFrame], key_cols: list[str]) -> DataFrame:
+    """Union of the entries tables with a ``side`` tag (0, 1, ...): every
+    merge engine groups this one frame, so a merge is one shuffle total, and
+    it sidesteps Spark's self-cogroup attribute ambiguity when the inputs
+    share lineage (two filters of the same parent DataFrame)."""
     tagged = None
     for i, df in enumerate(dfs):
         part = df.select(
@@ -971,7 +850,7 @@ def strict_zip_series_relational(
     equal on BOTH values. ``time_slice`` = the hot-key escape (identical
     output, per-key pair-RLE repairs the borders)."""
     return _zip_tagged_relational(
-        _tag_sides(left, right, key_cols), key_cols, time_slice=time_slice
+        _tag_sides_n([left, right], key_cols), key_cols, time_slice=time_slice
     )
 
 
@@ -1055,108 +934,30 @@ def strict_zip_series(
     series are defined. Output: key cols + ts, a_value, b_value, validity.
     ``engine="auto"`` routes compressed zips through the pure-Catalyst path
     (strict_zip_series_relational) with the same automatic hot-key routing
-    as ``merge_series`` (``skew_guard``, _route_hot_keys); ``"kernel"``
-    forces the offset-packed single-call bucket kernel (required for
-    ``compress=False``)."""
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational" and not compress:
-        raise ValueError("engine='relational' requires compress=True")
-    if engine in ("auto", "relational") and compress:
-        if engine == "auto" and skew_guard:
-            return _route_hot_keys(
-                _tag_sides(left, right, key_cols), key_cols,
-                lambda t, ts: _zip_tagged_relational(t, key_cols, time_slice=ts),
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return strict_zip_series_relational(left, right, key_cols)
-    import numpy as np
-    import pandas as pd
-
+    as ``merge_series`` (``skew_guard``, _route_hot_keys; without the guard
+    the plain relational plan); ``compress=False`` and ``engine="kernel"``
+    run the offset-packed single-call bucket kernel."""
+    tagged = _tag_sides_n([left, right], key_cols)
+    routed = _route_engine(
+        engine, compress, tagged, key_cols,
+        lambda t, ts: _zip_tagged_relational(t, key_cols, time_slice=ts),
+        skew_guard, hot_threshold,
+    )
+    if routed is not None:
+        return routed
     from ..kernel.merge import strict_zip_arrays
+    from ._kernel import apply_grouped
 
-    key_fields = [left.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("a_value", DoubleType()),
-            StructField("b_value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    return apply_grouped(
+        tagged, key_cols,
+        lambda c, t, v, d, side: _packed_sides(
+            c, t, v, d, side, 2,
+            lambda sides, _r: strict_zip_arrays(
+                *sides[0], *sides[1], compress=compress
+            ),
+        ),
+        values=("a_value", "b_value"),
     )
-    out_names = [f.name for f in out_schema.fields]
-
-    from ._kernel import apply_per_bucket
-
-    def _zip_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        keys = pdf[key_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
-        )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
-        packed, stride, base = _pack_codes(codes, ts, dur)
-
-        if packed is None:
-            # int64-overflow fallback: per-series loop
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
-            )
-            idx_p, ts_p, za_p, zb_p, dur_p = [], [], [], [], []
-            for s0, s1 in bounds:
-                sm = side_s[s0:s1] == 0
-                z_ts, za, zb, z_dur = strict_zip_arrays(
-                    ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm],
-                    ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm],
-                    compress=compress,
-                )
-                ts_p.append(z_ts)
-                za_p.append(za)
-                zb_p.append(zb)
-                dur_p.append(z_dur)
-                idx_p.append(np.full(z_ts.size, codes_s[s0], np.int64))
-            z_ts = np.concatenate(ts_p)
-            za, zb = np.concatenate(za_p), np.concatenate(zb_p)
-            z_dur = np.concatenate(dur_p)
-            idx = np.concatenate(idx_p)
-            out = pd.DataFrame(
-                {"ts": z_ts, "a_value": za, "b_value": zb, "validity": z_dur}
-            )
-        else:
-            def pick(s):
-                m = side == s
-                order = np.argsort(packed[m], kind="stable")
-                return packed[m][order], val[m][order], dur[m][order]
-
-            z_ts, za, zb, z_dur = strict_zip_arrays(
-                *pick(0), *pick(1), compress=compress
-            )
-            idx = z_ts // stride
-            out = pd.DataFrame(
-                {"ts": z_ts % stride + base, "a_value": za, "b_value": zb,
-                 "validity": z_dur}
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(key_cols) > 1
-            else pd.DataFrame({key_cols[0]: uniques[idx]})
-        )
-        key_vals.columns = key_cols
-        return pd.concat([key_vals.reset_index(drop=True), out], axis=1)[out_names]
-
-    tagged = left.select(
-        *key_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*key_cols, "ts", "value", "validity", F.lit(1).alias("side"))
-    )
-    return apply_per_bucket(tagged, key_cols, _zip_bucket, out_schema)
 
 
 def merge_series_n(
@@ -1178,109 +979,28 @@ def merge_series_n(
     unioned with a side tag and grouped once. ``engine="auto"`` routes
     compressed merges through the pure-Catalyst path
     (merge_series_n_relational) with the same automatic hot-key routing as
-    ``merge_series`` (``skew_guard``, _route_hot_keys); ``"kernel"``
-    forces the Arrow kernel.
+    ``merge_series`` (``skew_guard``, _route_hot_keys; without the guard
+    the plain relational plan); ``compress=False`` and ``engine="kernel"``
+    run the offset-packed Arrow kernel.
     """
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational" and not compress:
-        raise ValueError("engine='relational' requires compress=True")
-    if engine in ("auto", "relational") and compress:
-        n_sides = len(dfs)
-        if engine == "auto" and skew_guard:
-            return _route_hot_keys(
-                _tag_sides_n(dfs, key_cols), key_cols,
-                lambda t, ts: _merge_n_tagged_relational(
-                    t, key_cols, n_sides, op=op, time_slice=ts
-                ),
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return merge_series_n_relational(dfs, key_cols, op=op)
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.merge import merge_apply_numeric_n
-
     n_sides = len(dfs)
-    key_fields = [dfs[0].schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    tagged = _tag_sides_n(dfs, key_cols)
+    routed = _route_engine(
+        engine, compress, tagged, key_cols,
+        lambda t, ts: _merge_n_tagged_relational(
+            t, key_cols, n_sides, op=op, time_slice=ts
+        ),
+        skew_guard, hot_threshold,
     )
-    out_names = [f.name for f in out_schema.fields]
+    if routed is not None:
+        return routed
+    from ..kernel.merge import merge_apply_numeric_n
+    from ._kernel import apply_grouped
 
-    from ._kernel import apply_per_bucket
-
-    def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # same offset-packing as merge_series: disjoint per-series time
-        # regions let one k-sided vectorized call handle the whole bucket
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        keys = pdf[key_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
-        )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
-        packed, stride, base = _pack_codes(codes, ts, dur)
-
-        if packed is None:
-            # int64-overflow fallback: per-series loop
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
-            )
-            idx_p, ts_p, val_p, dur_p = [], [], [], []
-            for s0, s1 in bounds:
-                grp_sides = []
-                for i in range(n_sides):
-                    m = side_s[s0:s1] == i
-                    grp_sides.append(
-                        (ts_s[s0:s1][m], val_s[s0:s1][m], dur_s[s0:s1][m])
-                    )
-                m_ts, m_val, m_dur = merge_apply_numeric_n(
-                    grp_sides, op=op, compress=compress
-                )
-                ts_p.append(m_ts)
-                val_p.append(m_val)
-                dur_p.append(m_dur)
-                idx_p.append(np.full(m_ts.size, codes_s[s0], np.int64))
-            m_ts = np.concatenate(ts_p)
-            idx = np.concatenate(idx_p)
-            out = pd.DataFrame(
-                {"ts": m_ts, "value": np.concatenate(val_p),
-                 "validity": np.concatenate(dur_p)}
-            )
-        else:
-            sides = []
-            for i in range(n_sides):
-                m = side == i
-                order = np.argsort(packed[m], kind="stable")
-                sides.append((packed[m][order], val[m][order], dur[m][order]))
-            m_ts, m_val, m_dur = merge_apply_numeric_n(
-                sides, op=op, compress=compress
-            )
-            idx = m_ts // stride
-            out = pd.DataFrame(
-                {"ts": m_ts % stride + base, "value": m_val, "validity": m_dur}
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(key_cols) > 1
-            else pd.DataFrame({key_cols[0]: uniques[idx]})
-        )
-        key_vals.columns = key_cols
-        return pd.concat([key_vals.reset_index(drop=True), out], axis=1)[out_names]
-
-    tagged = None
-    for i, df in enumerate(dfs):
-        part = df.select(*key_cols, "ts", "value", "validity", F.lit(i).alias("side"))
-        tagged = part if tagged is None else tagged.unionByName(part)
-    return apply_per_bucket(tagged, key_cols, _merge_bucket, out_schema)
+    return apply_grouped(
+        tagged, key_cols,
+        lambda c, t, v, d, side: _packed_sides(
+            c, t, v, d, side, n_sides,
+            lambda sides, _r: merge_apply_numeric_n(sides, op=op, compress=compress),
+        ),
+    )

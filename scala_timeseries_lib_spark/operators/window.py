@@ -98,6 +98,16 @@ def sliding_grid_agg(
     return grid.withColumn("value", expr)
 
 
+def _entries_schema(df: DataFrame, key_cols: list[str]) -> StructType:
+    """Key fields + ``ts`` long, ``value`` double, ``validity`` long."""
+    return StructType([
+        *(df.schema[k] for k in key_cols),
+        StructField("ts", LongType()),
+        StructField("value", DoubleType()),
+        StructField("validity", LongType()),
+    ])
+
+
 _AGG_FACTORIES = {
     "sum": "SumAggregator",
     "mean": "MeanAggregator",
@@ -131,10 +141,12 @@ def sliding_window_exact(
     (kernel.window.window_sweep_grouped: prefix-sum differences and
     sparse-table range min/max over the contiguous window ranges, offset-
     packed across series; closest-in-window resampling batched via
-    sample_arrays_closest_grouped). The sequential per-series sweep remains
-    the semantics twin (pinned equivalent in tests) and the fallback for
-    strict-resample inputs and packed-axis overflow. Float note: the
-    vectorized sums differ from the incremental sweep at ~1e-13 relative
+    sample_arrays_closest_grouped), dispatched by
+    ``operators._kernel.apply_grouped``; on packed-axis overflow the same
+    vectorized kernel reruns once per series. The sequential per-series
+    sweep remains the semantics twin (pinned equivalent in tests) and runs
+    median and strict-resample inputs. Float note: the vectorized sums
+    differ from the incremental sweep at ~1e-13 relative
     (prefix-difference vs add/drop rounding), and std inflates true-zero
     variances to ~1e-7 -- round before comparing across paths/engines.
 
@@ -147,7 +159,6 @@ def sliding_window_exact(
     that same shape onto the relational sweep and rejects any other;
     ``engine="kernel"`` forces the kernel.
     """
-    import numpy as np
     import pandas as pd
 
     if engine not in ("auto", "kernel", "relational"):
@@ -161,24 +172,28 @@ def sliding_window_exact(
         return sliding_window_exact_relational(
             df, key_cols, window_width, compress=compress
         )
-
-    from ..kernel import window as kwin
-    from ..kernel.fitter import fit, fit_arrays_grouped
-    from ..kernel.sample import sample_arrays_closest_grouped
-
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
     if agg not in _AGG_FACTORIES and agg != "median":
         raise ValueError(f"unknown agg {agg!r}")
+
+    from ..kernel import window as kwin
+    from ._kernel import apply_grouped, apply_per_series
+
+    if agg in kwin._GROUPED_AGGS and (sample_rate is None or use_closest):
+        from ..kernel.sample import sample_arrays_closest_grouped
+
+        def _sweep(c, t, v, d):
+            if sample_rate is not None:
+                rs = sample_arrays_closest_grouped(c, t, v, d, sample_rate)
+                if rs is None:
+                    return None
+                c, t, v, d = rs
+            return kwin.window_sweep_grouped(
+                c, t, v, d, window_width, agg=agg, timeunit=timeunit
+            )
+
+        return apply_grouped(df, key_cols, _sweep, compress=compress)
+
+    from ..kernel.fitter import fit
 
     def make_agg():
         if agg == "median":
@@ -196,12 +211,6 @@ def sliding_window_exact(
             return cls(timeunit)
         return cls()
 
-    from ._kernel import apply_per_bucket, apply_per_series
-
-    vectorizable = agg in kwin._GROUPED_AGGS and (
-        sample_rate is None or use_closest
-    )
-
     def _sweep_seq(key, pdf: pd.DataFrame) -> pd.DataFrame:
         entries = list(
             zip(pdf["ts"].tolist(), pdf["value"].tolist(), pdf["validity"].tolist())
@@ -216,56 +225,7 @@ def sliding_window_exact(
             out = fit(out, compress=True)
         return pd.DataFrame(out, columns=["ts", "value", "validity"])
 
-    if not vectorizable:
-        return apply_per_series(df, key_cols, _sweep_seq, out_schema)
-
-    def _sweep_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        c = codes.astype(np.int64)
-        t = pdf["ts"].to_numpy(np.int64)
-        v = pdf["value"].to_numpy(np.float64)
-        d = pdf["validity"].to_numpy(np.int64)
-        res = None
-        if sample_rate is not None:
-            rs = sample_arrays_closest_grouped(c, t, v, d, sample_rate)
-            if rs is not None:
-                c, t, v, d = rs
-                res = kwin.window_sweep_grouped(
-                    c, t, v, d, window_width, agg=agg, timeunit=timeunit
-                )
-        else:
-            res = kwin.window_sweep_grouped(
-                c, t, v, d, window_width, agg=agg, timeunit=timeunit
-            )
-        if res is None:
-            # packed-axis overflow: sequential per-series fallback
-            frames = []
-            for key, g in pdf.groupby(key_cols, sort=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                r = _sweep_seq(key, g)
-                for col, kv in zip(key_cols, key):
-                    r[col] = kv
-                frames.append(r[out_names])
-            if not frames:
-                return pd.DataFrame(columns=out_names)
-            return pd.concat(frames, ignore_index=True)
-        oc, ot, ov, od = res
-        if compress:
-            keep, ot, ov, od = fit_arrays_grouped(oc, ot, ov, od, compress=True)
-            oc = oc[keep]
-        key_vals = uniques[oc].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": ot, "value": ov, "validity": od})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _sweep_bucket, out_schema)
+    return apply_per_series(df, key_cols, _sweep_seq, _entries_schema(df, key_cols))
 
 
 def sliding_window_exact_relational(
@@ -458,83 +418,25 @@ def rolling_values(
     minus an as-of carry over end events, and ``engine="auto"`` routes
     those through the pure-Catalyst :func:`rolling_values_relational`
     (zero Python). min/max (order statistics need the kernel's sparse-table
-    RMQ) and ``engine="kernel"`` run the contiguous-range kernel per salt
-    bucket (one searchsorted + prefix sums / RMQ -- same argument as the
-    exact sweep); arbitrary aggregators via kernel.window.rolling."""
+    RMQ) and ``engine="kernel"`` run the contiguous-range kernel
+    (kernel.window.rolling_grouped: one searchsorted + prefix sums / RMQ --
+    same argument as the exact sweep) per salt bucket through
+    ``operators._kernel.apply_grouped``, per series on packed-axis
+    overflow; arbitrary aggregators via kernel.window.rolling."""
     if engine not in ("auto", "kernel", "relational"):
         raise ValueError(f"unknown engine {engine!r}")
     if engine == "relational" or (engine == "auto" and agg in ("sum", "mean")):
         return rolling_values_relational(
             df, key_cols, window_ms, agg=agg, compress=compress
         )
-    import numpy as np
-    import pandas as pd
-
     from ..kernel import window as kwin
-    from ..kernel.fitter import fit_arrays_grouped
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_grouped
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    return apply_grouped(
+        df, key_cols,
+        lambda c, t, v, d: kwin.rolling_grouped(c, t, v, d, window_ms, agg=agg),
+        compress=compress,
     )
-    out_names = [f.name for f in out_schema.fields]
-    agg_fns = {"sum": sum, "mean": lambda v: sum(v) / len(v),
-               "min": min, "max": max}
-
-    def _roll_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        res = kwin.rolling_grouped(
-            codes.astype(np.int64),
-            pdf["ts"].to_numpy(np.int64),
-            pdf["value"].to_numpy(np.float64),
-            pdf["validity"].to_numpy(np.int64),
-            window_ms, agg=agg,
-        )
-        if res is None:
-            # packed-axis overflow: sequential per-series fallback
-            frames = []
-            for key, g in pdf.groupby(key_cols, sort=False):
-                out = kwin.rolling(
-                    list(zip(g["ts"], g["value"], g["validity"])),
-                    agg_fns[agg], window_ms, compress=False,
-                )
-                r = pd.DataFrame(out, columns=["ts", "value", "validity"])
-                for col, kv in zip(key_cols,
-                                   key if isinstance(key, tuple) else (key,)):
-                    r[col] = kv
-                frames.append(r[out_names])
-            merged = pd.concat(frames, ignore_index=True)
-            codes, uniques = pd.factorize(
-                pd.MultiIndex.from_frame(merged[key_cols]),
-                use_na_sentinel=False,
-            )
-            oc = codes.astype(np.int64)
-            ot = merged["ts"].to_numpy(np.int64)
-            ov = merged["value"].to_numpy(np.float64)
-            od = merged["validity"].to_numpy(np.int64)
-        else:
-            oc, ot, ov, od = res
-        if compress:
-            keep, ot, ov, od = fit_arrays_grouped(oc, ot, ov, od, compress=True)
-            oc = oc[keep]
-        key_vals = uniques[oc].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": ot, "value": ov, "validity": od})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _roll_bucket, out_schema)
 
 
 def dynamic_window_exact(
@@ -560,16 +462,6 @@ def dynamic_window_exact(
     from ..kernel import window as kwin
     from ._kernel import apply_per_series
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-
     def make_agg():
         cls = getattr(kwin, _AGG_FACTORIES[agg])
         return cls(timeunit) if agg == "integral" else cls()
@@ -584,7 +476,7 @@ def dynamic_window_exact(
             columns=["ts", "value", "validity"],
         )
 
-    return apply_per_series(df, key_cols, _dyn, out_schema)
+    return apply_per_series(df, key_cols, _dyn, _entries_schema(df, key_cols))
 
 
 def dynamic_window_relational(
@@ -657,68 +549,19 @@ def sample_closest(
     ``[p - rate/2, p + rate/2)``, falling back to the entry defined at the
     point.
 
-    Runs the vectorized kernel (kernel.sample.sample_arrays_closest, pinned
-    against the sequential sampler by fuzz and against DuckDB by the
-    ts_sample_closest oracle). A pure-Catalyst twin (two as-of carries over
+    Runs the vectorized kernel (kernel.sample.sample_arrays_closest_grouped,
+    one call per salt bucket through ``operators._kernel.apply_grouped``,
+    per series on packed-axis overflow; pinned against the sequential
+    sampler by fuzz and against DuckDB by the ts_sample_closest oracle). A pure-Catalyst twin (two as-of carries over
     one per-key sort) was measured slower on every shape (sf0.01/sf0.1, 32
     cores, best-of-3): ~1.2x on the sliced query shape and 19x on dense
     grids (27.6M grid points: numpy arange + searchsorted vs 55M rows
     through two window sorts), so dense-grid generation stays in numpy."""
-    import numpy as np
-    import pandas as pd
+    from ..kernel.sample import sample_arrays_closest_grouped
+    from ._kernel import apply_grouped
 
-    from ..kernel.fitter import fit_arrays_grouped
-    from ..kernel.sample import (
-        sample_arrays_closest,
-        sample_arrays_closest_grouped,
+    return apply_grouped(
+        df, key_cols,
+        lambda c, t, v, d: sample_arrays_closest_grouped(c, t, v, d, rate),
+        compress=compress,
     )
-    from ._kernel import apply_per_bucket
-
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def _sample_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        ts = pdf["ts"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        res = sample_arrays_closest_grouped(codes, ts, val, dur, rate)
-        if res is None:
-            # packed-axis overflow: per-series loop (correct, not batched)
-            starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-            oc, og, ov, od = [], [], [], []
-            for s0, s1 in zip(starts, np.r_[starts[1:], codes.size]):
-                g, v, d = sample_arrays_closest(
-                    ts[s0:s1], val[s0:s1], dur[s0:s1], int(ts[s0]), rate
-                )
-                oc.append(np.full(len(g), codes[s0], np.int64))
-                og.append(np.asarray(g, np.int64))
-                ov.append(np.asarray(v, np.float64))
-                od.append(np.asarray(d, np.int64))
-            res = (np.concatenate(oc), np.concatenate(og),
-                   np.concatenate(ov), np.concatenate(od))
-        out_codes, g, v, d = res
-        if compress:
-            _keep, g, v, d = fit_arrays_grouped(out_codes, g, v, d,
-                                                compress=True)
-            out_codes = out_codes[_keep]
-        key_vals = uniques[out_codes].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": g, "value": v, "validity": d})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _sample_bucket, out_schema)

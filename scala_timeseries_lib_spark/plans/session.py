@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .._env import env_int
+from .._env import env_int, env_str
 
 __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 
@@ -33,18 +33,23 @@ def _default_driver_mem() -> str:
     to [8g, 32g] -- adaptive to the machine, sized so the largest
     single-query working set measured (the x48 amplified tier, ~300M
     cached points ~= 10 GiB live) fits without spill while GC latency
-    stays flat; override with $SPARK_GRAFT_DRIVER_MEM. On a real cluster
+    stays flat; override with $SPARK_GRAFT_DRIVER_MEM (a JVM size such as
+    ``12g``; anything else warns and keeps this default). On a real cluster
     the driver does no data work and the submitted --driver-memory wins."""
-    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    if env:
-        return env
     try:
         phys_gib = (
             os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
         ) >> 30
+        default = f"{min(max(8, int(phys_gib / 8)), 32)}g"
     except (ValueError, OSError, AttributeError):
-        return "8g"
-    return f"{min(max(8, int(phys_gib / 8)), 32)}g"
+        default = "8g"
+    return env_str("SPARK_GRAFT_DRIVER_MEM", default, r"\d+[kmgt]?")
+
+
+def _default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``: a positive core count, ``*`` (every
+    core) when unset or malformed."""
+    return f"local[{env_str('SPARK_GRAFT_CPUS', '*', r'[1-9][0-9]*')}]"
 
 
 def get_spark(
@@ -63,11 +68,8 @@ def get_spark(
     - shuffle partitions default to the core count here; on a real cluster
       AQE's coalescing makes a high initial value cheap.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(master or _default_master())
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",

@@ -257,7 +257,6 @@ class TierPipeline:
         lineage = {
             "run_id": run_id or f"run-{len(ckpt['runs'])}",
             "rows_in": int(rows_in),
-            "bytes_in_approx": int(rows_in) * 28,  # 3x8B numeric + key overhead
             "rows_in_by_salt": {str(r["p_salt"]): int(r["rows"]) for r in stats},
             "tiers": {},
             "started_unix": int(time.time()),

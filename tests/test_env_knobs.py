@@ -1,10 +1,13 @@
 """Integer SPARK_GRAFT_* knobs are read at import; a malformed value must
 not crash the package: not an integer -> the default, below 1 -> 1, each
-with a warning (plain integers pass through silently)."""
+with a warning (plain integers pass through silently). The session's string
+knobs (core count, driver heap) fall back to their defaults with a warning
+instead of failing later inside JVM start."""
 
 import os
 import subprocess
 import sys
+import warnings
 
 import pytest
 
@@ -35,3 +38,27 @@ def test_import_with_knob(knob, module, attr, default, raw, want, warns):
     assert proc.returncode == 0, proc.stderr
     assert int(proc.stdout.strip().splitlines()[-1]) == (default if want is None else want)
     assert (knob in proc.stderr and "RuntimeWarning" in proc.stderr) == warns, proc.stderr
+
+
+@pytest.mark.parametrize("knob,fn,raw,want", [
+    ("SPARK_GRAFT_CPUS", "_default_master", "3", "local[3]"),
+    ("SPARK_GRAFT_CPUS", "_default_master", "abc", None),
+    ("SPARK_GRAFT_CPUS", "_default_master", "0", None),
+    ("SPARK_GRAFT_DRIVER_MEM", "_default_driver_mem", "12g", "12g"),
+    ("SPARK_GRAFT_DRIVER_MEM", "_default_driver_mem", "lots", None),
+    ("SPARK_GRAFT_DRIVER_MEM", "_default_driver_mem", "8 g", None),
+])
+def test_session_string_knob(monkeypatch, knob, fn, raw, want):
+    from scala_timeseries_lib_spark.plans import session
+
+    monkeypatch.delenv(knob, raising=False)
+    default = getattr(session, fn)()
+    assert knob != "SPARK_GRAFT_CPUS" or default == "local[*]"
+    monkeypatch.setenv(knob, raw)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = getattr(session, fn)()
+    assert got == (default if want is None else want)
+    warned = [w for w in caught
+              if w.category is RuntimeWarning and knob in str(w.message)]
+    assert bool(warned) == (want is None)

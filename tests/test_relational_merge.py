@@ -299,16 +299,6 @@ def test_auto_engine_routes_named_ops_relationally(spark):
     assert "FlatMapGroupsInPandas" in df2._jdf.queryExecution().executedPlan().toString()
 
 
-def test_relational_engine_rejects_unsupported(spark):
-    a, b = _mk(spark, 81), _mk(spark, 82)
-    with pytest.raises(ValueError):
-        merge_series(a, b, ["user_id"], op="plus", engine="relational",
-                     compress=False)
-    with pytest.raises(ValueError):
-        merge_series(a, b, ["user_id"], op=lambda x, y: None,
-                     engine="relational")
-
-
 def test_relational_time_slice_identical_output(spark):
     # the hot-key escape hatch must not change results: slice at absolute
     # boundaries, merge per (key, slice), RLE-repair across borders

@@ -42,11 +42,11 @@ def pq_sides(spark, tmp_path_factory):
 def test_leaf_row_bound_on_parquet_union(spark, pq_sides):
     from scala_timeseries_lib_spark.operators.merge import (
         _leaf_row_bound,
-        _tag_sides,
+        _tag_sides_n,
     )
 
     a, b = pq_sides
-    tagged = _tag_sides(a, b, ["user_id"])
+    tagged = _tag_sides_n([a, b], ["user_id"])
     n = 22_000  # per side: 20k hot + 50*40 cold
     assert _leaf_row_bound(tagged) == 2 * n
     # filters only tighten the bound's slack, never invalidate it
@@ -84,18 +84,18 @@ def test_leaf_row_bound_voids_pandas_expansion(spark, tmp_path):
 def test_leaf_key_frame_requires_key_by_name(spark, pq_sides):
     from scala_timeseries_lib_spark.operators.merge import (
         _leaf_key_frame,
-        _tag_sides,
+        _tag_sides_n,
     )
 
     a, b = pq_sides
-    tagged = _tag_sides(a, b, ["user_id"])
+    tagged = _tag_sides_n([a, b], ["user_id"])
     lk = _leaf_key_frame(tagged, ["user_id"])
     assert lk is not None and lk.columns == ["user_id"]
     # leaf counts are a sound OVER-approximation of tagged counts
     assert lk.count() == 44_000
     # a key column the leaves do not expose by name -> no leaf probe
     renamed = a.withColumnRenamed("user_id", "uid")
-    t2 = _tag_sides(renamed, b.withColumnRenamed("user_id", "uid"), ["uid"])
+    t2 = _tag_sides_n([renamed, b.withColumnRenamed("user_id", "uid")], ["uid"])
     assert _leaf_key_frame(t2, ["uid"]) is None
 
 
@@ -134,11 +134,11 @@ def test_probe_detection_flags_only_truly_hot_keys(spark, pq_sides):
         _GUARD_SAMPLE_FRACTION,
         _GUARD_SAMPLE_SEED,
         _leaf_key_frame,
-        _tag_sides,
+        _tag_sides_n,
     )
 
     a, b = pq_sides
-    tagged = _tag_sides(a, b, ["user_id"])
+    tagged = _tag_sides_n([a, b], ["user_id"])
     lk = _leaf_key_frame(tagged, ["user_id"])
     frac = _GUARD_SAMPLE_FRACTION
     cut = int(np.ceil(5_000 * frac / 2.0))

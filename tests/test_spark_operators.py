@@ -415,6 +415,14 @@ class TestMergeCallableAndDefaults:
 
 
 class TestOffsetPackingOverflowGuard:
+    @pytest.fixture(autouse=True)
+    def one_bucket(self, monkeypatch):
+        """Every series in one salt bucket, so 2^61-span series really
+        overflow the bucket's packed axis together."""
+        from scala_timeseries_lib_spark.operators import _kernel
+
+        monkeypatch.setattr(_kernel, "_default_buckets", lambda df: 1)
+
     def test_overflow_shape_falls_back_per_series(self, spark):
         """codes.max()*stride >= 2^62 must take the per-series path and
         still produce the exact merge (the packed axis would overflow)."""
@@ -436,14 +444,17 @@ class TestOffsetPackingOverflowGuard:
         packed, _s, _b = _pack_codes(codes, ts, dur)
         assert packed is None  # the guard really trips for this shape
 
-        got = merge_series(
-            make_df(spark, left), make_df(spark, right), ["key"], op="plus"
-        )
-        for k in left:
-            expected = kmerge.merge_entries(
-                left[k], right.get(k, []), kmerge.op_non_strict_plus
+        # a named op on the kernel engine, and a Python-callable op
+        for op in ("plus", kmerge.op_non_strict_plus):
+            got = merge_series(
+                make_df(spark, left), make_df(spark, right), ["key"], op=op,
+                engine="kernel",
             )
-            assert collect_series(got, k) == expected
+            for k in left:
+                expected = kmerge.merge_entries(
+                    left[k], right.get(k, []), kmerge.op_non_strict_plus
+                )
+                assert collect_series(got, k) == expected
 
     def test_zip_and_nary_overflow_fallback(self, spark):
         from scala_timeseries_lib_spark.operators.merge import (
@@ -462,19 +473,67 @@ class TestOffsetPackingOverflowGuard:
         }
         ldf, rdf = make_df(spark, left), make_df(spark, right)
 
-        zipped = strict_zip_series(ldf, rdf, ["key"])
+        zipped = strict_zip_series(ldf, rdf, ["key"], engine="kernel")
         za = [
             (r["ts"], r["a_value"], r["b_value"], r["validity"])
             for r in zipped.filter(zipped.key == "a").orderBy("ts").collect()
         ]
         assert za == [(1_500, 1.0, 10.0, 1_000), (span + 200, 2.0, 7.0, 500)]
 
-        summed = merge_series_n([ldf, rdf], ["key"], op="plus")
+        summed = merge_series_n([ldf, rdf], ["key"], op="plus", engine="kernel")
         for k in left:
             expected = kmerge.merge_entries(
                 left[k], right.get(k, []), kmerge.op_non_strict_plus
             )
             assert collect_series(summed, k) == expected
+
+    def test_window_ops_overflow_fallback(self, spark):
+        """The sweep (plain and resampled), rolling and the sampler on the
+        same 2^61-span shape match their sequential references."""
+        from scala_timeseries_lib_spark.kernel import window as kwin
+        from scala_timeseries_lib_spark.operators.window import (
+            rolling_values,
+            sample_closest,
+            sliding_window_exact,
+        )
+
+        span, rate = 1 << 61, 1 << 58
+        series = {
+            k: [(1_000 + i, float(i), 5_000), (span + 7 * i, 2.0, 1_000 + i),
+                (span + 9_000, float(i % 2), 2_000)]
+            for i, k in enumerate("abc")
+        }
+        df = make_df(spark, series)
+
+        def rounded(rows):
+            return [(t, round(v, 9), d) for t, v, d in rows]
+
+        def seq_sweep(entries, agg, sample_rate=None):
+            out = [(t, float(a), d) for (t, _c, d), a in kwin.window_sweep(
+                entries, 3_000, agg, sample_rate) if a is not None]
+            return rounded(kfitter.fit(out, compress=True))
+
+        cases = [
+            (sliding_window_exact(df, ["key"], 3_000, "sum", engine="kernel"),
+             lambda e: seq_sweep(e, kwin.SumAggregator())),
+            (sliding_window_exact(df, ["key"], 3_000, "mean", sample_rate=rate),
+             lambda e: seq_sweep(e, kwin.MeanAggregator(), rate)),
+            (rolling_values(df, ["key"], 4_000, agg="min"),
+             lambda e: kwin.rolling(e, min, 4_000)),
+            (sample_closest(df, ["key"], rate),
+             lambda e: ksample.sample(e, e[0][0], rate, use_closest=True)),
+        ]
+        for got, reference in cases:
+            for k, entries in series.items():
+                assert rounded(collect_series(got, k)) == rounded(reference(entries))
+
+    def test_single_series_overflow_raises(self, spark):
+        from scala_timeseries_lib_spark.operators.window import sliding_window_exact
+
+        df = make_df(spark, {"a": [(0, 1.0, 1_000), (1 << 62, 2.0, 1_000)]})
+        got = sliding_window_exact(df, ["key"], 3_000, "sum", engine="kernel")
+        with pytest.raises(Exception, match=r"ValueError: .*2\^62"):
+            got.collect()
 
 
 class TestEntityCatalog:
