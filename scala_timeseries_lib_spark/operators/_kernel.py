@@ -19,7 +19,9 @@ Most operators run a grouped numpy kernel over the whole bucket through
 1. an empty bucket returns an empty frame;
 2. rows are sorted by ``(*key_cols, "ts")`` (stable) and the keys are
    factorized (``use_na_sentinel=False``, so a null key component is a
-   series of its own), giving ascending series codes;
+   series of its own), giving ascending series codes -- the exported
+   :func:`factorize_series`, which ``write_blocks`` (blocks, not entries)
+   also uses;
 3. ``kernel(codes, ts, value, validity[, side])`` runs once; ``side`` is
    passed when the input carries the merge family's side tag column. It
    returns ``(codes, ts, *values, validity)``, or ``None`` when its
@@ -33,6 +35,13 @@ Most operators run a grouped numpy kernel over the whole bucket through
    long, the ``values`` columns, ``validity`` long. A value column named by
    a string is a double (the input ``value`` is cast to float64); one given
    as a ``StructField`` keeps that type and the input is passed uncast.
+
+Kernels with no grouped form (the sequential window sweep with its queue
+aggregators and strict resample, predicate-delimited windows) run in the
+per-series mode: :func:`per_series_kernel` turns a one-series function over
+``(ts, value, validity)`` tuples into a kernel that is step 4's loop, so they
+get the same sort, factorize, RLE fit and key re-attach. This module is the
+only place a bucket is split into series.
 
 The Spark side is :func:`apply_per_bucket`, looked up as a module global
 on every call, so a wrapper installed on that name sees every grouped
@@ -50,7 +59,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .._env import env_int
 
-__all__ = ["apply_per_series", "apply_per_bucket", "apply_grouped"]
+__all__ = ["apply_per_bucket", "apply_grouped", "per_series_kernel", "factorize_series"]
 
 # Estimated (Catalyst sizeInBytes, i.e. roughly compressed-input) bytes per
 # salt bucket. Each bucket is materialized as ONE pandas frame in a Python
@@ -87,64 +96,12 @@ def _default_buckets(df: DataFrame) -> int:
     return min(max(math.ceil(est / _BUCKET_BYTES), p, 16), p * 32)
 
 
-def apply_per_series(
-    df: DataFrame,
-    key_cols: list[str],
-    series_fn,
-    out_schema,
-    n_buckets: int | None = None,
-    sort_within: str | None = "ts",
-):
-    """Run ``series_fn(key_tuple, pdf) -> pdf`` once per distinct series.
-
-    ``out_schema`` must start with the key columns. The per-series frames
-    returned by ``series_fn`` must NOT include the key columns; they are
-    attached here.
-    """
-    import pandas as pd
-
-    if n_buckets is None:
-        n_buckets = _default_buckets(df)
-
-    out_names = [f.name for f in out_schema.fields]
-
-    def _bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for key, g in pdf.groupby(key_cols, sort=False):
-            if not isinstance(key, tuple):
-                key = (key,)
-            if sort_within is not None:
-                g = g.sort_values(sort_within, kind="mergesort")
-            res = series_fn(key, g)
-            if res is None or len(res) == 0:
-                continue
-            for col, val in zip(key_cols, key):
-                res[col] = val
-            frames.append(res[out_names])
-        if not frames:
-            return pd.DataFrame(columns=out_names)
-        return pd.concat(frames, ignore_index=True)
-
-    return _dispatch(df, key_cols, _bucket, out_schema, n_buckets)
-
-
-def apply_per_bucket(
-    df: DataFrame,
-    key_cols: list[str],
-    bucket_fn,
-    out_schema,
-    n_buckets: int | None = None,
-):
+def apply_per_bucket(df: DataFrame, key_cols: list[str], bucket_fn, out_schema):
     """Run ``bucket_fn(pdf) -> pdf`` once per salt bucket (a whole batch of
     series, key columns included in both input and output). For kernels that
     can vectorize ACROSS series (e.g. the offset-packed merge) this removes
     the per-series Python loop entirely."""
-    if n_buckets is None:
-        n_buckets = _default_buckets(df)
-    return _dispatch(df, key_cols, bucket_fn, out_schema, n_buckets)
-
-
-def _dispatch(df, key_cols, bucket_fn, out_schema, n_buckets):
+    n_buckets = _default_buckets(df)
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
     )
@@ -184,6 +141,34 @@ def apply_grouped(df, key_cols, kernel, values=("value",), compress=False):
     return apply_per_bucket(df, key_cols, bucket, out_schema)
 
 
+def per_series_kernel(fn):
+    """Grouped kernel running a one-series ``fn(entries) -> entries`` over
+    ``(ts, value, validity)`` tuples through step 4's loop, once per series
+    (output values become doubles)."""
+    import numpy as np
+
+    entry = np.dtype([("ts", np.int64), ("value", np.float64), ("validity", np.int64)])
+
+    def one(codes, ts, value, validity):
+        out = np.array(fn(list(zip(ts.tolist(), value.tolist(), validity.tolist()))),
+                       dtype=entry)
+        return np.zeros(out.size, np.int64), out["ts"], out["value"], out["validity"]
+
+    return lambda codes, *cols: _per_series(one, codes, cols)
+
+
+def factorize_series(pdf, key_cols):
+    """Step 2 of the bucket contract: ``(sorted pdf, int64 codes, uniques)``."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort", ignore_index=True)
+    codes, uniques = pd.factorize(
+        pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
+    )
+    return pdf, codes.astype(np.int64), uniques
+
+
 def _grouped_bucket(pdf, key_cols, kernel, out_names, value_dtype, compress):
     import numpy as np
     import pandas as pd
@@ -192,11 +177,7 @@ def _grouped_bucket(pdf, key_cols, kernel, out_names, value_dtype, compress):
 
     if len(pdf) == 0:
         return pd.DataFrame(columns=out_names)
-    pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort", ignore_index=True)
-    codes, uniques = pd.factorize(
-        pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False
-    )
-    codes = codes.astype(np.int64)
+    pdf, codes, uniques = factorize_series(pdf, key_cols)
     cols = [pdf["ts"].to_numpy(np.int64), pdf["value"].to_numpy(value_dtype),
             pdf["validity"].to_numpy(np.int64)]
     if "side" in pdf.columns:
@@ -215,8 +196,8 @@ def _grouped_bucket(pdf, key_cols, kernel, out_names, value_dtype, compress):
 
 
 def _per_series(kernel, codes, cols):
-    """Packed-axis overflow fallback: the same kernel once per series (codes
-    0), results re-coded and concatenated."""
+    """Step 4's loop: the kernel once per series (codes 0), results re-coded
+    and concatenated. Also the body of :func:`per_series_kernel`."""
     import numpy as np
 
     starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])

@@ -80,7 +80,7 @@ def write_blocks(
     import pandas as pd
 
     from ..kernel.gorilla import compress_tuple_block_arrays
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_per_bucket, factorize_series
 
     key_fields = [entries.schema[k] for k in key_cols]
     out_schema = StructType(
@@ -101,9 +101,7 @@ def write_blocks(
     def _encode_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
             return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, _ = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
+        pdf, codes, _ = factorize_series(pdf, key_cols)
         ts = pdf["ts"].to_numpy(np.int64)
         val = pdf["value"].to_numpy(np.float64)
         dur = pdf["validity"].to_numpy(np.int64)

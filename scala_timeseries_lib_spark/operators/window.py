@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 __all__ = [
     "sliding_grid_agg",
@@ -98,16 +97,6 @@ def sliding_grid_agg(
     return grid.withColumn("value", expr)
 
 
-def _entries_schema(df: DataFrame, key_cols: list[str]) -> StructType:
-    """Key fields + ``ts`` long, ``value`` double, ``validity`` long."""
-    return StructType([
-        *(df.schema[k] for k in key_cols),
-        StructField("ts", LongType()),
-        StructField("value", DoubleType()),
-        StructField("validity", LongType()),
-    ])
-
-
 _AGG_FACTORIES = {
     "sum": "SumAggregator",
     "mean": "MeanAggregator",
@@ -132,20 +121,20 @@ def sliding_window_exact(
     """Reference-exact slidingWindow / slidingIntegral per series
     (TimeSeries.scala:412-443). One shuffle on the key.
 
-    ``agg="median"`` is the queue-aggregator case (CollectAggregator --
-    the window's whole contents ride along); it runs the sequential
-    per-series sweep since the aggregate is not expressible as reversible
-    add/drop state. For the standard aggregators
-    (sum/mean/std/min/max/integral) the whole
+    For the standard aggregators (sum/mean/std/min/max/integral) the whole
     salt bucket runs through ONE vectorized kernel call
     (kernel.window.window_sweep_grouped: prefix-sum differences and
     sparse-table range min/max over the contiguous window ranges, offset-
     packed across series; closest-in-window resampling batched via
-    sample_arrays_closest_grouped), dispatched by
-    ``operators._kernel.apply_grouped``; on packed-axis overflow the same
-    vectorized kernel reruns once per series. The sequential per-series
-    sweep remains the semantics twin (pinned equivalent in tests) and runs
-    median and strict-resample inputs. Float note: the vectorized sums
+    sample_arrays_closest_grouped); on packed-axis overflow the same
+    vectorized kernel reruns once per series. ``agg="median"`` (the
+    queue-aggregator case, CollectAggregator: the window's whole contents
+    ride along, not expressible as reversible add/drop state) and the strict
+    (``use_closest=False``) resample run the sequential sweep, the
+    vectorized kernel's semantics twin (pinned equivalent in tests), once
+    per series. Both go through ``operators._kernel.apply_grouped``, the
+    sequential sweep in its per-series mode, so a null key component is a
+    series of its own on every path. Float note: the vectorized sums
     differ from the incremental sweep at ~1e-13 relative
     (prefix-difference vs add/drop rounding), and std inflates true-zero
     variances to ~1e-7 -- round before comparing across paths/engines.
@@ -159,8 +148,6 @@ def sliding_window_exact(
     that same shape onto the relational sweep and rejects any other;
     ``engine="kernel"`` forces the kernel.
     """
-    import pandas as pd
-
     if engine not in ("auto", "kernel", "relational"):
         raise ValueError(f"unknown engine {engine!r}")
     relational = agg == "sum" and sample_rate is None
@@ -176,7 +163,7 @@ def sliding_window_exact(
         raise ValueError(f"unknown agg {agg!r}")
 
     from ..kernel import window as kwin
-    from ._kernel import apply_grouped, apply_per_series
+    from ._kernel import apply_grouped, per_series_kernel
 
     if agg in kwin._GROUPED_AGGS and (sample_rate is None or use_closest):
         from ..kernel.sample import sample_arrays_closest_grouped
@@ -192,8 +179,6 @@ def sliding_window_exact(
             )
 
         return apply_grouped(df, key_cols, _sweep, compress=compress)
-
-    from ..kernel.fitter import fit
 
     def make_agg():
         if agg == "median":
@@ -211,21 +196,12 @@ def sliding_window_exact(
             return cls(timeunit)
         return cls()
 
-    def _sweep_seq(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        entries = list(
-            zip(pdf["ts"].tolist(), pdf["value"].tolist(), pdf["validity"].tolist())
-        )
-        out = []
-        for (ts, _content, validity), a in kwin.window_sweep(
+    def _sweep_seq(entries):
+        return [(ts, a, validity) for (ts, _content, validity), a in kwin.window_sweep(
             entries, window_width, make_agg(), sample_rate, use_closest
-        ):
-            if a is not None:
-                out.append((ts, float(a), validity))
-        if compress:
-            out = fit(out, compress=True)
-        return pd.DataFrame(out, columns=["ts", "value", "validity"])
+        ) if a is not None]
 
-    return apply_per_series(df, key_cols, _sweep_seq, _entries_schema(df, key_cols))
+    return apply_grouped(df, key_cols, per_series_kernel(_sweep_seq), compress=compress)
 
 
 def sliding_window_exact_relational(
@@ -453,30 +429,26 @@ def dynamic_window_exact(
     per window spanning its loose domain.
 
     ``start_pred``/``stop_pred`` are Python callables over a (ts, value,
-    validity) tuple, evaluated in the kernel. Relational equivalents (flag +
+    validity) tuple (value as a double), evaluated in the sequential kernel
+    once per series through ``operators._kernel.apply_grouped``'s per-series
+    mode. ``agg``: sum | mean | std | min | max | integral; any other
+    raises ``ValueError`` at call time. Relational equivalents (flag +
     cumulative-stop-count sessionization) exist for column predicates -- the
     ts_dynamic_window oracle in __spark_entry__ shows the SQL shape.
     """
-    import pandas as pd
+    if agg not in _AGG_FACTORIES:
+        raise ValueError(f"unknown agg {agg!r}")
 
     from ..kernel import window as kwin
-    from ._kernel import apply_per_series
+    from ._kernel import apply_grouped, per_series_kernel
 
     def make_agg():
         cls = getattr(kwin, _AGG_FACTORIES[agg])
         return cls(timeunit) if agg == "integral" else cls()
 
-    def _dyn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        entries = list(
-            zip(pdf["ts"].tolist(), pdf["value"].tolist(), pdf["validity"].tolist())
-        )
-        out = kwin.dynamic_window(entries, start_pred, stop_pred, make_agg)
-        return pd.DataFrame(
-            [(t, float(v), d) for t, v, d in out],
-            columns=["ts", "value", "validity"],
-        )
-
-    return apply_per_series(df, key_cols, _dyn, _entries_schema(df, key_cols))
+    return apply_grouped(df, key_cols, per_series_kernel(
+        lambda entries: kwin.dynamic_window(entries, start_pred, stop_pred, make_agg)
+    ))
 
 
 def dynamic_window_relational(

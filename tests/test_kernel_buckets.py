@@ -1,6 +1,6 @@
 """Size-adaptive salt-bucket sizing for the kernel dispatch (round 6).
 
-The default n_buckets is now derived from Catalyst's driver-side size
+The salt-bucket count is derived from Catalyst's driver-side size
 estimate: tiny inputs get exactly one task wave (per-task Arrow overhead
 dominates them), huge inputs get bytes-bounded buckets (worker memory stays
 flat as data grows), and unusable estimates fall back to the old fixed
@@ -57,30 +57,9 @@ def test_unusable_estimate_falls_back_to_fixed_default(spark):
     assert _default_buckets(_Shim(df)) == max(_p(spark) * 4, 16)
 
 
-def test_explicit_n_buckets_still_wins(spark):
-    # callers that pass n_buckets bypass the estimate entirely
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    from scala_timeseries_lib_spark.operators._kernel import apply_per_bucket
-
-    df = spark.range(100).selectExpr("id as user_id", "id as ts",
-                                     "cast(id as double) as value")
-    schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("value", DoubleType()),
-    ])
-    out = apply_per_bucket(df, ["user_id"], lambda pdf: pdf, schema,
-                           n_buckets=3)
-    assert out.rdd.getNumPartitions() == 3
-    assert out.count() == 100
-
-
-def test_output_identical_across_bucket_counts(spark):
+def test_output_identical_across_bucket_counts(spark, monkeypatch):
     # bucketing is a pure physical knob: per-series kernels must produce
-    # the same rows at any bucket count
+    # the same rows at any bucket count, and the count reaches the plan
     import pandas as pd
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
@@ -102,7 +81,8 @@ def test_output_identical_across_bucket_counts(spark):
 
     rows = {}
     for nb in (1, 4, 32):
-        out = apply_per_bucket(df, ["user_id"], per_series_stats, schema,
-                               n_buckets=nb)
+        monkeypatch.setattr(_kernel, "_default_buckets", lambda df, nb=nb: nb)
+        out = apply_per_bucket(df, ["user_id"], per_series_stats, schema)
+        assert out.rdd.getNumPartitions() == nb
         rows[nb] = sorted(map(tuple, out.collect()))
     assert rows[1] == rows[4] == rows[32]

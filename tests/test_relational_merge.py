@@ -89,6 +89,16 @@ def test_relational_empty_side(spark):
     # + count over zero rows) and match the plain plan
     assert _canon(merge_series(a, empty, ["user_id"], op="plus")) == kernel
     assert _canon(merge_series(empty, empty, ["user_id"], op="plus")) == []
+    # empty left, right and both sides of the zip and the n-ary merge; the
+    # kernel engine reaches the bucket driver's empty-bucket step
+    for engine in ("auto", "kernel"):
+        for left, right in ((a, empty), (empty, a), (empty, empty)):
+            sides = f"{engine}: {left is a}, {right is a}"
+            assert _canon(strict_zip_series(
+                left, right, ["user_id"], engine=engine)) == [], sides
+            assert _canon(merge_series_n(
+                [left, right], ["user_id"], op="plus", engine=engine)
+            ) == (kernel if left is a or right is a else []), sides
 
 
 def test_relational_touching_entries_same_instant(spark):

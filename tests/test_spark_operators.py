@@ -5,6 +5,8 @@ the same logical series is pushed through (a) the pure kernel and (b) the
 Spark pipeline, and the results must agree exactly.
 """
 
+import statistics
+
 import numpy as np
 import pytest
 
@@ -13,10 +15,15 @@ from scala_timeseries_lib_spark.kernel import fitter as kfitter
 from scala_timeseries_lib_spark.kernel import integral as kintegral
 from scala_timeseries_lib_spark.kernel import merge as kmerge
 from scala_timeseries_lib_spark.kernel import sample as ksample
+from scala_timeseries_lib_spark.kernel import window as kwin
 from scala_timeseries_lib_spark.operators import series_ops as ops
 from scala_timeseries_lib_spark.operators.entries import fit_entries
 from scala_timeseries_lib_spark.operators.merge import merge_series
-from scala_timeseries_lib_spark.operators.window import sliding_grid_agg
+from scala_timeseries_lib_spark.operators.window import (
+    dynamic_window_exact,
+    sliding_grid_agg,
+    sliding_window_exact,
+)
 
 pytestmark = pytest.mark.spark
 
@@ -338,6 +345,64 @@ class TestDynamicWindowRelational:
         )
         for k in series:
             assert collect_series(rel, k) == collect_series(ex, k), k
+
+
+class TestNullKeySeries:
+    """A null key component is a series of its own on the sequential sweeps
+    and predicate windows too (pandas ``groupby`` would drop it)."""
+
+    SERIES = [
+        [(1_000, 1.0, 1_000), (2_000, 3.0, 1_000), (3_000, 0.0, 500),
+         (4_000, 5.0, 2_000), (6_000, 2.0, 1_000)],
+        [(1_500, 2.0, 1_000), (2_500, 2.0, 1_000), (3_500, 0.5, 1_000),
+         (4_500, 4.0, 500), (5_000, 3.0, 1_000)],
+    ]
+
+    @staticmethod
+    def _sweep(entries, agg, sample_rate=None):
+        out = [(t, float(a), d) for (t, _c, d), a in kwin.window_sweep(
+            entries, 2_000, agg, sample_rate, use_closest=False) if a is not None]
+        return kfitter.fit(out, compress=True)
+
+    CALLS = {
+        "median": (
+            lambda df, keys: sliding_window_exact(df, keys, 2_000, "median"),
+            lambda e: TestNullKeySeries._sweep(
+                e, kwin.CollectAggregator(fn=lambda v: statistics.median(v) if v else None)),
+        ),
+        "strict_resample": (
+            lambda df, keys: sliding_window_exact(
+                df, keys, 2_000, "mean", sample_rate=500, use_closest=False),
+            lambda e: TestNullKeySeries._sweep(e, kwin.MeanAggregator(), 500),
+        ),
+        "dynamic_window": (
+            lambda df, keys: dynamic_window_exact(
+                df, keys, start_pred=lambda e: e[1] >= 2, stop_pred=lambda e: e[1] < 1),
+            lambda e: kwin.dynamic_window(
+                e, lambda x: x[1] >= 2, lambda x: x[1] < 1, kwin.MeanAggregator),
+        ),
+    }
+
+    @pytest.mark.parametrize("keys", [[("a",), (None,)], [("g", "a"), ("g", None)]],
+                             ids=["one_column", "two_columns"])
+    @pytest.mark.parametrize("call", sorted(CALLS))
+    def test_null_key_series_kept(self, spark, call, keys):
+        run, reference = self.CALLS[call]
+        key_cols = ["key", "sub"][: len(keys[0])]
+        rows = [(*k, t, v, d) for k, es in zip(keys, self.SERIES) for t, v, d in es]
+        df = spark.createDataFrame(rows, ", ".join(
+            [f"{c} string" for c in key_cols] + ["ts long", "value double", "validity long"]))
+        got = {}
+        for r in run(df, key_cols).collect():
+            got.setdefault(tuple(r[c] for c in key_cols), []).append(
+                (r["ts"], r["value"], r["validity"]))
+        assert {k: sorted(v) for k, v in got.items()} == {
+            k: reference(es) for k, es in zip(keys, self.SERIES)}
+
+    def test_dynamic_window_rejects_unknown_agg(self, spark, series3):
+        with pytest.raises(ValueError, match="unknown agg"):
+            dynamic_window_exact(series3[2], ["key"], lambda e: True,
+                                 lambda e: False, agg="median")
 
 
 class TestMergeTimeSliced:
