@@ -8,10 +8,11 @@ series and fans out to the kernel (vectorized across the bucket where the
 kernel supports it). This is the salted-repartition scheme the north rule
 asks for: many small series cannot pile up behind one another, and AQE
 skew splitting applies underneath. A single pathological SERIES still
-lands in one bucket (its kernel is order-dependent); the escape hatch for
-that shape is time-slicing -- see ``merge_series(time_slice=...)``, which
-splits the series at absolute time boundaries and repairs the RLE at the
-borders relationally.
+lands in one bucket (its kernel is order-dependent); for the named merge
+ops that shape is handled by the merge guard's automatic time-slicing
+(``operators.merge._route_hot_keys``), which splits a measured-hot series
+at absolute time boundaries and repairs the RLE at the borders
+relationally.
 
 Most operators run a grouped numpy kernel over the whole bucket through
 :func:`apply_grouped`, which owns the bucket chores around it. Per bucket:

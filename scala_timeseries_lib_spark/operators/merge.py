@@ -1,16 +1,23 @@
 """DataFrame-level interval merges (the reference's join family, SURVEY.md 2.6).
 
-The merge is a sort-merge full-outer *interval-alignment* join on time, per
-series key. Spark's hash-partitioned cogroup does the heavy lifting (one
-shuffle per side on the key); the per-key interval logic runs vectorized in
-the numpy kernel (``kernel.merge.merge_apply_numeric``) over Arrow batches.
+A merge is a full-outer *interval-alignment* join on time, per series key:
+the sides are unioned with a side tag and grouped once (one shuffle). Each
+operator picks its plan from the call's shape and the measured key
+population; no caller option selects it:
 
-For the named numeric operators the kernel path is fully vectorized
-(searchsorted over the boundary union); a generic Python ``op`` callable is
-also supported at reduced speed (kernel.merge.merge_entries).
+- a named op with ``compress=True`` runs the pure-Catalyst boundary-union
+  plan (``_merge_tagged_relational`` and its n-ary / strict-zip siblings),
+  through the hot-key guard (``_route_hot_keys``), which time-slices keys
+  above ``HOT_KEY_THRESHOLD`` -- unless the op fills (undefined, undefined)
+  segments, which cannot be sliced;
+- a Python ``op`` callable or ``compress=False`` runs the offset-packed
+  Arrow/numpy bucket kernel (``kernel.merge``, vectorized over the
+  boundary union; the callable runs per elementary segment).
 """
 
 from __future__ import annotations
+
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -20,9 +27,6 @@ __all__ = [
     "merge_series",
     "merge_series_n",
     "strict_zip_series",
-    "merge_series_relational",
-    "merge_series_n_relational",
-    "strict_zip_series_relational",
     "NUMERIC_OPS",
     "HOT_KEY_THRESHOLD",
 ]
@@ -80,21 +84,14 @@ def _packed_sides(codes, ts, val, dur, side, n_sides, merge_fn, needs_ranges=Fal
     return (out_ts // stride, out_ts % stride + base, *rest)
 
 
-def _route_engine(engine, relational_ok, tagged, key_cols, merge_fn,
-                  skew_guard, hot_threshold, time_slice=None):
-    """The merge family's engine choice. ``"auto"`` builds the relational
-    plan ``merge_fn(tagged, time_slice)`` when ``relational_ok``, through
-    the hot-key routing when ``skew_guard``; returns None when the kernel
-    must run (``"kernel"``, or a shape only the kernel supports)."""
-    if engine not in ("auto", "kernel"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "kernel" or not relational_ok:
-        return None
-    if not skew_guard:
-        return merge_fn(tagged, time_slice)
-    return _route_hot_keys(
-        tagged, key_cols, merge_fn,
-        hot_threshold if hot_threshold is not None else HOT_KEY_THRESHOLD,
+def _fills_holes(op, left_default, right_default) -> bool:
+    """Whether ``op`` may emit a value on an (undefined, undefined)
+    segment: a callable, or minus with both defaults. Such an op cannot be
+    time-sliced (holes crossing slice borders would be filled per slice),
+    and the kernel passes it the per-series spans so packed inter-region
+    gaps stay holes."""
+    return callable(op) or (
+        op == "minus" and left_default is not None and right_default is not None
     )
 
 
@@ -104,12 +101,8 @@ def merge_series(
     key_cols: list[str],
     op="plus",
     compress: bool = True,
-    time_slice: int | None = None,
     left_default: float | None = None,
     right_default: float | None = None,
-    engine: str = "auto",
-    skew_guard: bool = True,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Merge two entries tables series-by-series.
 
@@ -126,79 +119,60 @@ def merge_series(
     with the empty series (strict ops yield nothing; non-strict ops pass the
     defined side through).
 
-    ``engine`` picks the physical strategy:
+    The plan follows from the call and the measured key population:
 
-    - ``"auto"`` (default) — named ops with ``compress=True`` run the
-      pure-Catalyst plan (:func:`merge_series_relational`, no Python stage):
-      boundary explode → one per-key window sort computing segment ``lead``
-      and per-side carried values → op expression → gaps-and-islands RLE.
-      One shuffle end-to-end; measured faster than the kernel at sf0.1 (see
-      BENCH/BASELINE.md crossover note). ``time_slice`` works here too:
-      (key, slice) window partitions plus the per-key RLE border repair.
-      Callable ops and ``compress=False`` run the kernel. With
-      ``skew_guard`` (default on), auto also
-      routes by KEY POPULATION: any key above ``hot_threshold`` (default
-      ``HOT_KEY_THRESHOLD`` = 1M entries, the measured crossover) merges
-      through an auto-sized ``time_slice`` while the rest keep the plain
-      one-shuffle plan — no caller hint needed for the pathological
-      single-series case. Identical output on every route (pinned).
-      Detection is staged cheapest-first (see ``_route_hot_keys``): a
-      no-job leaf row-count bound proves small inputs hot-key-free and
-      keeps the plan FULLY LAZY; otherwise a 1% sampled count probes for
-      candidates (one lightweight job, no materialization); only a flagged
-      candidate triggers the exact materialize-and-count routing pass.
-      Set ``skew_guard=False`` to skip even the probe (the plain relational
-      plan). The guard is skipped for ops that cannot slice (minus with
-      both defaults) and when ``time_slice`` is given.
-    - ``"kernel"`` — the offset-packed Arrow/numpy bucket kernel for every
-      op (``operators._kernel.apply_grouped``; one vectorized call per salt
-      bucket, per series only when the packed time axis would overflow).
+    - A named op with ``compress=True`` runs the pure-Catalyst plan (no
+      Python stage): boundary explode -> one per-key window sort computing
+      segment ``lead`` and per-side carried values -> op expression ->
+      gaps-and-islands RLE. One shuffle end-to-end; measured faster than
+      the kernel at sf0.1 (BENCH/BASELINE.md crossover note). It goes
+      through the hot-key guard (:func:`_route_hot_keys`): a no-job leaf
+      row-count bound from the parquet footers proves small inputs
+      hot-key-free and keeps the plan fully lazy; otherwise a 1% sampled
+      count probes for candidates (one lightweight job); only a flagged
+      candidate triggers the exact pass, which merges keys above
+      ``HOT_KEY_THRESHOLD`` (1M entries, the measured crossover) through
+      an auto-sized ``time_slice`` -- (key, slice) window partitions plus a
+      per-key RLE border repair, identical output -- while the rest keep
+      the plain plan. ``minus`` with both defaults fills (undefined,
+      undefined) segments, so it cannot slice and skips the guard.
+    - A callable op or ``compress=False`` runs the offset-packed
+      Arrow/numpy bucket kernel (``operators._kernel.apply_grouped``; one
+      vectorized call per salt bucket, per series only when the packed
+      time axis would overflow).
 
-    ``time_slice`` (ms) is the hot-series escape hatch: one series is
-    otherwise inherently sequential inside its kernel call, so a single
-    pathological key (a domain with billions of snapshots) would create a
-    straggler. With a slice width set, both sides are pre-split at absolute
-    ``k*time_slice`` boundaries JVM-side, each (key, slice) merges as an
-    independent group (the boundary-union merge is local in time), and a
-    relational gaps-and-islands pass re-merges equal contiguous runs across
-    slice borders -- the result is identical to the unsliced merge (pinned
-    by test). Requires ``compress=True`` (the border re-fit is an RLE).
+    Identical output on every route (pinned by the twin tests).
     """
-    is_callable = callable(op)
-    if not is_callable and op not in NUMERIC_OPS:
+    if not callable(op) and op not in NUMERIC_OPS:
         raise ValueError(f"unknown op {op!r}; expected callable or {NUMERIC_OPS}")
-    # ops that may emit a value on an (undefined, undefined) segment cannot
-    # be time-sliced on either engine (holes crossing slice borders would be
-    # filled per-slice), and the kernel passes them the per-series spans so
-    # packed inter-region gaps stay holes
-    needs_ranges = is_callable or (
-        op == "minus" and left_default is not None and right_default is not None
-    )
-    if time_slice is not None and needs_ranges:
-        raise ValueError(
-            "time_slice cannot be combined with an op that fills "
-            "(undefined, undefined) segments (callable op, or minus with "
-            "both defaults): holes crossing slice borders would not be "
-            "filled"
+    if callable(op) or not compress:
+        return _merge_series_kernel(
+            left, right, key_cols, op, compress, left_default, right_default
         )
     tagged = _tag_sides_n([left, right], key_cols)
-    routed = _route_engine(
-        engine, not is_callable and compress, tagged, key_cols,
-        lambda t, ts: _merge_tagged_relational(
-            t, key_cols, op=op, left_default=left_default,
-            right_default=right_default, time_slice=ts,
-        ),
-        skew_guard and time_slice is None and not needs_ranges,
-        hot_threshold, time_slice,
-    )
-    if routed is not None:
-        return routed
 
+    def build(t, time_slice):
+        return _merge_tagged_relational(
+            t, key_cols, op=op, left_default=left_default,
+            right_default=right_default, time_slice=time_slice,
+        )
+
+    if _fills_holes(op, left_default, right_default):
+        return build(tagged, None)
+    return _route_hot_keys(tagged, key_cols, build)
+
+
+def _merge_series_kernel(
+    left, right, key_cols, op="plus", compress=True, left_default=None,
+    right_default=None,
+) -> DataFrame:
+    """``merge_series``' kernel route: the offset-packed bucket kernel for
+    any op (the twin tests' reference for the relational plan)."""
     from ..kernel.merge import merge_apply_callable, merge_apply_numeric
     from ._kernel import apply_grouped
 
     def _merge(sides, valid_ranges):
-        if is_callable:
+        if callable(op):
             return merge_apply_callable(
                 *sides[0], *sides[1], op=op, compress=compress,
                 valid_ranges=valid_ranges,
@@ -209,56 +183,42 @@ def merge_series(
             valid_ranges=valid_ranges,
         )
 
-    group_cols = key_cols
-    if time_slice is not None:
-        if not compress:
-            raise ValueError("time_slice requires compress=True")
-        from .series_ops import split_at_buckets
-
-        # split_at_buckets carries the side tag through the explode
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
-    merged = apply_grouped(
-        tagged, group_cols,
+    needs_ranges = _fills_holes(op, left_default, right_default)
+    return apply_grouped(
+        _tag_sides_n([left, right], key_cols), key_cols,
         lambda c, t, v, d, side: _packed_sides(
             c, t, v, d, side, 2, _merge, needs_ranges
         ),
     )
-    if time_slice is None:
-        return merged
-    return _rle_repair(merged.drop("_slice"), key_cols)
 
 
-def _rle_repair(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Relational gaps-and-islands RLE: merge adjacent contiguous equal-value
-    entries across slice borders (one window + one aggregation, JVM-side)."""
+def _rle_repair(
+    df: DataFrame, key_cols: list[str], values=("value",)
+) -> DataFrame:
+    """Relational gaps-and-islands RLE: merge adjacent contiguous entries
+    equal on every ``values`` column (across slice borders too; one window
+    + one aggregation, JVM-side)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy("ts")
     prev_end = F.lag(F.col("ts") + F.col("validity")).over(w)
-    prev_val = F.lag("value").over(w)
+    brk = prev_end.isNull() | (prev_end != F.col("ts"))
+    for v in values:
+        brk = brk | (F.lag(v).over(w) != F.col(v))
     # NaN always breaks: Spark's NaN = NaN is true, but the kernel twins
     # compress with numpy equality (NaN != NaN), keeping NaN runs split
-    brk = F.when(
-        prev_end.isNull()
-        | (prev_end != F.col("ts"))
-        | (prev_val != F.col("value"))
-        | F.isnan(F.col("value")),
-        1,
-    ).otherwise(0)
-    island = F.sum(brk).over(
-        Window.partitionBy(*key_cols).orderBy("ts").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
+    for v in values:
+        brk = brk | F.isnan(F.col(v))
+    island = F.sum(F.when(brk, 1).otherwise(0)).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
         df.withColumn("_island", island)
         .groupBy(*key_cols, "_island")
         .agg(
             F.min("ts").alias("ts"),
-            F.min("value").alias("value"),  # equal within an island
+            # equal within an island
+            *[F.min(v).alias(v) for v in values],
             (F.max(F.col("ts") + F.col("validity")) - F.min("ts")).alias(
                 "validity"
             ),
@@ -267,9 +227,9 @@ def _rle_repair(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1):
+def _boundary_rows(tagged: DataFrame, key_cols: list[str]):
     """Explode each fitted entry into a start row (carrying ``struct(end,
-    value…)``) and an end row (carrying null), the shared scaffold of the
+    value)``) and an end row (carrying null), the shared scaffold of the
     relational merges.
 
     Returns the exploded frame plus the two windows every relational merge
@@ -283,57 +243,28 @@ def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1
     handled without a distinct."""
     from pyspark.sql import Window
 
-    value_fields = (
-        [F.col("value")] if n_value_cols == 1
-        else [F.col(f"value{i}") for i in range(n_value_cols)]
-    )
-    start = F.struct(
-        F.col("ts").alias("p"),
-        F.lit(1).alias("is_start"),
-        F.struct(
-            (F.col("ts") + F.col("validity")).alias("end"),
-            *[v.alias(f"v{i}") for i, v in enumerate(value_fields)],
-        ).alias("carry"),
-    )
+    end = F.col("ts") + F.col("validity")
+    carry = F.struct(end.alias("end"), F.col("value").alias("v0"))
     # the end row's carry is a typed null: when(False, <same struct>) keeps
     # the array element types identical without spelling the type twice
-    rows = (
-        tagged.select(
-            *key_cols,
-            "side",
-            F.explode(
-                F.array(
-                    start,
-                    F.struct(
-                        (F.col("ts") + F.col("validity")).alias("p"),
-                        F.lit(0).alias("is_start"),
-                        F.when(
-                            F.lit(False),
-                            F.struct(
-                                (F.col("ts") + F.col("validity")).alias("end"),
-                                *[
-                                    v.alias(f"v{i}")
-                                    for i, v in enumerate(value_fields)
-                                ],
-                            ),
-                        ).alias("carry"),
-                    ),
-                )
-            ).alias("ev"),
-        )
-        .select(
-            *key_cols, "side",
-            F.col("ev.p").alias("p"),
-            F.col("ev.is_start").alias("is_start"),
-            F.col("ev.carry").alias("carry"),
-        )
+    ev = F.array(
+        F.struct(F.col("ts").alias("p"), F.lit(1).alias("is_start"),
+                 carry.alias("carry")),
+        F.struct(end.alias("p"), F.lit(0).alias("is_start"),
+                 F.when(F.lit(False), carry).alias("carry")),
+    )
+    rows = tagged.select(*key_cols, "side", F.explode(ev).alias("ev")).select(
+        *key_cols, "side",
+        F.col("ev.p").alias("p"),
+        F.col("ev.is_start").alias("is_start"),
+        F.col("ev.carry").alias("carry"),
     )
     w_sort = Window.partitionBy(*key_cols).orderBy("p", "is_start")
     w_carry = w_sort.rowsBetween(Window.unboundedPreceding, 0)
     return rows, w_carry, w_sort
 
 
-def _carried_value(side_idx: int, w_carry, value_field: str = "v0"):
+def _carried_value(side_idx: int, w_carry):
     """Value of side ``side_idx`` active on the segment starting at this
     row's ``p``: last start-carry of that side, still covering p."""
     carry = F.last(
@@ -343,7 +274,7 @@ def _carried_value(side_idx: int, w_carry, value_field: str = "v0"):
         ),
         ignorenulls=True,
     ).over(w_carry)
-    return F.when(carry["end"] > F.col("p"), carry[value_field])
+    return F.when(carry["end"] > F.col("p"), carry["v0"])
 
 
 def _merge_value_expr(op, a, b, left_default, right_default):
@@ -389,65 +320,21 @@ def _merge_value_expr(op, a, b, left_default, right_default):
     raise ValueError(f"unknown relational op {op!r}")
 
 
-def merge_series_relational(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    op: str = "plus",
-    left_default: float | None = None,
-    right_default: float | None = None,
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst binary interval merge (TimeSeriesMerger.scala:13-196
-    semantics, zero Python stages).
+def _segments(tagged, key_cols, n_sides, time_slice, values, keep):
+    """The relational merges' shared body: elementary segments of the
+    side-tagged union, before the RLE.
 
-    Shape: explode each fitted entry into (start, end) boundary rows; ONE
-    per-key window sort yields both the elementary segment ``[p, lead(p))``
-    and each side's active value on it (running ``last`` of the side's
-    start-carry, masked by its ``end``); the kernel's op table runs as a
-    CASE expression; gaps-and-islands RLE-compresses equal contiguous runs.
-    One shuffle end-to-end — the islands window and final groupBy reuse the
-    per-key hash partitioning (``(key)`` satisfies the ``(key, island)``
-    clustering), and the whole plan is JVM codegen + two sorts.
+    With ``time_slice`` (ms) both sides are first pre-split at absolute
+    ``k*time_slice`` boundaries, so every (key, slice) is its own window
+    partition -- the hot-key escape: one key is otherwise one sort task.
+    The boundary-union merge is local in time, and the caller's per-key
+    RLE re-merges equal runs across slice borders, so the output is
+    identical (pinned by test). Not valid for ops that fill (undefined,
+    undefined) segments: holes crossing borders would be filled per slice.
 
-    ``time_slice`` (ms) is the hot-KEY escape hatch, same contract as the
-    kernel path: one key is otherwise one window partition (a single sort
-    task), so a pathological series would straggle. With a slice width set,
-    both sides are pre-split at absolute ``k*time_slice`` boundaries, every
-    (key, slice) merges as an independent window partition, and the final
-    gaps-and-islands pass (which runs per KEY regardless) re-merges equal
-    contiguous runs across slice borders — identical output, pinned by
-    test. Not valid for ops that fill (undefined, undefined) segments
-    (minus with both defaults): interior holes crossing borders would be
-    filled per-slice. ``merge_series(engine="auto")`` picks the slice
-    automatically for measured-hot keys (see ``skew_guard``).
-
-    Matches ``merge_series(engine="kernel", compress=True)`` exactly; pinned
-    by the randomized twin test (tests/test_relational_merge.py)."""
-    if time_slice is not None and (
-        op == "minus" and left_default is not None and right_default is not None
-    ):
-        raise ValueError(
-            "time_slice cannot be combined with an op that fills "
-            "(undefined, undefined) segments"
-        )
-    return _merge_tagged_relational(
-        _tag_sides_n([left, right], key_cols), key_cols, op=op,
-        left_default=left_default, right_default=right_default,
-        time_slice=time_slice,
-    )
-
-
-def _merge_tagged_relational(
-    tagged: DataFrame,
-    key_cols: list[str],
-    op: str,
-    left_default: float | None = None,
-    right_default: float | None = None,
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Relational merge body over an already side-tagged union frame (the
-    skew guard feeds filtered subsets of one materialized union here)."""
+    ``values(carried)`` maps the per-side carried values to the output
+    value columns; ``keep`` lists the row conditions besides a positive
+    validity. Returns key columns, ``ts``, ``validity`` and the values."""
     group_cols = list(key_cols)
     if time_slice is not None:
         from .series_ops import split_at_buckets
@@ -458,19 +345,54 @@ def _merge_tagged_relational(
         )
         group_cols = [*key_cols, "_slice"]
     rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
-    a = _carried_value(0, w_carry)
-    b = _carried_value(1, w_carry)
+    cond = F.col("validity").isNotNull() & (F.col("validity") > 0)
+    for c in keep:
+        cond = cond & c
     segs = rows.select(
         *group_cols,
         F.col("p").alias("ts"),
         (F.lead("p").over(w_sort) - F.col("p")).alias("validity"),
-        _merge_value_expr(op, a, b, left_default, right_default).alias("value"),
-    ).where(F.col("validity").isNotNull() & (F.col("validity") > 0)
-            # NaN results drop too: the kernel twin uses NaN as its hole
-            # sentinel, so a NaN input value yields a hole there; match it
-            & F.col("value").isNotNull() & ~F.isnan("value"))
+        *values([_carried_value(i, w_carry) for i in range(n_sides)]),
+    ).where(cond)
     if time_slice is not None:
         segs = segs.drop("_slice")
+    return segs
+
+
+def _nan_as_null(col: str):
+    """NaN surfaces as null, like the kernel twins' NaN does across the
+    Arrow boundary."""
+    return F.when(~F.isnan(col), F.col(col)).alias(col)
+
+
+def _merge_tagged_relational(
+    tagged: DataFrame,
+    key_cols: list[str],
+    op: str,
+    left_default: float | None = None,
+    right_default: float | None = None,
+    time_slice: int | None = None,
+) -> DataFrame:
+    """Pure-Catalyst binary interval merge (TimeSeriesMerger.scala:13-196
+    semantics, zero Python stages) over the side-tagged union.
+
+    Shape: explode each fitted entry into (start, end) boundary rows; ONE
+    per-key window sort yields both the elementary segment ``[p, lead(p))``
+    and each side's active value on it (running ``last`` of the side's
+    start-carry, masked by its ``end``); the kernel's op table runs as a
+    CASE expression; gaps-and-islands RLE-compresses equal contiguous runs.
+    One shuffle end-to-end -- the islands window and final groupBy reuse
+    the per-key hash partitioning (``(key)`` satisfies the ``(key, island)``
+    clustering). Matches :func:`_merge_series_kernel` with
+    ``compress=True`` exactly (tests/test_relational_merge.py)."""
+    segs = _segments(
+        tagged, key_cols, 2, time_slice,
+        lambda v: [_merge_value_expr(op, *v, left_default, right_default)
+                   .alias("value")],
+        # NaN results drop too: the kernel twin uses NaN as its hole
+        # sentinel, so a NaN input value yields a hole there; match it
+        [F.col("value").isNotNull(), ~F.isnan("value")],
+    )
     return _rle_repair(segs, key_cols).select(
         *key_cols, "ts", "value", "validity"
     )
@@ -491,13 +413,13 @@ _MAX_HOT_KEYS = 64
 # sampled hot-key detection (guide §2.5: a 1M-entry key cannot hide from a
 # 1% sample): detection runs on tagged.sample(_GUARD_SAMPLE_FRACTION) with
 # the threshold halved for margin. Chernoff bound on the false-negative
-# rate: a truly hot key (n >= hot_threshold) yields Binomial(n, 0.01)
+# rate: a truly hot key (n >= HOT_KEY_THRESHOLD) yields Binomial(n, 0.01)
 # sampled rows with mean >= 10_000 at the default threshold; the halved cut
 # (5_000) is missed with P < exp(-mean/8) ~ e^-1250 -- never. Sampling is
-# only used when hot_threshold * fraction >= _GUARD_SAMPLE_MIN_ROWS, i.e.
-# the expected sample of a threshold-sized key is big enough for that bound
-# to have teeth; below it (tiny thresholds, only seen in tests) detection
-# falls back to the exact materialize-and-count pass.
+# only used when HOT_KEY_THRESHOLD * fraction >= _GUARD_SAMPLE_MIN_ROWS,
+# i.e. the expected sample of a threshold-sized key is big enough for that
+# bound to have teeth; below it (tiny thresholds, only seen in tests)
+# detection falls back to the exact materialize-and-count pass.
 _GUARD_SAMPLE_FRACTION = 0.01
 _GUARD_SAMPLE_SEED = 0xC0FFEE
 _GUARD_SAMPLE_MIN_ROWS = 50
@@ -572,8 +494,9 @@ def _leaf_row_bound(df: DataFrame) -> int | None:
                 n_files += 1
                 if n_files > _GUARD_BOUND_MAX_FILES:
                     return None
+                # inputFiles() returns encoded URIs (a space reads %20)
                 if f.startswith("file:"):
-                    f = f[5:]
+                    f = unquote(urlsplit(f).path)
                 elif "://" in f:
                     return None  # remote store: footers are not a free read
                 total += pq.ParquetFile(f).metadata.num_rows
@@ -612,7 +535,9 @@ def _leaf_key_frame(df: DataFrame, key_cols: list[str]) -> DataFrame | None:
             names = {f.name() for f in rel.schema().fields()}
             if not all(k in names for k in key_cols):
                 return None
-            files = list(rel.location().inputFiles())
+            # decoded, or Spark's path parser would encode them twice
+            files = [unquote(f) if f.startswith("file:") else f
+                     for f in rel.location().inputFiles()]
             if not files:
                 return None
             parts.append(spark.read.parquet(*files).select(*key_cols))
@@ -641,7 +566,6 @@ def _route_hot_keys(
     tagged: DataFrame,
     key_cols: list[str],
     merge_fn,
-    hot_threshold: int,
 ) -> DataFrame:
     """AQE-style skew routing shared by the whole relational merge family
     (the north rule's hot-domain mandate, BASELINE.json:14). Detection is
@@ -650,22 +574,22 @@ def _route_hot_keys(
 
     1. **Row-count floor, no job.** If the plan's leaf row-count bound
        (:func:`_leaf_row_bound`, parquet footers -- sound because the merge
-       input plan has no row-expanding operator) is ``<= hot_threshold``,
-       NO key can be hot: return the fully lazy plain plan untouched.
+       input plan has no row-expanding operator) is at most
+       ``HOT_KEY_THRESHOLD``, NO key can be hot: return the fully lazy plain plan untouched.
     2. **Sampled probe, one lightweight job.** Per-key counts over a
        ``_GUARD_SAMPLE_FRACTION`` sample, flagged at half the scaled
        threshold -- a hot key cannot hide from a 1% sample (Chernoff bound
        above). No materialization, no checkpoint: the probe recomputes the
        input lineage once, but moves only sampled keys through a tiny
        partial-aggregated shuffle. Nothing flagged -> fully lazy plain
-       plan. (Used only when ``hot_threshold * fraction >=
+       plan. (Used only when ``HOT_KEY_THRESHOLD * fraction >=
        _GUARD_SAMPLE_MIN_ROWS``; tiny thresholds go straight to 3.)
     3. **Exact routing, rare path.** Only with a flagged candidate is the
        projected union materialized ONCE (``localCheckpoint`` -- the same
        bytes the merge shuffle was about to move anyway) and counted
        exactly, then routed:
 
-       - no key above ``hot_threshold``      -> the plain one-shuffle plan;
+       - no key above the threshold          -> the plain one-shuffle plan;
        - a few hot keys (<= _MAX_HOT_KEYS)   -> hot keys merge sliced (each
          key's OWN width, sized so each (key, slice) holds
          ~_HOT_SLICE_TARGET entries; keys are grouped into power-of-two
@@ -676,8 +600,8 @@ def _route_hot_keys(
 
     ``merge_fn(tagged_subset, time_slice_or_None)`` builds the engine plan.
     Output is identical on every route (pinned by tests); only the physical
-    window partitioning changes. Callers who cannot afford even the sampled
-    probe set ``skew_guard=False``.
+    window partitioning changes. ``HOT_KEY_THRESHOLD`` is read at call
+    time.
 
     Failure modes, documented: ``localCheckpoint`` (rare path only) is
     non-reliable storage -- on a real cluster an executor loss invalidates
@@ -690,13 +614,13 @@ def _route_hot_keys(
     what the round-5 guard did on EVERY merge.
     """
     bound = _leaf_row_bound(tagged)
-    if bound is not None and bound <= hot_threshold:
+    if bound is not None and bound <= HOT_KEY_THRESHOLD:
         return merge_fn(tagged, None)
     frac = _GUARD_SAMPLE_FRACTION
-    if hot_threshold * frac >= _GUARD_SAMPLE_MIN_ROWS:
+    if HOT_KEY_THRESHOLD * frac >= _GUARD_SAMPLE_MIN_ROWS:
         import math  # noqa: PLC0415
 
-        cut = math.ceil(hot_threshold * frac / 2.0)
+        cut = math.ceil(HOT_KEY_THRESHOLD * frac / 2.0)
         # probe the cheapest sound over-approximation available: the raw
         # leaf key columns (a column-pruned parquet scan, no lineage
         # shuffles/windows) when the plan allows it, the real tagged
@@ -722,7 +646,7 @@ def _route_hot_keys(
             F.min("ts").alias("_lo"),
             F.max(F.col("ts") + F.col("validity")).alias("_hi"),
         )
-        .filter(F.col("_n") > hot_threshold)
+        .filter(F.col("_n") > HOT_KEY_THRESHOLD)
         .limit(_MAX_HOT_KEYS + 1)
         .collect()
     )
@@ -772,24 +696,6 @@ def _tag_sides_n(dfs: list[DataFrame], key_cols: list[str]) -> DataFrame:
     return tagged
 
 
-def merge_series_n_relational(
-    dfs: list[DataFrame],
-    key_cols: list[str],
-    op: str = "plus",
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst k-ary merge (``plus`` / ``plus_strict``), same
-    single-sort shape as the binary relational merge with one carry per
-    side. ``time_slice`` is the same hot-key escape as the binary engine
-    (per-(key, slice) window partitions, per-key RLE border repair —
-    identical output, pinned); the n-ary ops are hole-safe to slice (no
-    value on all-undefined segments)."""
-    return _merge_n_tagged_relational(
-        _tag_sides_n(dfs, key_cols), key_cols, len(dfs), op=op,
-        time_slice=time_slice,
-    )
-
-
 def _merge_n_tagged_relational(
     tagged: DataFrame,
     key_cols: list[str],
@@ -797,60 +703,30 @@ def _merge_n_tagged_relational(
     op: str,
     time_slice: int | None = None,
 ) -> DataFrame:
-    group_cols = list(key_cols)
-    if time_slice is not None:
-        from .series_ops import split_at_buckets
+    """Pure-Catalyst k-ary merge (``plus`` / ``plus_strict``), same
+    single-sort shape as the binary merge with one carry per side; the
+    n-ary ops are hole-safe to slice (no value on all-undefined
+    segments)."""
 
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
-    rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
-    vals = [_carried_value(i, w_carry) for i in range(n_sides)]
-    total = None
-    for v in vals:
-        c = F.coalesce(v, F.lit(0.0))
-        total = c if total is None else total + c
-    n_def = None
-    for v in vals:
-        d = F.when(v.isNotNull(), 1).otherwise(0)
-        n_def = d if n_def is None else n_def + d
-    if op == "plus":
-        value = F.when(n_def > 0, total)
-    elif op == "plus_strict":
-        value = F.when(n_def == n_sides, total)
-    else:
-        raise ValueError(f"unknown n-ary relational op {op!r}")
-    segs = rows.select(
-        *group_cols,
-        F.col("p").alias("ts"),
-        (F.lead("p").over(w_sort) - F.col("p")).alias("validity"),
-        value.alias("value"),
-    ).where(F.col("validity").isNotNull() & (F.col("validity") > 0)
-            & F.col("value").isNotNull())
-    if time_slice is not None:
-        segs = segs.drop("_slice")
-    # NaN sums stay (split by the islands' NaN break) but surface as null,
-    # exactly like the kernel twin's NaN does across the Arrow boundary
-    return _rle_repair(segs, key_cols).select(
-        *key_cols, "ts",
-        F.when(~F.isnan("value"), F.col("value")).alias("value"),
-        "validity",
+    def value(vals):
+        total = None
+        for v in vals:
+            c = F.coalesce(v, F.lit(0.0))
+            total = c if total is None else total + c
+        n_def = None
+        for v in vals:
+            d = F.when(v.isNotNull(), 1).otherwise(0)
+            n_def = d if n_def is None else n_def + d
+        defined = n_def > 0 if op == "plus" else n_def == n_sides
+        return [F.when(defined, total).alias("value")]
+
+    segs = _segments(
+        tagged, key_cols, n_sides, time_slice, value,
+        [F.col("value").isNotNull()],
     )
-
-
-def strict_zip_series_relational(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst strictZip (TimeSeries.scala:335): segments where BOTH
-    sides are defined, values carried as a pair; RLE merges contiguous runs
-    equal on BOTH values. ``time_slice`` = the hot-key escape (identical
-    output, per-key pair-RLE repairs the borders)."""
-    return _zip_tagged_relational(
-        _tag_sides_n([left, right], key_cols), key_cols, time_slice=time_slice
+    # NaN sums stay (split by the islands' NaN break)
+    return _rle_repair(segs, key_cols).select(
+        *key_cols, "ts", _nan_as_null("value"), "validity"
     )
 
 
@@ -859,65 +735,18 @@ def _zip_tagged_relational(
     key_cols: list[str],
     time_slice: int | None = None,
 ) -> DataFrame:
-    from pyspark.sql import Window
-
-    group_cols = list(key_cols)
-    if time_slice is not None:
-        from .series_ops import split_at_buckets
-
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
-    rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
-    a = _carried_value(0, w_carry)
-    b = _carried_value(1, w_carry)
-    segs = rows.select(
-        *group_cols,
-        F.col("p").alias("ts"),
-        (F.lead("p").over(w_sort) - F.col("p")).alias("validity"),
-        a.alias("a_value"),
-        b.alias("b_value"),
-    ).where(
-        F.col("validity").isNotNull() & (F.col("validity") > 0)
-        & F.col("a_value").isNotNull() & F.col("b_value").isNotNull()
+    """Pure-Catalyst strictZip (TimeSeries.scala:335): segments where BOTH
+    sides are defined, values carried as a pair; the RLE merges contiguous
+    runs equal on BOTH values."""
+    segs = _segments(
+        tagged, key_cols, 2, time_slice,
+        lambda v: [v[0].alias("a_value"), v[1].alias("b_value")],
+        [F.col("a_value").isNotNull(), F.col("b_value").isNotNull()],
     )
-    if time_slice is not None:
-        segs = segs.drop("_slice")
-    # gaps-and-islands on the value PAIR
-    w = Window.partitionBy(*key_cols).orderBy("ts")
-    prev_end = F.lag(F.col("ts") + F.col("validity")).over(w)
-    brk = F.when(
-        prev_end.isNull()
-        | (prev_end != F.col("ts"))
-        | (F.lag("a_value").over(w) != F.col("a_value"))
-        | (F.lag("b_value").over(w) != F.col("b_value"))
-        # numpy twin keeps NaN runs split (NaN != NaN there)
-        | F.isnan(F.col("a_value"))
-        | F.isnan(F.col("b_value")),
-        1,
-    ).otherwise(0)
-    island = F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        segs.withColumn("_island", island)
-        .groupBy(*key_cols, "_island")
-        .agg(
-            F.min("ts").alias("ts"),
-            F.min("a_value").alias("a_value"),
-            F.min("b_value").alias("b_value"),
-            (F.max(F.col("ts") + F.col("validity")) - F.min("ts")).alias(
-                "validity"
-            ),
-        )
-        .drop("_island")
-        # NaN pair slots surface as null, like the kernel twin's NaN does
-        # across the Arrow boundary (runs already split by the NaN break)
-        .select(
-            *key_cols, "ts",
-            F.when(~F.isnan("a_value"), F.col("a_value")).alias("a_value"),
-            F.when(~F.isnan("b_value"), F.col("b_value")).alias("b_value"),
-            "validity",
-        )
+    # NaN pair slots stay (runs already split by the NaN break)
+    return _rle_repair(segs, key_cols, values=("a_value", "b_value")).select(
+        *key_cols, "ts", _nan_as_null("a_value"), _nan_as_null("b_value"),
+        "validity",
     )
 
 
@@ -926,30 +755,27 @@ def strict_zip_series(
     right: DataFrame,
     key_cols: list[str],
     compress: bool = True,
-    engine: str = "auto",
-    skew_guard: bool = True,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """strictZip (TimeSeries.scala:335): tuple-valued segments where BOTH
     series are defined. Output: key cols + ts, a_value, b_value, validity.
-    ``engine="auto"`` routes compressed zips through the pure-Catalyst path
-    (strict_zip_series_relational) with the same automatic hot-key routing
-    as ``merge_series`` (``skew_guard``, _route_hot_keys; without the guard
-    the plain relational plan); ``compress=False`` and ``engine="kernel"``
-    run the offset-packed single-call bucket kernel."""
-    tagged = _tag_sides_n([left, right], key_cols)
-    routed = _route_engine(
-        engine, compress, tagged, key_cols,
+    With ``compress=True`` the pure-Catalyst plan runs, through the same
+    hot-key guard as ``merge_series`` (:func:`_route_hot_keys`);
+    ``compress=False`` runs the offset-packed single-call bucket kernel."""
+    if not compress:
+        return _strict_zip_kernel(left, right, key_cols, compress)
+    return _route_hot_keys(
+        _tag_sides_n([left, right], key_cols), key_cols,
         lambda t, ts: _zip_tagged_relational(t, key_cols, time_slice=ts),
-        skew_guard, hot_threshold,
     )
-    if routed is not None:
-        return routed
+
+
+def _strict_zip_kernel(left, right, key_cols, compress=True) -> DataFrame:
+    """``strict_zip_series``' kernel route (the twin tests' reference)."""
     from ..kernel.merge import strict_zip_arrays
     from ._kernel import apply_grouped
 
     return apply_grouped(
-        tagged, key_cols,
+        _tag_sides_n([left, right], key_cols), key_cols,
         lambda c, t, v, d, side: _packed_sides(
             c, t, v, d, side, 2,
             lambda sides, _r: strict_zip_arrays(
@@ -960,14 +786,14 @@ def strict_zip_series(
     )
 
 
+_N_ARY_OPS = ("plus", "plus_strict")
+
+
 def merge_series_n(
     dfs: list[DataFrame],
     key_cols: list[str],
     op: str = "plus",
     compress: bool = True,
-    engine: str = "auto",
-    skew_guard: bool = True,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """K-ary interval merge (TimeSeriesMerger.scala:64-79 generalized):
     merge k entries tables series-by-series in one pass over the boundary
@@ -975,30 +801,36 @@ def merge_series_n(
     re-shuffle at every step).
 
     ``op``: ``plus`` (non-strict sum of defined slots) or ``plus_strict``
-    (defined only where all k sides are). One shuffle total: all sides are
-    unioned with a side tag and grouped once. ``engine="auto"`` routes
-    compressed merges through the pure-Catalyst path
-    (merge_series_n_relational) with the same automatic hot-key routing as
-    ``merge_series`` (``skew_guard``, _route_hot_keys; without the guard
-    the plain relational plan); ``compress=False`` and ``engine="kernel"``
-    run the offset-packed Arrow kernel.
+    (defined only where all k sides are); any other op, or an empty
+    ``dfs``, raises ``ValueError`` at call time. One shuffle total: all
+    sides are unioned with a side tag and grouped once. With
+    ``compress=True`` the pure-Catalyst plan runs, through the same hot-key
+    guard as ``merge_series`` (:func:`_route_hot_keys`); ``compress=False``
+    runs the offset-packed Arrow kernel.
     """
-    n_sides = len(dfs)
-    tagged = _tag_sides_n(dfs, key_cols)
-    routed = _route_engine(
-        engine, compress, tagged, key_cols,
+    if op not in _N_ARY_OPS:
+        raise ValueError(f"unknown n-ary op {op!r}; expected one of {_N_ARY_OPS}")
+    if not dfs:
+        raise ValueError("merge_series_n needs at least one side")
+    if not compress:
+        return _merge_series_n_kernel(dfs, key_cols, op, compress)
+    return _route_hot_keys(
+        _tag_sides_n(dfs, key_cols), key_cols,
         lambda t, ts: _merge_n_tagged_relational(
-            t, key_cols, n_sides, op=op, time_slice=ts
+            t, key_cols, len(dfs), op=op, time_slice=ts
         ),
-        skew_guard, hot_threshold,
     )
-    if routed is not None:
-        return routed
+
+
+def _merge_series_n_kernel(dfs, key_cols, op="plus", compress=True) -> DataFrame:
+    """``merge_series_n``' kernel route (the twin tests' reference)."""
     from ..kernel.merge import merge_apply_numeric_n
     from ._kernel import apply_grouped
 
+    # the kernel ships to the workers: capture the side count, not the frames
+    n_sides = len(dfs)
     return apply_grouped(
-        tagged, key_cols,
+        _tag_sides_n(dfs, key_cols), key_cols,
         lambda c, t, v, d, side: _packed_sides(
             c, t, v, d, side, n_sides,
             lambda sides, _r: merge_apply_numeric_n(sides, op=op, compress=compress),

@@ -13,9 +13,10 @@ Two execution strategies, chosen by semantics (SURVEY.md 2.9 / 3.3):
   series group; the un-resampled ``sum`` sweep runs as a pure-Catalyst
   boundary union (``sliding_window_exact_relational``).
 
-One engine per shape: ``sample_closest`` is kernel-only; each relational
-engine here (rolling sum/mean, dynamic window over column predicates, the
-exact ``sum`` sweep) is the one ``engine="auto"`` picks for its shape.
+One engine per shape, picked by the operator from the call's shape, never
+by a caller option: ``sample_closest`` is kernel-only; the un-resampled
+exact ``sum`` sweep and ``rolling`` sum/mean run relationally; every other
+window shape runs the kernel.
 """
 
 from __future__ import annotations
@@ -116,7 +117,6 @@ def sliding_window_exact(
     use_closest: bool = True,
     timeunit: str = "ms",
     compress: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Reference-exact slidingWindow / slidingIntegral per series
     (TimeSeries.scala:412-443). One shuffle on the key.
@@ -139,26 +139,29 @@ def sliding_window_exact(
     (prefix-difference vs add/drop rounding), and std inflates true-zero
     variances to ~1e-7 -- round before comparing across paths/engines.
 
-    ``"auto"`` routes by MEASUREMENT (BENCH/BASELINE.md exact-sweep
-    crossover row): the un-resampled ``sum`` sweep goes to the zero-Python
+    The plan is chosen by MEASUREMENT (BENCH/BASELINE.md exact-sweep
+    crossover row): the un-resampled ``sum`` sweep runs the zero-Python
     :func:`sliding_window_exact_relational` (2.5x the kernel at sf0.1 --
     the sweep is pure boundary algebra, Catalyst's home turf); every other
-    shape stays on the kernel (the dense resample grid is numpy's home
-    turf, same verdict as sample_closest). ``engine="relational"`` forces
-    that same shape onto the relational sweep and rejects any other;
-    ``engine="kernel"`` forces the kernel.
+    shape runs the kernel (the dense resample grid is numpy's home turf,
+    same verdict as sample_closest).
     """
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    relational = agg == "sum" and sample_rate is None
-    if engine == "relational" and not relational:
-        raise ValueError(
-            "engine='relational' supports only the un-resampled sum sweep"
-        )
-    if relational and engine != "kernel":
+    if agg == "sum" and sample_rate is None:
         return sliding_window_exact_relational(
             df, key_cols, window_width, compress=compress
         )
+    return _sliding_window_exact_kernel(
+        df, key_cols, window_width, agg, sample_rate, use_closest, timeunit,
+        compress,
+    )
+
+
+def _sliding_window_exact_kernel(
+    df, key_cols, window_width, agg, sample_rate=None, use_closest=True,
+    timeunit="ms", compress=True,
+) -> DataFrame:
+    """``sliding_window_exact``'s kernel route for every shape (the twin
+    tests' reference for the relational ``sum`` sweep)."""
     if agg not in _AGG_FACTORIES and agg != "median":
         raise ValueError(f"unknown agg {agg!r}")
 
@@ -227,12 +230,12 @@ def sliding_window_exact_relational(
     0.0 (the running sum of a fully retracted prefix). NaN values surface
     as null, matching the kernel twin's NaN across the Arrow boundary.
 
-    Matches the sequential sweep bit-for-bit and
-    ``sliding_window_exact(engine="kernel")`` up to its ~1e-13 rounding
-    (twin-tested, tests/test_relational_merge.py); crossover vs the
-    vectorized kernel is measured in BENCH/BASELINE.md and sets the
-    ``auto`` default."""
-    from .merge import _rle_repair
+    Matches the sequential sweep bit-for-bit and the vectorized kernel
+    route up to its ~1e-13 rounding (twin-tested,
+    tests/test_relational_merge.py); the crossover vs the vectorized
+    kernel is measured in BENCH/BASELINE.md and sets the routing in
+    :func:`sliding_window_exact`."""
+    from .merge import _nan_as_null, _rle_repair
 
     if window_width <= 0:
         raise ValueError("Needs a strictly positive window size")
@@ -277,12 +280,7 @@ def sliding_window_exact_relational(
     ).where(F.col("validity") > 0)
     if compress:
         out = _rle_repair(out, key_cols)
-    # NaN sums surface as null, like the kernel's NaN across Arrow
-    return out.select(
-        *key_cols, "ts",
-        F.when(~F.isnan("value"), F.col("value")).alias("value"),
-        "validity",
-    )
+    return out.select(*key_cols, "ts", _nan_as_null("value"), "validity")
 
 
 def rolling_values_relational(
@@ -311,7 +309,7 @@ def rolling_values_relational(
     end events first at ties (``end_j <= p`` removes), and take the
     running last end-carry at each probe. Two window sorts over one
     per-key exchange; the optional RLE compression is the merge engine's
-    gaps-and-islands pass. Matches ``rolling_values(engine="kernel")``
+    gaps-and-islands pass. Matches the contiguous-range kernel route
     exactly (twin-tested)."""
     from .merge import _rle_repair
 
@@ -381,7 +379,6 @@ def rolling_values(
     window_ms: int,
     agg: str = "sum",
     compress: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """NumericTimeSeries.rolling (scala:49-64): every entry's value becomes
     the aggregate of the VALUES of entries overlapping ``[ts - window_ms,
@@ -391,20 +388,26 @@ def rolling_values(
     Not expressible as a Spark range frame (an entry enters the window
     through its END time, which is another row's attribute) -- but for the
     DECOMPOSABLE aggregates (sum/mean) it IS expressible as cumulative sums
-    minus an as-of carry over end events, and ``engine="auto"`` routes
-    those through the pure-Catalyst :func:`rolling_values_relational`
-    (zero Python). min/max (order statistics need the kernel's sparse-table
-    RMQ) and ``engine="kernel"`` run the contiguous-range kernel
-    (kernel.window.rolling_grouped: one searchsorted + prefix sums / RMQ --
-    same argument as the exact sweep) per salt bucket through
-    ``operators._kernel.apply_grouped``, per series on packed-axis
-    overflow; arbitrary aggregators via kernel.window.rolling."""
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational" or (engine == "auto" and agg in ("sum", "mean")):
+    minus an as-of carry over end events, so those run the pure-Catalyst
+    :func:`rolling_values_relational` (zero Python). Every other agg
+    (min/max: order statistics need the kernel's sparse-table RMQ) runs
+    the contiguous-range kernel (kernel.window.rolling_grouped: one
+    searchsorted + prefix sums / RMQ -- same argument as the exact sweep)
+    per salt bucket through ``operators._kernel.apply_grouped``, per series
+    on packed-axis overflow; arbitrary aggregators via
+    kernel.window.rolling."""
+    if agg in ("sum", "mean"):
         return rolling_values_relational(
             df, key_cols, window_ms, agg=agg, compress=compress
         )
+    return _rolling_values_kernel(df, key_cols, window_ms, agg, compress)
+
+
+def _rolling_values_kernel(
+    df, key_cols, window_ms, agg="sum", compress=True
+) -> DataFrame:
+    """``rolling_values``' kernel route for every agg (the twin tests'
+    reference for the relational sum/mean)."""
     from ..kernel import window as kwin
     from ._kernel import apply_grouped
 

@@ -46,3 +46,29 @@ def test_package_imports_resolve():
                 missing.append(f"{path.relative_to(ROOT)}:{line}: {ex}")
     assert seen > 200
     assert not missing, "\n".join(missing)
+
+
+def test_operators_take_no_plan_selector():
+    """Each operator picks its own plan: no public function in
+    ``operators/`` takes a plan-selector parameter, and the public
+    relational merge wrappers and the engine router are gone."""
+    import inspect
+    import pkgutil
+
+    operators = importlib.import_module(f"{PKG}.operators")
+    selectors = {"engine", "skew_guard", "hot_threshold", "time_slice"}
+    checked = 0
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in vars(mod).items():
+            if (name.startswith("_") or not inspect.isfunction(fn)
+                    or fn.__module__ != mod.__name__):
+                continue
+            checked += 1
+            params = set(inspect.signature(fn).parameters)
+            assert not params & selectors, f"{mod.__name__}.{name}"
+    assert checked > 20
+    merge = importlib.import_module(f"{PKG}.operators.merge")
+    for name in ("merge_series_relational", "merge_series_n_relational",
+                 "strict_zip_series_relational", "_route_engine"):
+        assert not hasattr(merge, name), name

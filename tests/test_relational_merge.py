@@ -1,7 +1,8 @@
-"""Relational (pure-Catalyst) merge engine vs the Arrow kernel twin.
+"""Relational (pure-Catalyst) merge plans vs the Arrow kernel twins.
 
-The relational path (operators/merge.py merge_series_relational) must be
-indistinguishable from the kernel path (engine="kernel") for every named
+The relational builders (operators/merge.py ``_merge_tagged_relational``
+and its n-ary / strict-zip siblings) must be indistinguishable from the
+kernel routes (``_merge_series_kernel`` and siblings) for every named
 numeric op, including per-side minus defaults, single-sided keys, empty
 sides, and touching/overlapping/gapped entries. Reference semantics:
 TimeSeriesMerger.scala:13-196, NumericTimeSeries.scala:18-45,
@@ -11,14 +12,42 @@ TimeSeries.scala:277-335,530-534.
 import numpy as np
 import pytest
 
+from scala_timeseries_lib_spark.operators import merge as merge_mod
 from scala_timeseries_lib_spark.operators.merge import (
+    _merge_n_tagged_relational,
+    _merge_series_kernel,
+    _merge_series_n_kernel,
+    _merge_tagged_relational,
+    _strict_zip_kernel,
+    _tag_sides_n,
+    _zip_tagged_relational,
     merge_series,
     merge_series_n,
-    merge_series_n_relational,
-    merge_series_relational,
     strict_zip_series,
-    strict_zip_series_relational,
 )
+
+KEY = ["user_id"]
+
+
+def _relational(a, b, key_cols, op, time_slice=None, **kw):
+    """The plain (or manually sliced) binary relational plan, no guard."""
+    return _merge_tagged_relational(
+        _tag_sides_n([a, b], key_cols), key_cols, op=op,
+        time_slice=time_slice, **kw,
+    )
+
+
+def _relational_n(sides, key_cols, op, time_slice=None):
+    return _merge_n_tagged_relational(
+        _tag_sides_n(sides, key_cols), key_cols, len(sides), op=op,
+        time_slice=time_slice,
+    )
+
+
+def _relational_zip(a, b, key_cols, time_slice=None):
+    return _zip_tagged_relational(
+        _tag_sides_n([a, b], key_cols), key_cols, time_slice=time_slice
+    )
 
 
 def _mk(spark, seed, n_keys=6, max_entries=40, only_keys=None):
@@ -62,8 +91,8 @@ OPS = [
 @pytest.mark.parametrize("op,kw", OPS, ids=[f"{o}-{sorted(k)}" for o, k in OPS])
 def test_relational_matches_kernel(spark, op, kw):
     a, b = _mk(spark, 11), _mk(spark, 22)
-    kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel", **kw))
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op=op, **kw))
+    kernel = _canon(_merge_series_kernel(a, b, KEY, op=op, **kw))
+    rel = _canon(_relational(a, b, ["user_id"], op=op, **kw))
     assert kernel == rel
     assert len(kernel) > 0
 
@@ -73,32 +102,46 @@ def test_relational_single_sided_keys(spark):
     a = _mk(spark, 31, only_keys={"k0", "k1", "k2"})
     b = _mk(spark, 32, only_keys={"k2", "k3", "k4"})
     for op in ("plus", "plus_strict", "fallback"):
-        kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel"))
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op))
+        kernel = _canon(_merge_series_kernel(a, b, KEY, op=op))
+        rel = _canon(_relational(a, b, ["user_id"], op=op))
         assert kernel == rel, op
 
 
 def test_relational_empty_side(spark):
     a = _mk(spark, 41)
     empty = a.limit(0)
-    rel = _canon(merge_series_relational(a, empty, ["user_id"], op="plus"))
-    kernel = _canon(merge_series(a, empty, ["user_id"], op="plus", engine="kernel"))
+    rel = _canon(_relational(a, empty, ["user_id"], op="plus"))
+    kernel = _canon(_merge_series_kernel(a, empty, KEY, op="plus"))
     assert rel == kernel
-    assert _canon(merge_series_relational(a, empty, ["user_id"], op="plus_strict")) == []
+    assert _canon(_relational(a, empty, ["user_id"], op="plus_strict")) == []
     # the auto skew guard must survive empty/one-sided inputs (checkpoint
     # + count over zero rows) and match the plain plan
     assert _canon(merge_series(a, empty, ["user_id"], op="plus")) == kernel
     assert _canon(merge_series(empty, empty, ["user_id"], op="plus")) == []
     # empty left, right and both sides of the zip and the n-ary merge; the
-    # kernel engine reaches the bucket driver's empty-bucket step
-    for engine in ("auto", "kernel"):
+    # kernel routes reach the bucket driver's empty-bucket step
+    for route, zip_fn, n_fn in (
+        ("public", strict_zip_series, merge_series_n),
+        ("kernel", _strict_zip_kernel, _merge_series_n_kernel),
+    ):
         for left, right in ((a, empty), (empty, a), (empty, empty)):
-            sides = f"{engine}: {left is a}, {right is a}"
-            assert _canon(strict_zip_series(
-                left, right, ["user_id"], engine=engine)) == [], sides
-            assert _canon(merge_series_n(
-                [left, right], ["user_id"], op="plus", engine=engine)
-            ) == (kernel if left is a or right is a else []), sides
+            sides = f"{route}: {left is a}, {right is a}"
+            assert _canon(zip_fn(left, right, KEY)) == [], sides
+            assert _canon(n_fn([left, right], KEY, op="plus")) == (
+                kernel if left is a or right is a else []), sides
+
+
+@pytest.mark.parametrize("sides,op,compress", [
+    (2, "minus", False), (2, "minus", True), (2, "nope", False),
+    (0, "plus", True), (0, "plus", False),
+], ids=["minus-kernel", "minus-relational", "unknown-kernel",
+        "no-side-relational", "no-side-kernel"])
+def test_merge_series_n_rejects_bad_call_eagerly(spark, sides, op, compress):
+    """An op outside plus|plus_strict, or no side at all, raises at call
+    time on either plan, not later in a worker."""
+    dfs = [_mk(spark, 81), _mk(spark, 82)][:sides]
+    with pytest.raises(ValueError):
+        merge_series_n(dfs, KEY, op=op, compress=compress)
 
 
 def test_relational_touching_entries_same_instant(spark):
@@ -112,8 +155,8 @@ def test_relational_touching_entries_same_instant(spark):
         [("k", 5, 10.0, 10), ("k", 15, 20.0, 5)],
         "user_id string, ts long, value double, validity long",
     )
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
-    kernel = _canon(merge_series(a, b, ["user_id"], op="plus", engine="kernel"))
+    rel = _canon(_relational(a, b, ["user_id"], op="plus"))
+    kernel = _canon(_merge_series_kernel(a, b, KEY, op="plus"))
     assert rel == kernel
     # spot-check one segment: at t=10 both new a-entry (2.0) and b (10.0)
     assert ("k", 10, 12.0, 5) in rel
@@ -129,27 +172,23 @@ def test_relational_rle_compression(spark):
         [("k", 0, 2.0, 10), ("k", 10, 1.0, 10)],
         "user_id string, ts long, value double, validity long",
     )
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
+    rel = _canon(_relational(a, b, ["user_id"], op="plus"))
     assert rel == [("k", 0, 3.0, 20)]
 
 
 def test_n_ary_relational_matches_kernel(spark):
-    # engine="kernel" is load-bearing: the dispatcher default is relational,
-    # so omitting it would compare the relational path to itself
     sides = [_mk(spark, s) for s in (51, 52, 53)]
     for op in ("plus", "plus_strict"):
-        kernel = _canon(
-            merge_series_n(sides, ["user_id"], op=op, engine="kernel")
-        )
-        rel = _canon(merge_series_n_relational(sides, ["user_id"], op=op))
+        kernel = _canon(_merge_series_n_kernel(sides, KEY, op=op))
+        rel = _canon(_relational_n(sides, ["user_id"], op=op))
         assert kernel == rel, op
         assert len(kernel) > 0
 
 
 def test_strict_zip_relational_matches_kernel(spark):
     a, b = _mk(spark, 61), _mk(spark, 62)
-    kernel = _canon(strict_zip_series(a, b, ["user_id"], engine="kernel"))
-    rel = _canon(strict_zip_series_relational(a, b, ["user_id"]))
+    kernel = _canon(_strict_zip_kernel(a, b, KEY))
+    rel = _canon(_relational_zip(a, b, ["user_id"]))
     assert kernel == rel
     assert len(kernel) > 0
 
@@ -179,26 +218,25 @@ def test_nan_values_match_kernel_split(spark):
 
     # binary: NaN results are holes on both engines
     for op in ("plus", "plus_strict", "fallback"):
-        kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel"))
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op))
+        kernel = _canon(_merge_series_kernel(a, b, KEY, op=op))
+        rel = _canon(_relational(a, b, ["user_id"], op=op))
         _cmp_nan(kernel, rel)
     # n-ary: NaN kept, adjacent NaN runs stay split like the kernel
     for op in ("plus", "plus_strict"):
-        kernel = _canon(
-            merge_series_n([a, b], ["user_id"], op=op, engine="kernel")
-        )
-        rel = _canon(merge_series_n_relational([a, b], ["user_id"], op=op))
+        kernel = _canon(_merge_series_n_kernel([a, b], KEY, op=op))
+        rel = _canon(_relational_n([a, b], ["user_id"], op=op))
         _cmp_nan(kernel, rel)
     # strict zip: NaN pair slots kept, split
-    kernel = _canon(strict_zip_series(a, b, ["user_id"], engine="kernel"))
-    rel = _canon(strict_zip_series_relational(a, b, ["user_id"]))
+    kernel = _canon(_strict_zip_kernel(a, b, KEY))
+    rel = _canon(_relational_zip(a, b, ["user_id"]))
     _cmp_nan(kernel, rel)
 
 
-def test_skew_guard_routes_hot_keys(spark):
-    """engine='auto' must detect a key above hot_threshold WITHOUT a caller
-    hint, merge it through an auto-sized time_slice, keep the cold keys on
-    the plain plan, and produce output identical to every manual plan."""
+def test_skew_guard_routes_hot_keys(spark, monkeypatch):
+    """merge_series must detect a key above HOT_KEY_THRESHOLD WITHOUT a
+    caller hint, merge it through an auto-sized time_slice, keep the cold
+    keys on the plain plan, and produce output identical to every manual
+    plan."""
     from pyspark.sql import functions as F
 
     a, b = _mk(spark, 201), _mk(spark, 202)
@@ -217,25 +255,22 @@ def test_skew_guard_routes_hot_keys(spark):
     left = a.unionByName(hot_a)
     right = b.unionByName(hot_b)
 
-    expected = _canon(merge_series(
-        left, right, ["user_id"], op="plus", engine="kernel"
-    ))
-    # guard fires (threshold 1000 < 10k hot entries): split routing
-    routed = _canon(merge_series(
-        left, right, ["user_id"], op="plus", hot_threshold=1000
-    ))
-    assert routed == expected
+    expected = _canon(_merge_series_kernel(left, right, KEY, op="plus"))
     # guard present but nothing hot: plain relational, same output
     unrouted = _canon(merge_series(left, right, ["user_id"], op="plus"))
     assert unrouted == expected
-    # guard off: fully lazy plain relational, same output
-    lazy = _canon(merge_series(
-        left, right, ["user_id"], op="plus", skew_guard=False
-    ))
+    # no guard: the plain relational plan, same output
+    lazy = _canon(_relational(left, right, KEY, op="plus"))
     assert lazy == expected
+    # guard fires (threshold 1000 < 10k hot entries): split routing
+    monkeypatch.setattr(merge_mod, "HOT_KEY_THRESHOLD", 1000)
+    routed = _canon(merge_series(
+        left, right, ["user_id"], op="plus"
+    ))
+    assert routed == expected
     # the routed plan stays zero-Python
     plan = merge_series(
-        left, right, ["user_id"], op="plus", hot_threshold=1000
+        left, right, ["user_id"], op="plus"
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     # null key components must route too (null-safe predicate)
@@ -247,18 +282,17 @@ def test_skew_guard_routes_hot_keys(spark):
 
     null_hot_a = hot_a.withColumn("user_id", F.lit(None).cast("string"))
     null_hot_b = hot_b.withColumn("user_id", F.lit(None).cast("string"))
-    exp_null = _canon_null(merge_series(
-        a.unionByName(null_hot_a), b.unionByName(null_hot_b), ["user_id"],
-        op="plus", engine="kernel",
+    exp_null = _canon_null(_merge_series_kernel(
+        a.unionByName(null_hot_a), b.unionByName(null_hot_b), KEY, op="plus",
     ))
     got_null = _canon_null(merge_series(
         a.unionByName(null_hot_a), b.unionByName(null_hot_b), ["user_id"],
-        op="plus", hot_threshold=1000,
+        op="plus",
     ))
     assert got_null == exp_null
 
 
-def test_n_ary_and_zip_time_slice_and_guard(spark):
+def test_n_ary_and_zip_time_slice_and_guard(spark, monkeypatch):
     """The hot-key escape generalizes to the whole merge family: n-ary and
     strict-zip sliced outputs equal the plain plans, and the auto guard
     routes a synthetic hot key with no caller hint."""
@@ -266,15 +300,15 @@ def test_n_ary_and_zip_time_slice_and_guard(spark):
 
     sides = [_mk(spark, s) for s in (221, 222, 223)]
     for op in ("plus", "plus_strict"):
-        base = _canon(merge_series_n_relational(sides, ["user_id"], op=op))
-        sliced = _canon(merge_series_n_relational(
+        base = _canon(_relational_n(sides, ["user_id"], op=op))
+        sliced = _canon(_relational_n(
             sides, ["user_id"], op=op, time_slice=41
         ))
         assert base == sliced, op
         assert len(base) > 0
     a, b = _mk(spark, 231), _mk(spark, 232)
-    zbase = _canon(strict_zip_series_relational(a, b, ["user_id"]))
-    zsliced = _canon(strict_zip_series_relational(
+    zbase = _canon(_relational_zip(a, b, ["user_id"]))
+    zsliced = _canon(_relational_zip(
         a, b, ["user_id"], time_slice=53
     ))
     assert zbase == zsliced
@@ -286,18 +320,19 @@ def test_n_ary_and_zip_time_slice_and_guard(spark):
         F.lit(10).cast("long").alias("validity"),
     )
     hs = [s.unionByName(hot) for s in sides]
-    exp = _canon(merge_series_n(hs, ["user_id"], op="plus", engine="kernel"))
-    got = _canon(merge_series_n(hs, ["user_id"], op="plus", hot_threshold=1000))
-    assert got == exp
     za, zb = a.unionByName(hot), b.unionByName(hot)
-    zexp = _canon(strict_zip_series(za, zb, ["user_id"], engine="kernel"))
-    zgot = _canon(strict_zip_series(za, zb, ["user_id"], hot_threshold=1000))
+    exp = _canon(_merge_series_n_kernel(hs, KEY, op="plus"))
+    zexp = _canon(_strict_zip_kernel(za, zb, KEY))
+    monkeypatch.setattr(merge_mod, "HOT_KEY_THRESHOLD", 1000)
+    got = _canon(merge_series_n(hs, ["user_id"], op="plus"))
+    assert got == exp
+    zgot = _canon(strict_zip_series(za, zb, ["user_id"]))
     assert zgot == zexp
 
 
 def test_auto_engine_routes_named_ops_relationally(spark):
     a, b = _mk(spark, 71), _mk(spark, 72)
-    df = merge_series(a, b, ["user_id"], op="plus")  # engine="auto"
+    df = merge_series(a, b, ["user_id"], op="plus")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("Exchange") == 1
@@ -313,53 +348,75 @@ def test_relational_time_slice_identical_output(spark):
     # the hot-key escape hatch must not change results: slice at absolute
     # boundaries, merge per (key, slice), RLE-repair across borders
     a, b = _mk(spark, 91), _mk(spark, 92)
-    base = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
+    base = _canon(_relational(a, b, ["user_id"], op="plus"))
     sliced = _canon(
-        merge_series_relational(a, b, ["user_id"], op="plus", time_slice=37)
+        _relational(a, b, ["user_id"], op="plus", time_slice=37)
     )
     assert base == sliced
-    # and through the dispatcher (auto engine now accepts time_slice)
-    via_dispatch = _canon(
-        merge_series(a, b, ["user_id"], op="plus", time_slice=37)
-    )
-    assert base == via_dispatch
-    plan = merge_series(
+    plan = _relational(
         a, b, ["user_id"], op="plus", time_slice=37
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_relational_time_slice_rejects_hole_filling_ops(spark):
-    a, b = _mk(spark, 93), _mk(spark, 94)
-    with pytest.raises(ValueError):
-        merge_series_relational(
-            a, b, ["user_id"], op="minus",
-            left_default=1.0, right_default=2.0, time_slice=100,
-        )
+def test_relational_time_slice_rejects_hole_filling_ops(spark, monkeypatch):
+    """minus with both defaults fills (undefined, undefined) segments, so
+    slicing would leave holes at slice borders: merge_series must keep it
+    on the plain plan, never entering the guard (whose exact pass fires
+    jobs while the plan is built), even with a measured-hot key."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    hot = spark.range(2000).select(
+        F.lit("hotkey").alias("user_id"), (F.col("id") * 20).alias("ts"),
+        F.pmod(F.col("id"), F.lit(3)).cast("double").alias("value"),
+        F.lit(10).cast("long").alias("validity"),
+    )
+    a = _mk(spark, 93).unionByName(hot)
+    b = _mk(spark, 94).unionByName(hot.withColumn("ts", F.col("ts") + 5))
+    sc = spark.sparkContext
+
+    def build_jobs(**kw):
+        group = f"hole-filling-{os.getpid()}-{len(kw)}"
+        sc.setJobGroup(group, "merge_series build")
+        try:
+            df = merge_series(a, b, KEY, op="minus", **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+    monkeypatch.setattr(merge_mod, "HOT_KEY_THRESHOLD", 1000)
+    kw = dict(left_default=1.0, right_default=2.0)
+    jobs, df = build_jobs(**kw)
+    assert jobs == 0
+    assert _canon(df) == _canon(_merge_series_kernel(a, b, KEY, op="minus", **kw))
+    # control: with one default the op cannot fill holes, so the guard runs
+    assert build_jobs(left_default=1.0)[0] > 0
 
 
 def test_rolling_relational_matches_kernel(spark):
     """rolling(sum|mean) via cumulative sums minus an as-of end-event carry
     (operators/window.py rolling_values_relational) must match the
     contiguous-range kernel bit-for-bit on fitted series."""
-    from scala_timeseries_lib_spark.operators.window import rolling_values
+    from scala_timeseries_lib_spark.operators.window import (
+        _rolling_values_kernel,
+        rolling_values,
+    )
 
     df = _mk(spark, 101)
     for agg in ("sum", "mean"):
         for window_ms in (13, 60, 500):
-            kernel = _canon(rolling_values(
-                df, ["user_id"], window_ms, agg=agg, engine="kernel"
+            kernel = _canon(_rolling_values_kernel(
+                df, ["user_id"], window_ms, agg=agg
             ))
-            rel = _canon(rolling_values(
-                df, ["user_id"], window_ms, agg=agg, engine="relational"
-            ))
+            rel = _canon(rolling_values(df, ["user_id"], window_ms, agg=agg))
             assert kernel == rel, (agg, window_ms)
             assert len(kernel) > 0
     # uncompressed twin too (no RLE pass)
-    k = _canon(rolling_values(df, ["user_id"], 60, compress=False,
-                              engine="kernel"))
-    r = _canon(rolling_values(df, ["user_id"], 60, compress=False,
-                              engine="relational"))
+    k = _canon(_rolling_values_kernel(df, ["user_id"], 60, compress=False))
+    r = _canon(rolling_values(df, ["user_id"], 60, compress=False))
     assert k == r
     # min/max must stay on the kernel (order statistics need RMQ)
     plan = rolling_values(
@@ -370,8 +427,6 @@ def test_rolling_relational_matches_kernel(spark):
         df, ["user_id"], 60, agg="sum"
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan2
-    with pytest.raises(ValueError):
-        rolling_values(df, ["user_id"], 60, agg="min", engine="relational")
 
 
 def _per_key(df):
@@ -449,18 +504,17 @@ def test_sliding_exact_relational_matches_sequential(spark):
     width = 60
 
     rel = _canon(sliding_window_exact(
-        df, ["user_id"], width, "sum", engine="relational", compress=True,
+        df, ["user_id"], width, "sum", compress=True,
     ))
     assert rel == _seq_sweep(df, width, kwin.SumAggregator)
     assert len(rel) > 50
     # compress=False twin too (every emission, no RLE)
     rel_raw = _canon(sliding_window_exact(
-        df, ["user_id"], width, "sum", engine="relational", compress=False,
+        df, ["user_id"], width, "sum", compress=False,
     ))
     assert len(rel_raw) >= len(rel)
     mean = _canon(sliding_window_exact(
-        df, ["user_id"], width, "mean", sample_rate=20, engine="kernel",
-        compress=True,
+        df, ["user_id"], width, "mean", sample_rate=20, compress=True,
     ))
     assert _rounded(mean) == _rounded(
         _seq_sweep(df, width, kwin.MeanAggregator, 20)
@@ -468,17 +522,16 @@ def test_sliding_exact_relational_matches_sequential(spark):
     assert len(mean) > 50
     # the relational plan is zero-Python
     plan = sliding_window_exact(
-        df, ["user_id"], width, "sum", engine="relational"
+        df, ["user_id"], width, "sum"
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
-    # the relational sweep takes only the un-resampled sum
+    # only the un-resampled sum takes the relational sweep
     for agg, rate in (("median", None), ("sum", 20), ("mean", 20)):
-        with pytest.raises(ValueError):
-            sliding_window_exact(
-                df, ["user_id"], width, agg, sample_rate=rate,
-                engine="relational",
-            )
+        plan = sliding_window_exact(
+            df, ["user_id"], width, agg, sample_rate=rate,
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" in plan, (agg, rate)
 
 
 def test_sliding_exact_relational_matches_kernel_rounded(spark):
@@ -488,21 +541,21 @@ def test_sliding_exact_relational_matches_kernel_rounded(spark):
     the kernel only and is held to the sequential sweep the same way."""
     from scala_timeseries_lib_spark.kernel import window as kwin
     from scala_timeseries_lib_spark.operators.window import (
+        _sliding_window_exact_kernel,
         sliding_window_exact,
     )
 
     df = _mk(spark, 311, n_keys=6, max_entries=40)
 
-    def run(agg, engine, rate=None):
-        return _rounded(_canon(sliding_window_exact(
-            df, ["user_id"], 80, agg, sample_rate=rate, engine=engine,
-            compress=False,
+    def run(fn, agg, rate=None):
+        return _rounded(_canon(fn(
+            df, ["user_id"], 80, agg, sample_rate=rate, compress=False,
         )))
 
-    kernel = run("sum", "kernel")
-    assert kernel == run("sum", "relational")
+    kernel = run(_sliding_window_exact_kernel, "sum")
+    assert kernel == run(sliding_window_exact, "sum")
     assert len(kernel) > 50
-    mean = run("mean", "kernel", 25)
+    mean = run(sliding_window_exact, "mean", 25)
     assert mean == _rounded(
         _seq_sweep(df, 80, kwin.MeanAggregator, 25, compress=False)
     )
@@ -548,9 +601,9 @@ def test_relational_stress_high_entropy(spark):
     )
     for op, kw in OPS:
         kernel = _canon(
-            merge_series(a, b, ["user_id"], op=op, engine="kernel", **kw)
+            _merge_series_kernel(a, b, KEY, op=op, **kw)
         )
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op, **kw))
+        rel = _canon(_relational(a, b, ["user_id"], op=op, **kw))
         assert kernel == rel, op
         assert len(kernel) > 100
 
@@ -563,8 +616,6 @@ def test_relational_stress_high_entropy(spark):
     )
 
     for width in (7, 100_000):
-        got = _canon(sliding_window_exact(
-            a, ["user_id"], width, "sum", engine="relational",
-        ))
+        got = _canon(sliding_window_exact(a, ["user_id"], width, "sum"))
         assert got == _seq_sweep(a, width, kwin.SumAggregator), width
         assert len(got) > 1000

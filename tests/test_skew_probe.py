@@ -81,6 +81,43 @@ def test_leaf_row_bound_voids_pandas_expansion(spark, tmp_path):
     assert _leaf_row_bound(sampled) is None
 
 
+def test_guard_bound_on_uri_encoded_path(spark, tmp_path):
+    """inputFiles() returns encoded URIs (``a%20b%25c``): the footer bound
+    and the leaf key frame must decode them, so a small merge over such
+    a directory stays fully lazy (zero jobs while it is built)."""
+    import os
+
+    from scala_timeseries_lib_spark.operators.merge import (
+        _leaf_key_frame,
+        _leaf_row_bound,
+        _tag_sides_n,
+        merge_series,
+    )
+
+    p = str(tmp_path / "a b%c" / "e.parquet")
+    spark.createDataFrame(
+        [(f"u{i % 4}", i * 100, float(i), 90) for i in range(40)],
+        "user_id string, ts long, value double, validity long",
+    ).write.parquet(p)
+    a = spark.read.parquet(p)
+    b = a.withColumn("ts", F.col("ts") + 30)
+    tagged = _tag_sides_n([a, b], ["user_id"])
+    assert _leaf_row_bound(tagged) == 80
+    lk = _leaf_key_frame(tagged, ["user_id"])
+    assert lk is not None and lk.count() == 80
+
+    sc = spark.sparkContext
+    group = f"encoded-path-guard-{os.getpid()}"
+    sc.setJobGroup(group, "merge_series build over an encoded path")
+    try:
+        merged = merge_series(a, b, ["user_id"], op="plus")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert merged.count() > 0
+
+
 def test_leaf_key_frame_requires_key_by_name(spark, pq_sides):
     from scala_timeseries_lib_spark.operators.merge import (
         _leaf_key_frame,
@@ -99,31 +136,27 @@ def test_leaf_key_frame_requires_key_by_name(spark, pq_sides):
     assert _leaf_key_frame(t2, ["uid"]) is None
 
 
-def test_sampled_probe_routes_parquet_hot_key(spark, pq_sides):
+def test_sampled_probe_routes_parquet_hot_key(spark, pq_sides, monkeypatch):
     """End-to-end through the staged detection with a sampling-eligible
     threshold (5_000 * 1% = 50 expected rows = the soundness floor): the
     leaf bound (44k) cannot clear the input, the leaf-key probe flags the
     hot key, the exact pass routes it, and the output still equals the
-    kernel engine's."""
-    from scala_timeseries_lib_spark.operators.merge import merge_series
+    kernel route's."""
+    from scala_timeseries_lib_spark.operators import merge as merge_mod
 
     a, b = pq_sides
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    expected = canon(
-        merge_series(a, b, ["user_id"], op="plus", engine="kernel")
-    )
-    routed = canon(
-        merge_series(a, b, ["user_id"], op="plus", hot_threshold=5_000)
-    )
+    expected = canon(merge_mod._merge_series_kernel(a, b, ["user_id"], op="plus"))
+    monkeypatch.setattr(merge_mod, "HOT_KEY_THRESHOLD", 5_000)
+    routed = canon(merge_mod.merge_series(a, b, ["user_id"], op="plus"))
     assert routed == expected
     # nothing hot at a threshold above the hot key: the probe must come
     # back clean and the plain lazy plan must produce the same rows
-    clean = canon(
-        merge_series(a, b, ["user_id"], op="plus", hot_threshold=50_000)
-    )
+    monkeypatch.setattr(merge_mod, "HOT_KEY_THRESHOLD", 50_000)
+    clean = canon(merge_mod.merge_series(a, b, ["user_id"], op="plus"))
     assert clean == expected
 
 

@@ -408,20 +408,21 @@ class TestNullKeySeries:
 class TestMergeTimeSliced:
     @pytest.mark.parametrize("op", ["plus", "plus_strict", "fallback"])
     def test_sliced_equals_unsliced(self, spark, op):
+        from scala_timeseries_lib_spark.operators.merge import (
+            _merge_tagged_relational,
+            _tag_sides_n,
+        )
+
         rng = np.random.default_rng(53)
         left = {f"k{i}": kfitter.fit(random_series(rng, 60)) for i in range(3)}
         right = {f"k{i}": kfitter.fit(random_series(rng, 45)) for i in range(2)}
         ldf, rdf = make_df(spark, left), make_df(spark, right)
         plain = merge_series(ldf, rdf, ["key"], op=op)
-        sliced = merge_series(ldf, rdf, ["key"], op=op, time_slice=50_000)
+        sliced = _merge_tagged_relational(
+            _tag_sides_n([ldf, rdf], ["key"]), ["key"], op=op, time_slice=50_000
+        )
         for k in left:
             assert collect_series(sliced, k) == collect_series(plain, k), (op, k)
-
-    def test_requires_compress(self, spark):
-        df = make_df(spark, {"k": [(1000, 1.0, 500)]})
-        with pytest.raises(ValueError):
-            merge_series(df, df, ["key"], op="plus", compress=False,
-                         time_slice=1000)
 
 
 class TestMergeCallableAndDefaults:
@@ -472,12 +473,6 @@ class TestMergeCallableAndDefaults:
         with pytest.raises(ValueError, match="unknown op"):
             merge_series(df, df, ["key"], op="nope")
 
-    def test_time_slice_rejects_hole_filling_ops(self, spark, series3):
-        _raw, _fitted, df = series3
-        with pytest.raises(ValueError, match="time_slice"):
-            merge_series(df, df, ["key"], op="minus", left_default=1.0,
-                         right_default=1.0, time_slice=10_000)
-
 
 class TestOffsetPackingOverflowGuard:
     @pytest.fixture(autouse=True)
@@ -509,11 +504,12 @@ class TestOffsetPackingOverflowGuard:
         packed, _s, _b = _pack_codes(codes, ts, dur)
         assert packed is None  # the guard really trips for this shape
 
-        # a named op on the kernel engine, and a Python-callable op
+        from scala_timeseries_lib_spark.operators.merge import _merge_series_kernel
+
+        # a named op on the kernel route, and a Python-callable op
         for op in ("plus", kmerge.op_non_strict_plus):
-            got = merge_series(
-                make_df(spark, left), make_df(spark, right), ["key"], op=op,
-                engine="kernel",
+            got = _merge_series_kernel(
+                make_df(spark, left), make_df(spark, right), ["key"], op=op
             )
             for k in left:
                 expected = kmerge.merge_entries(
@@ -523,8 +519,8 @@ class TestOffsetPackingOverflowGuard:
 
     def test_zip_and_nary_overflow_fallback(self, spark):
         from scala_timeseries_lib_spark.operators.merge import (
-            merge_series_n,
-            strict_zip_series,
+            _merge_series_n_kernel,
+            _strict_zip_kernel,
         )
 
         span = 1 << 61
@@ -538,14 +534,14 @@ class TestOffsetPackingOverflowGuard:
         }
         ldf, rdf = make_df(spark, left), make_df(spark, right)
 
-        zipped = strict_zip_series(ldf, rdf, ["key"], engine="kernel")
+        zipped = _strict_zip_kernel(ldf, rdf, ["key"])
         za = [
             (r["ts"], r["a_value"], r["b_value"], r["validity"])
             for r in zipped.filter(zipped.key == "a").orderBy("ts").collect()
         ]
         assert za == [(1_500, 1.0, 10.0, 1_000), (span + 200, 2.0, 7.0, 500)]
 
-        summed = merge_series_n([ldf, rdf], ["key"], op="plus", engine="kernel")
+        summed = _merge_series_n_kernel([ldf, rdf], ["key"], op="plus")
         for k in left:
             expected = kmerge.merge_entries(
                 left[k], right.get(k, []), kmerge.op_non_strict_plus
@@ -557,6 +553,7 @@ class TestOffsetPackingOverflowGuard:
         same 2^61-span shape match their sequential references."""
         from scala_timeseries_lib_spark.kernel import window as kwin
         from scala_timeseries_lib_spark.operators.window import (
+            _sliding_window_exact_kernel,
             rolling_values,
             sample_closest,
             sliding_window_exact,
@@ -579,7 +576,7 @@ class TestOffsetPackingOverflowGuard:
             return rounded(kfitter.fit(out, compress=True))
 
         cases = [
-            (sliding_window_exact(df, ["key"], 3_000, "sum", engine="kernel"),
+            (_sliding_window_exact_kernel(df, ["key"], 3_000, "sum"),
              lambda e: seq_sweep(e, kwin.SumAggregator())),
             (sliding_window_exact(df, ["key"], 3_000, "mean", sample_rate=rate),
              lambda e: seq_sweep(e, kwin.MeanAggregator(), rate)),
@@ -593,10 +590,12 @@ class TestOffsetPackingOverflowGuard:
                 assert rounded(collect_series(got, k)) == rounded(reference(entries))
 
     def test_single_series_overflow_raises(self, spark):
-        from scala_timeseries_lib_spark.operators.window import sliding_window_exact
+        from scala_timeseries_lib_spark.operators.window import (
+            _sliding_window_exact_kernel,
+        )
 
         df = make_df(spark, {"a": [(0, 1.0, 1_000), (1 << 62, 2.0, 1_000)]})
-        got = sliding_window_exact(df, ["key"], 3_000, "sum", engine="kernel")
+        got = _sliding_window_exact_kernel(df, ["key"], 3_000, "sum")
         with pytest.raises(Exception, match=r"ValueError: .*2\^62"):
             got.collect()
 

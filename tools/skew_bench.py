@@ -10,9 +10,11 @@ with millions of snapshots" case). Two scenarios:
    ``skew_safe=True`` (round-robin spread; Catalyst inserts the (key,
    bucket) exchange). Equal outputs checked by row count + support sum.
 2. **merge (plus)**: hot series merged against a shifted copy of itself --
-   one series is one kernel group, so the default plan runs one straggler
-   task; ``time_slice`` pre-splits both sides at absolute boundaries and
-   re-merges RLE runs across borders (identical output, pinned by tests).
+   one series is one window partition, so the plain relational plan runs
+   one straggler task; a manual ``time_slice`` pre-splits both sides at
+   absolute boundaries and re-merges RLE runs across borders (identical
+   output, pinned by tests); ``merge_series`` picks its slicing itself
+   through the hot-key guard.
 
 Reported per scenario: wall seconds with/without the mitigation, the
 straggler ratio (max concurrent-task wall / ideal), and output equality.
@@ -43,7 +45,11 @@ def main() -> None:
 
     from scala_timeseries_lib_spark.operators import series_ops as ops
     from scala_timeseries_lib_spark.operators.entries import derive_entries
-    from scala_timeseries_lib_spark.operators.merge import merge_series
+    from scala_timeseries_lib_spark.operators.merge import (
+        _merge_tagged_relational,
+        _tag_sides_n,
+        merge_series,
+    )
     from scala_timeseries_lib_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -102,11 +108,14 @@ def main() -> None:
 
     # merge scenario: hot vs shifted hot (plus normals on both sides)
     shifted = entries.withColumn("ts", F.col("ts") + 37_000)
-    def merge_probe(time_slice=None, skew_guard=False):
-        df = merge_series(
-            entries, shifted, keys, op="plus", time_slice=time_slice,
-            skew_guard=skew_guard,
-        )
+    def merge_probe(time_slice=None, auto=False):
+        if auto:
+            df = merge_series(entries, shifted, keys, op="plus")
+        else:
+            df = _merge_tagged_relational(
+                _tag_sides_n([entries, shifted], keys), keys, op="plus",
+                time_slice=time_slice,
+            )
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value") * F.col("validity")).alias("wsum"),
@@ -117,15 +126,15 @@ def main() -> None:
     # a single pass at this size swings 2x with GC alignment
     merge_probe()
     merge_probe(time_slice=3_600_000 * 24)
-    merge_probe(skew_guard=True)
-    # plain = guard off (the pre-guard relational default)
+    merge_probe(auto=True)
+    # plain = the relational plan with no slicing (no guard)
     t_m_def, out_m_def = timed(lambda: merge_probe(), k=2)
     t_m_sliced, out_m_sliced = timed(
         lambda: merge_probe(time_slice=3_600_000 * 24), k=2
     )
-    # the round-5 headline: engine="auto" with NO caller hint must detect
+    # the round-5 headline: merge_series with NO caller hint must detect
     # the 4M-entry key and land within ~1.1x of the best manual plan
-    t_m_auto, out_m_auto = timed(lambda: merge_probe(skew_guard=True), k=2)
+    t_m_auto, out_m_auto = timed(lambda: merge_probe(auto=True), k=2)
 
     best_manual = min(t_m_def, t_m_sliced)
     print(json.dumps({
