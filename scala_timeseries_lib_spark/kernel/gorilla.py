@@ -38,6 +38,14 @@ sequential scan; the equality rule is a pure per-entry function plus a
 prefix-max, and produces a stream every conforming decoder accepts). The
 sequential reference encoder is kept as ``_compress_array_py`` and
 cross-checked in tests.
+
+Every decode goes through ``decompress_arrays``, which picks one of two
+decoders from the width of the batch it is given: the sequential
+``_decompress_array_py`` block by block for narrow batches (a lone tuple
+block is two lanes), the lockstep lane decoder for wide ones (an Arrow
+batch of many blocks). The sequential decoder is also the reference the
+lockstep one is tested against. A corrupt header fails before anything is
+allocated.
 """
 
 from __future__ import annotations
@@ -50,13 +58,11 @@ from .fitter import fit, fit_arrays
 
 __all__ = [
     "compress_array",
-    "decompress_array",
     "decompress_arrays",
     "decompress_tuple_blocks_arrays",
     "compress_tuple_block",
     "compress_tuple_block_arrays",
     "decompress_tuple_block",
-    "decompress_tuple_block_arrays",
     "serialize_tuple_block",
     "deserialize_tuple_block",
     "compress_sampled_block",
@@ -67,8 +73,14 @@ __all__ = [
 _MAX_FIRST_DELTA = (1 << 27) - 1
 _MAX_GAP = 1 << 31
 
-# below this entry count the sequential codec beats numpy setup overhead
+# below this entry count the sequential encoder beats numpy setup overhead
 _VEC_CUTOVER = 128
+
+# decompress_arrays decodes in lockstep once the batch's entry counts sum to
+# at least this many times its longest block: the lockstep decoder's cost
+# follows the longest block, the sequential one's the total (measured
+# crossover 20-24 equal lanes, BENCH/gorilla_decode_width_r08.json)
+_LOCKSTEP_WIDTH = 24
 
 # delta-of-delta buckets: (prefix_value, prefix_bits, payload_bits, offset)
 # bucket holds dod in [-offset, 2^bits - offset - 1]
@@ -324,163 +336,6 @@ def _compress_array_py(timestamps, values_u64) -> bytes:
     return struct.pack("<Iq", n, block_ts) + w.getvalue()
 
 
-def decompress_array(data: bytes):
-    """Decode a GorillaArray to (int64 timestamps, uint64 value-bits).
-
-    Two-phase: a Python walk over CONTROL bits only (dod class, change /
-    window-reuse flags, 5+6-bit window headers) records every payload
-    field's position and width; payload extraction and the delta-of-delta /
-    XOR chains then run vectorized (``np.add.reduceat`` for field values,
-    ``cumsum`` twice for timestamps, ``np.bitwise_xor.accumulate`` for
-    values). The walk touches ~4 bits per entry; payload bits never pass
-    through Python.
-    """
-    if len(data) < 12:
-        raise ValueError("corrupt Gorilla array: too short")
-    n, block_ts = struct.unpack_from("<Iq", data, 0)
-    if n == 0 or n > (1 << 31):
-        raise ValueError("corrupt Gorilla array: bad entry count")
-    if n < _VEC_CUTOVER:
-        return _decompress_array_py(data)
-    payload = np.frombuffer(bytes(data[12:]), dtype=np.uint8)
-    bits = np.unpackbits(payload)
-    nbits_total = bits.size
-    blist = bits.tolist()  # python ints: ~40ns/index vs ~150ns for np scalars
-
-    def fail():
-        raise ValueError("corrupt Gorilla array: out of bits")
-
-    pos = 0
-    if nbits_total < 27 + 64:
-        fail()
-    # header: 27-bit first delta + raw 64-bit first value
-    first_delta = int(np.add.reduceat(
-        bits[:27].astype(np.int64) << np.arange(26, -1, -1, dtype=np.int64), [0]
-    )[0])
-    pos = 27
-    f_starts = [pos]
-    f_widths = [64]
-    pos += 64
-
-    # per-entry payload field records
-    dod_starts, dod_widths, dod_offsets = [], [], []
-    xor_starts, xor_widths, xor_shifts = [], [], []
-    xor_entry = []  # entry index of each xor field (1-based)
-    prev_lead, prev_len = -1, -1
-    for i in range(1, n):
-        if pos >= nbits_total:
-            fail()
-        if blist[pos] == 0:
-            pos += 1
-            dod_starts.append(-1)
-            dod_widths.append(0)
-            dod_offsets.append(0)
-        else:
-            k = 1
-            while k < 4 and pos + k < nbits_total and blist[pos + k] == 1:
-                k += 1
-            if k == 1:
-                w, off = 7, 63
-            elif k == 2:
-                w, off = 9, 255
-            elif k == 3:
-                w, off = 12, 2047
-            else:
-                w, off = 32, 1 << 31
-            pos += k + (1 if k < 4 else 0)
-            if pos + w > nbits_total:
-                fail()
-            dod_starts.append(pos)
-            dod_widths.append(w)
-            dod_offsets.append(off)
-            pos += w
-        if pos >= nbits_total:
-            fail()
-        if blist[pos] == 0:
-            pos += 1
-            continue
-        pos += 1
-        if pos >= nbits_total:
-            fail()
-        if blist[pos] == 0:
-            pos += 1
-            if prev_len < 0:
-                raise ValueError("corrupt Gorilla array: no previous window")
-            lead, length = prev_lead, prev_len
-        else:
-            pos += 1
-            if pos + 11 > nbits_total:
-                fail()
-            lead = 0
-            for b in blist[pos:pos + 5]:
-                lead = (lead << 1) | b
-            length = 0
-            for b in blist[pos + 5:pos + 11]:
-                length = (length << 1) | b
-            pos += 11
-            if length == 0:
-                length = 64
-            prev_lead, prev_len = lead, length
-        if pos + length > nbits_total:
-            fail()
-        xor_starts.append(pos)
-        xor_widths.append(length)
-        xor_shifts.append(64 - lead - length)
-        xor_entry.append(i)
-        pos += length
-
-    # ---- vectorized payload extraction ----
-    def extract(starts, widths):
-        starts = np.asarray(starts, np.int64)
-        widths = np.asarray(widths, np.int64)
-        if starts.size == 0:
-            return np.zeros(0, np.uint64)
-        gpos = np.repeat(starts, widths) + _within(widths)
-        weights = np.uint64(1) << (
-            np.repeat(widths, widths) - 1 - _within(widths)
-        ).astype(np.uint64)
-        prod = bits[gpos].astype(np.uint64) * weights
-        ends = np.cumsum(widths)
-        return np.add.reduceat(prod, np.concatenate(([0], ends[:-1])))
-
-    # first value
-    v0 = int(extract(f_starts, f_widths)[0])
-
-    ts = np.empty(n, dtype=np.int64)
-    ts[0] = block_ts + first_delta
-    if n > 1:
-        dod = np.zeros(n - 1, np.int64)
-        enc = np.asarray(dod_starts, np.int64) >= 0
-        if enc.any():
-            raw = extract(
-                np.asarray(dod_starts, np.int64)[enc],
-                np.asarray(dod_widths, np.int64)[enc],
-            ).astype(np.int64)
-            dod[enc] = raw - np.asarray(dod_offsets, np.int64)[enc]
-        deltas = np.cumsum(dod) + first_delta
-        ts[1:] = ts[0] + np.cumsum(deltas)
-
-    vals = np.zeros(n, dtype=np.uint64)
-    vals[0] = np.uint64(v0)
-    if xor_entry:
-        xraw = extract(xor_starts, xor_widths)
-        xors = np.zeros(n, np.uint64)
-        xors[np.asarray(xor_entry, np.int64)] = xraw << np.asarray(
-            xor_shifts, np.uint64
-        )
-        xors[0] = np.uint64(v0)
-        vals = np.bitwise_xor.accumulate(xors)
-    else:
-        vals[:] = np.uint64(v0)
-    return ts, vals
-
-
-def _within(widths):
-    """0..w-1 positions inside each variable-width field, concatenated."""
-    total = int(widths.sum())
-    return np.arange(total) - np.repeat(np.cumsum(widths) - widths, widths)
-
-
 def _words_be(payload_bytes: "np.ndarray") -> "np.ndarray":
     """Payload bytes -> native uint64 array of BIG-ENDIAN 64-bit words (plus
     two guard words), so any <=64-bit field at bit position p spans at most
@@ -508,49 +363,55 @@ def _read_fixed(words, starts, width):
     return _read_var(words, starts, np.full(starts.size, width, np.int64))
 
 
+def _header(data: bytes):
+    """``(n, block_ts, payload)`` of a GorillaArray. The entry count is
+    checked against the payload size before anything is allocated: the
+    first entry takes 27 + 64 bits and every later one at least 2 (one
+    delta-of-delta and one XOR control bit)."""
+    if len(data) < 12:
+        raise ValueError("corrupt Gorilla array: too short")
+    n, block_ts = struct.unpack_from("<Iq", data, 0)
+    if n == 0 or n - 1 > ((len(data) - 12) * 8 - 91) // 2:
+        raise ValueError("corrupt Gorilla array: bad entry count")
+    return n, block_ts, bytes(data[12:])
+
+
 def decompress_arrays(blocks):
-    """Lockstep batch decode: many GorillaArrays -> list of (int64 ts,
-    uint64 value-bits), one numpy "step" per ENTRY INDEX across all blocks.
+    """Batch decode: many GorillaArrays -> list of (int64 ts, uint64
+    value-bits).
 
     The control stream is a variable-length prefix code, so a single block
-    decodes inherently sequentially -- but an archival read decodes
-    thousands of per-(series, bucket) blocks per Arrow batch. This decoder
-    runs the control-state machine as vectors over block LANES (position,
-    previous delta, previous XOR window per lane), advancing every lane by
-    one entry per iteration: Python loop overhead amortizes over the batch
-    width and ALL bit extraction (control and payload) happens in numpy.
-    Replaces the per-entry Python control-bit walk that round 2's judge
-    flagged (the two-phase :func:`decompress_array` remains the single-block
-    path, ``_decompress_array_py`` the semantics twin; all three are
-    cross-checked in tests).
+    decodes inherently sequentially. A batch is decoded by whichever of two
+    decoders its width favours: the sequential ``_decompress_array_py``
+    block by block, or the lockstep decoder below, which costs one numpy
+    step per entry index of the LONGEST block. The batch is wide -- lockstep
+    -- when its entry counts sum to at least ``_LOCKSTEP_WIDTH`` times the
+    largest count (for equal blocks: at least that many lanes).
+
+    The lockstep decoder runs the control-state machine as vectors over
+    block LANES (position, previous delta, previous XOR window per lane),
+    advancing every lane by one entry per iteration: Python loop overhead
+    amortizes over the batch width and ALL bit extraction (control and
+    payload) happens in numpy. Both decoders are cross-checked in tests.
     """
-    m = len(blocks)
-    if m == 0:
+    heads = [_header(data) for data in blocks]
+    if not heads:
         return []
-    if m == 1:
-        return [decompress_array(blocks[0])]
-    ns = np.empty(m, np.int64)
-    block_ts = np.empty(m, np.int64)
-    payloads = []
-    for j, data in enumerate(blocks):
-        if len(data) < 12:
-            raise ValueError("corrupt Gorilla array: too short")
-        n, bts = struct.unpack_from("<Iq", data, 0)
-        if n == 0 or n > (1 << 31):
-            raise ValueError("corrupt Gorilla array: bad entry count")
-        ns[j] = n
-        block_ts[j] = bts
-        payloads.append(np.frombuffer(bytes(data[12:]), dtype=np.uint8))
-    lens = np.array([p.size for p in payloads], np.int64)
+    counts, starts, payloads = zip(*heads)
+    if sum(counts) < _LOCKSTEP_WIDTH * max(counts):
+        return [_decompress_array_py(data) for data in blocks]
+    m = len(heads)
+    ns = np.array(counts, np.int64)
+    block_ts = np.array(starts, np.int64)
+    lens = np.array([len(p) for p in payloads], np.int64)
     base = np.concatenate(([0], np.cumsum(lens)[:-1])) * 8
     limit = base + lens * 8
+    joined = np.frombuffer(b"".join(payloads), dtype=np.uint8)
     # one step consumes at most 4+32+2+11+64 = 113 bits past a verified
     # position; 128 zero pad bits keep within-step gathers in bounds
-    bits = np.unpackbits(np.concatenate([*payloads, np.zeros(16, np.uint8)]))
-    words = _words_be(np.concatenate(payloads) if m > 1 else payloads[0])
+    bits = np.unpackbits(np.concatenate([joined, np.zeros(16, np.uint8)]))
+    words = _words_be(joined)
 
-    if (limit - base < 27 + 64).any():
-        raise ValueError("corrupt Gorilla array: out of bits")
     first_delta = _read_fixed(words, base, 27).astype(np.int64)
     cur_val = _read_fixed(words, base + 27, 64)
     pos = base + 91
@@ -632,10 +493,10 @@ def decompress_arrays(blocks):
 
 
 def decompress_tuple_blocks_arrays(datas):
-    """Batch tuple-block decode via the lockstep lane decoder: list of
-    serialized tuple blocks -> list of (int64 ts, float64 values, int64
-    validities). The value and validity GorillaArrays of every block decode
-    in ONE lockstep batch (2 * len(datas) lanes)."""
+    """Batch tuple-block decode: list of serialized tuple blocks -> list of
+    (int64 ts, float64 values, int64 validities). The value and validity
+    GorillaArrays of every block decode in ONE :func:`decompress_arrays`
+    batch (2 * len(datas) lanes)."""
     pairs = [deserialize_tuple_block(d) for d in datas]
     decoded = decompress_arrays(
         [p[0] for p in pairs] + [p[1] for p in pairs]
@@ -654,13 +515,10 @@ def decompress_tuple_blocks_arrays(datas):
 
 
 def _decompress_array_py(data: bytes):
-    """Sequential reference decoder; cross-check twin for tests."""
-    if len(data) < 12:
-        raise ValueError("corrupt Gorilla array: too short")
-    n, block_ts = struct.unpack_from("<Iq", data, 0)
-    if n == 0 or n > (1 << 31):
-        raise ValueError("corrupt Gorilla array: bad entry count")
-    r = _BitReader(bytes(data[12:]))
+    """Sequential reference decoder: the path for narrow batches and the
+    twin the lockstep decoder is tested against."""
+    n, block_ts, payload = _header(data)
+    r = _BitReader(payload)
     ts = np.empty(n, dtype=np.int64)
     vals = np.empty(n, dtype=np.uint64)
     first_delta = r.read(27)
@@ -754,24 +612,10 @@ def deserialize_tuple_block(data: bytes):
 
 def decompress_tuple_block(data: bytes):
     """Serialized tuple block -> list of (ts, double value, validity)."""
-    ts, values, validities = decompress_tuple_block_arrays(data)
+    [(ts, values, validities)] = decompress_tuple_blocks_arrays([data])
     return [
         (int(t), float(v), int(d)) for t, v, d in zip(ts, values, validities)
     ]
-
-
-def decompress_tuple_block_arrays(data: bytes):
-    """Array-native tuple-block decode: serialized block in, (int64 ts,
-    float64 values, int64 validities) numpy arrays out. The hot path --
-    feeds pandas columns directly without materializing tuple lists."""
-    value_bytes, validity_bytes = deserialize_tuple_block(data)
-    ts_v, vals = decompress_array(value_bytes)
-    ts_d, validities = decompress_array(validity_bytes)
-    if ts_v.size != ts_d.size or not np.array_equal(ts_v, ts_d):
-        raise ValueError(
-            "The byte arrays in this block are not a valid compressed timeseries."
-        )
-    return ts_v, vals.view(np.float64), validities.astype(np.int64)
 
 
 def compress_sampled_block(entries, sample_rate: int, compress: bool = True) -> bytes:
@@ -790,6 +634,6 @@ def compress_sampled_block(entries, sample_rate: int, compress: bool = True) -> 
 def decompress_sampled_block(data: bytes, sample_rate: int):
     if sample_rate <= 0:
         raise ValueError("Sampling rate must be positive.")
-    ts, vals = decompress_array(data)
+    [(ts, vals)] = decompress_arrays([data])
     values = vals.view(np.float64)
     return [(int(t), float(v), int(sample_rate)) for t, v in zip(ts, values)]

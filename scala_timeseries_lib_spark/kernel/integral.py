@@ -8,8 +8,6 @@ reference's ``java.util.concurrent.TimeUnit`` parameter.
 
 from __future__ import annotations
 
-import numpy as np
-
 __all__ = ["seconds_factor", "entry_integral", "step_integral", "sliding_integral"]
 
 _FACTORS = {"ms": 1e-3, "s": 1.0, "us": 1e-6, "ns": 1e-9, "m": 60.0, "h": 3600.0}
@@ -37,14 +35,6 @@ def step_integral(entries, timeunit: str = "ms"):
         acc += float(value) * validity * f
         out.append((ts, acc, validity))
     return out
-
-
-def step_integral_arrays(ts, value, validity, timeunit: str = "ms"):
-    """Vectorized step integral over numpy arrays."""
-    f = seconds_factor(timeunit)
-    value = np.asarray(value, np.float64)
-    validity = np.asarray(validity, np.int64)
-    return np.asarray(ts, np.int64), np.cumsum(value * validity * f), validity
 
 
 def sliding_integral(entries, window: int, sample_rate: int, timeunit: str = "ms"):

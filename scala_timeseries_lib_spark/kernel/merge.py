@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .fitter import fit
+from .fitter import fit, fit_arrays
 
 __all__ = [
     "merge_entries",
@@ -45,23 +45,6 @@ def _boundaries(sides):
             pts.append(ts)
             pts.append(ts + validity)
     return sorted(set(pts))
-
-
-def _value_at(entries, t):
-    """Value of an ordered, fitted entry list at time ``t`` (None in holes).
-
-    Linear-cursor-free lookup via bisect on starts; entries are
-    non-overlapping so the candidate is the last entry starting <= t.
-    """
-    import bisect
-
-    starts = [e[0] for e in entries]
-    i = bisect.bisect_right(starts, t) - 1
-    if i >= 0:
-        ts, value, validity = entries[i]
-        if t < ts + validity:
-            return value
-    return None
 
 
 def merge_entries(a, b, op, compress: bool = True):
@@ -167,23 +150,28 @@ _NUMERIC_OPS = {
 }
 
 
-def _union_segments(a_ts, a_validity, b_ts, b_validity):
-    """Boundary-union elementary segments (lo, hi) plus each side's
-    (defined, value-index) lookup helper inputs."""
+def _segments(sides):
+    """Boundary-union elementary segments ``[lo, hi)`` of k ``(ts, value,
+    validity)`` array sides, plus each side's ``defined[k, n]`` mask and
+    ``values[k, n]`` (NaN where undefined) on those segments."""
+    sides = [
+        (np.asarray(t, np.int64), np.asarray(v, np.float64),
+         np.asarray(d, np.int64))
+        for t, v, d in sides
+    ]
     pts = np.unique(
-        np.concatenate([a_ts, a_ts + a_validity, b_ts, b_ts + b_validity])
+        np.concatenate([np.concatenate([t, t + d]) for t, _v, d in sides])
     )
-    return pts[:-1], pts[1:]
-
-
-def _side_at(ts, val, validity, lo):
-    if ts.size == 0:
-        return np.zeros(lo.size, bool), np.full(lo.size, np.nan)
-    idx = np.searchsorted(ts, lo, side="right") - 1
-    ok = idx >= 0
-    idxc = np.clip(idx, 0, ts.size - 1)
-    defined = ok & (lo < ts[idxc] + validity[idxc])
-    return defined, np.where(defined, val[idxc], np.nan)
+    lo, hi = pts[:-1], pts[1:]
+    defined = np.zeros((len(sides), lo.size), bool)
+    values = np.full((len(sides), lo.size), np.nan)
+    for i, (ts, val, validity) in enumerate(sides):
+        if ts.size:
+            idx = np.searchsorted(ts, lo, side="right") - 1
+            idxc = np.clip(idx, 0, None)
+            defined[i] = (idx >= 0) & (lo < ts[idxc] + validity[idxc])
+            values[i] = np.where(defined[i], val[idxc], np.nan)
+    return lo, hi, defined, values
 
 
 def _mask_outside_ranges(res, lo, hi, valid_ranges):
@@ -225,19 +213,9 @@ def merge_apply_numeric(
     NaN segments and dropped. Returns fitted ``(ts, value, validity)``
     arrays.
     """
-    a_ts = np.asarray(a_ts, np.int64)
-    b_ts = np.asarray(b_ts, np.int64)
-    a_val = np.asarray(a_val, np.float64)
-    b_val = np.asarray(b_val, np.float64)
-    a_validity = np.asarray(a_validity, np.int64)
-    b_validity = np.asarray(b_validity, np.int64)
-
-    if a_ts.size == 0 and b_ts.size == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.int64))
-
-    lo, hi = _union_segments(a_ts, a_validity, b_ts, b_validity)
-    da, va = _side_at(a_ts, a_val, a_validity, lo)
-    db, vb = _side_at(b_ts, b_val, b_validity, lo)
+    lo, hi, (da, db), (va, vb) = _segments(
+        [(a_ts, a_val, a_validity), (b_ts, b_val, b_validity)]
+    )
     if op == "minus":
         only_a = (
             va - right_default if right_default is not None
@@ -260,8 +238,6 @@ def merge_apply_numeric(
         res = _NUMERIC_OPS[op](va, vb, da, db)
     res = _mask_outside_ranges(res, lo, hi, valid_ranges)
     keep = ~np.isnan(res)
-    from .fitter import fit_arrays
-
     return fit_arrays(lo[keep], res[keep], (hi - lo)[keep], compress=compress)
 
 
@@ -279,19 +255,9 @@ def merge_apply_callable(
     (inherent -- it is opaque Python). Returns fitted ``(ts, value,
     validity)`` arrays; value type must be numeric (the DataFrame column is
     double)."""
-    a_ts = np.asarray(a_ts, np.int64)
-    b_ts = np.asarray(b_ts, np.int64)
-    a_val = np.asarray(a_val, np.float64)
-    b_val = np.asarray(b_val, np.float64)
-    a_validity = np.asarray(a_validity, np.int64)
-    b_validity = np.asarray(b_validity, np.int64)
-
-    if a_ts.size == 0 and b_ts.size == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.int64))
-
-    lo, hi = _union_segments(a_ts, a_validity, b_ts, b_validity)
-    da, va = _side_at(a_ts, a_val, a_validity, lo)
-    db, vb = _side_at(b_ts, b_val, b_validity, lo)
+    lo, hi, (da, db), (va, vb) = _segments(
+        [(a_ts, a_val, a_validity), (b_ts, b_val, b_validity)]
+    )
     out = [
         op(a if d_a else None, b if d_b else None)
         for a, b, d_a, d_b in zip(va.tolist(), vb.tolist(),
@@ -300,8 +266,6 @@ def merge_apply_callable(
     res = np.array([np.nan if r is None else float(r) for r in out])
     res = _mask_outside_ranges(res, lo, hi, valid_ranges)
     keep = ~np.isnan(res)
-    from .fitter import fit_arrays
-
     return fit_arrays(lo[keep], res[keep], (hi - lo)[keep], compress=compress)
 
 
@@ -312,38 +276,12 @@ def strict_zip_arrays(
     defined only where BOTH sides are. Returns ``(ts, a_value, b_value,
     validity)`` arrays; with ``compress`` adjacent contiguous segments with
     equal (a, b) pairs are RLE-merged (the fitter's tuple-equality rule)."""
-    a_ts = np.asarray(a_ts, np.int64)
-    b_ts = np.asarray(b_ts, np.int64)
-    a_val = np.asarray(a_val, np.float64)
-    b_val = np.asarray(b_val, np.float64)
-    a_validity = np.asarray(a_validity, np.int64)
-    b_validity = np.asarray(b_validity, np.int64)
-    empty = (
-        np.empty(0, np.int64), np.empty(0, np.float64),
-        np.empty(0, np.float64), np.empty(0, np.int64),
+    lo, hi, (da, db), (va, vb) = _segments(
+        [(a_ts, a_val, a_validity), (b_ts, b_val, b_validity)]
     )
-    if a_ts.size == 0 or b_ts.size == 0:
-        return empty
-
-    pts = np.unique(
-        np.concatenate([a_ts, a_ts + a_validity, b_ts, b_ts + b_validity])
-    )
-    lo, hi = pts[:-1], pts[1:]
-
-    def side(ts, val, validity):
-        idx = np.searchsorted(ts, lo, side="right") - 1
-        ok = idx >= 0
-        idxc = np.clip(idx, 0, ts.size - 1)
-        defined = ok & (lo < ts[idxc] + validity[idxc])
-        return defined, np.where(defined, val[idxc], np.nan)
-
-    da, va = side(a_ts, a_val, a_validity)
-    db, vb = side(b_ts, b_val, b_validity)
     keep = da & db
     lo, hi, va, vb = lo[keep], hi[keep], va[keep], vb[keep]
-    if lo.size == 0:
-        return empty
-    if not compress:
+    if not compress or lo.size == 0:
         return lo, va, vb, hi - lo
     brk = np.ones(lo.size, bool)
     brk[1:] = (lo[1:] != hi[:-1]) | (va[1:] != va[:-1]) | (vb[1:] != vb[:-1])
@@ -362,32 +300,8 @@ def merge_apply_numeric_n(sides, op: str, compress: bool = True):
     sides are defined). Same boundary-union construction as the binary
     kernel: O(total log total), no Python per-segment loop.
     """
-    tss = [np.asarray(t, np.int64) for t, _v, _d in sides]
-    vals = [np.asarray(v, np.float64) for _t, v, _d in sides]
-    durs = [np.asarray(d, np.int64) for _t, _v, d in sides]
-    if all(t.size == 0 for t in tss):
-        return (np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.int64))
-
-    pts = np.unique(
-        np.concatenate([np.concatenate([t, t + d]) for t, d in zip(tss, durs)])
-    )
-    lo, hi = pts[:-1], pts[1:]
-
-    def side(ts, val, validity):
-        if ts.size == 0:
-            return np.zeros(lo.size, bool), np.zeros(lo.size, np.float64)
-        idx = np.searchsorted(ts, lo, side="right") - 1
-        ok = idx >= 0
-        idxc = np.clip(idx, 0, ts.size - 1)
-        defined = ok & (lo < ts[idxc] + validity[idxc])
-        return defined, np.where(defined, val[idxc], 0.0)
-
-    defined = np.zeros((len(sides), lo.size), bool)
-    values = np.zeros((len(sides), lo.size), np.float64)
-    for i, (t, v, d) in enumerate(zip(tss, vals, durs)):
-        defined[i], values[i] = side(t, v, d)
-
-    total = values.sum(axis=0)
+    lo, hi, defined, values = _segments(sides)
+    total = np.where(defined, values, 0.0).sum(axis=0)
     n_def = defined.sum(axis=0)
     if op == "plus":
         keep = n_def > 0
@@ -395,6 +309,4 @@ def merge_apply_numeric_n(sides, op: str, compress: bool = True):
         keep = n_def == len(sides)
     else:
         raise ValueError(f"unknown n-ary op {op!r}")
-    from .fitter import fit_arrays
-
     return fit_arrays(lo[keep], total[keep], (hi - lo)[keep], compress=compress)

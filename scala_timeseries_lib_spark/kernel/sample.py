@@ -20,8 +20,6 @@ from .merge import merge_entries, op_fallback
 
 __all__ = [
     "sample",
-    "sample_arrays_strict",
-    "sample_arrays_closest",
     "sample_arrays_closest_grouped",
     "split_longer_than",
     "fill",
@@ -67,96 +65,25 @@ def sample(entries, start: int, rate: int, use_closest: bool, compress: bool = F
     return fit(out, compress=compress) if compress else out
 
 
-def sample_arrays_strict(ts, value, validity, start: int, rate: int):
-    """Vectorized strict sampling: value at each grid point where defined.
-
-    Equivalent to ``sample(..., use_closest=False)`` for fitted entries.
-    Returns (grid_ts, value, validity=rate) arrays.
-    """
-    ts = np.asarray(ts, np.int64)
-    value = np.asarray(value)
-    validity = np.asarray(validity, np.int64)
-    if ts.size == 0:
-        return ts, value, validity
-    end = int(ts[-1] + validity[-1])
-    if start >= end:
-        return ts[:0], value[:0], validity[:0]
-    k = (end - 1 - start) // rate
-    grid = start + rate * np.arange(k + 1, dtype=np.int64)
-    idx = np.searchsorted(ts, grid, side="right") - 1
-    ok = idx >= 0
-    idxc = np.clip(idx, 0, ts.size - 1)
-    defined = ok & (grid < ts[idxc] + validity[idxc])
-    g = grid[defined]
-    return g, value[idxc[defined]], np.full(g.size, rate, np.int64)
-
-
-def sample_arrays_closest(ts, value, validity, start: int, rate: int):
-    """Vectorized closest-in-window sampling, equivalent to
-    ``sample(..., use_closest=True)`` on fitted entries.
+def sample_arrays_closest_grouped(codes, ts, value, validity, rate: int):
+    """Closest-in-window sampling over MANY series in one vectorized pass;
+    per series the result equals ``sample(..., use_closest=True)`` on
+    fitted entries, with the grid starting at the series' first timestamp
+    (pinned by test).
 
     Declarative restatement of the sequential cursor (TimeSeries.scala:
-    601-646; proof sketch in __spark_entry__._sample_closest_sql, whose
-    DuckDB twin pins these semantics against the sequential kernel): at
-    grid point p the candidate range is [L..R] where L = last entry with
+    601-646; proof sketch in __spark_entry__._sample_closest_sql): at grid
+    point p the candidate range is [L..R] where L = last entry with
     ``ts <= p`` and R = last entry with ``ts <= p + rate/2``; the chosen
     entry is the argmin of |ts - p| with ties to the later entry, accepted
     iff its take rule holds (last entry: still defined at p; otherwise:
     defined-at-p with the successor beyond the half-window, or strictly
     closer than the successor).
-    """
-    ts = np.asarray(ts, np.int64)
-    value = np.asarray(value)
-    validity = np.asarray(validity, np.int64)
-    n = ts.size
-    if n == 0:
-        return [], [], []
-    half = rate // 2
-    end = int(ts[-1] + validity[-1])
-    if start >= end:
-        return [], [], []
-    k = (end - 1 - start) // rate
-    grid = start + rate * np.arange(k + 1, dtype=np.int64)
 
-    L = np.searchsorted(ts, grid, side="right") - 1
-    R = np.searchsorted(ts, grid + half, side="right") - 1
-    has = R >= 0
-    lo = np.clip(L, 0, None)
-
-    # argmin |ts - p| over [lo..R], ties -> later entry. Distance is
-    # unimodal over the range, so the winner is either lo (if it is still
-    # the closest) or the first entry at or after p -- compare those two.
-    after = np.clip(np.searchsorted(ts, grid, side="left"), 0, n - 1)
-    cand_after = np.minimum(after, np.clip(R, 0, None))
-    d_lo = np.abs(ts[lo] - grid)
-    d_after = np.abs(ts[cand_after] - grid)
-    chosen = np.where(d_lo < d_after, lo, cand_after)
-
-    until = ts[chosen] + validity[chosen]
-    nxt = np.where(chosen + 1 < n, ts[np.minimum(chosen + 1, n - 1)], 0)
-    is_last = chosen == n - 1
-    take_last = grid < until
-    take_mid = ((grid < until) & (nxt > grid + half)) | (
-        np.abs(ts[chosen] - grid) < np.abs(nxt - grid)
-    )
-    ok = has & np.where(is_last, take_last, take_mid)
-    g = grid[ok]
-    return (
-        g.tolist(),
-        value[chosen[ok]].tolist(),
-        np.full(g.size, rate, np.int64).tolist(),
-    )
-
-
-def sample_arrays_closest_grouped(codes, ts, value, validity, rate: int):
-    """Closest-in-window sampling over MANY series in one vectorized pass.
-
-    ``codes`` ascending, ``ts`` ascending within each code; each series'
-    grid starts at its own first timestamp. Offset packing gives every
-    series a disjoint int64 region of width ``span + rate/2 + 2`` so the
-    global searchsorted lookups are per-series exact (a grid probe
-    ``p + rate/2`` can never reach the next region); per series the result
-    equals :func:`sample_arrays_closest` (pinned by test).
+    ``codes`` ascending, ``ts`` ascending within each code. Offset packing
+    gives every series a disjoint int64 region of width ``span + rate/2 +
+    2`` so the global searchsorted lookups are per-series exact (a grid
+    probe ``p + rate/2`` can never reach the next region).
 
     Returns ``(out_codes, grid_ts, values, validities)`` numpy arrays, or
     ``None`` when ``n_series * stride`` would overflow the packed axis
@@ -189,7 +116,8 @@ def sample_arrays_closest_grouped(codes, ts, value, validity, rate: int):
     within = np.arange(total) - np.repeat(np.cumsum(ngrid) - ngrid, ngrid)
     grid = first_p[sidx] + rate * within
 
-    # same candidate/take logic as sample_arrays_closest, on the packed axis
+    # candidates [L..R]; |ts - p| is unimodal over them, so the winner is
+    # either L (if it is still the closest) or the first entry at or after p
     L = np.searchsorted(packed, grid, side="right") - 1
     R = np.searchsorted(packed, grid + half, side="right") - 1
     lo = np.clip(L, 0, None)

@@ -184,10 +184,10 @@ def read_blocks(
     )
 
     def _decode(batches):
-        # all blocks of the Arrow batch decode in one lockstep lane batch
-        # (kernel/gorilla.py decompress_arrays): the control-bit state
-        # machine advances every block one entry per numpy step, so Python
-        # overhead amortizes over the batch width
+        # all blocks of the Arrow batch decode in one batch
+        # (kernel/gorilla.py decompress_arrays): a wide batch runs the
+        # lockstep decoder, which advances every block one entry per numpy
+        # step, so Python overhead amortizes over the batch width
         for pdf in batches:
             rows = list(pdf.itertuples(index=False))
             sampled = [

@@ -11,7 +11,7 @@ Two execution strategies, chosen by semantics (SURVEY.md 2.9 / 3.3):
 - ``sliding_window_exact``: the reference-exact sweep (arbitrary emission
   boundaries, holes, time-unaware aggregators) via the numpy kernel per
   series group; the un-resampled ``sum`` sweep runs as a pure-Catalyst
-  boundary union (``sliding_window_exact_relational``).
+  boundary union (``_sliding_window_exact_relational``).
 
 One engine per shape, picked by the operator from the call's shape, never
 by a caller option: ``sample_closest`` is kernel-only; the un-resampled
@@ -27,9 +27,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "sliding_grid_agg",
     "sliding_window_exact",
-    "sliding_window_exact_relational",
     "rolling_values",
-    "rolling_values_relational",
     "dynamic_window_exact",
     "dynamic_window_relational",
     "sample_closest",
@@ -141,13 +139,13 @@ def sliding_window_exact(
 
     The plan is chosen by MEASUREMENT (BENCH/BASELINE.md exact-sweep
     crossover row): the un-resampled ``sum`` sweep runs the zero-Python
-    :func:`sliding_window_exact_relational` (2.5x the kernel at sf0.1 --
+    :func:`_sliding_window_exact_relational` (2.5x the kernel at sf0.1 --
     the sweep is pure boundary algebra, Catalyst's home turf); every other
     shape runs the kernel (the dense resample grid is numpy's home turf,
     same verdict as sample_closest).
     """
     if agg == "sum" and sample_rate is None:
-        return sliding_window_exact_relational(
+        return _sliding_window_exact_relational(
             df, key_cols, window_width, compress=compress
         )
     return _sliding_window_exact_kernel(
@@ -207,7 +205,7 @@ def _sliding_window_exact_kernel(
     return apply_grouped(df, key_cols, per_series_kernel(_sweep_seq), compress=compress)
 
 
-def sliding_window_exact_relational(
+def _sliding_window_exact_relational(
     df: DataFrame,
     key_cols: list[str],
     window_width: int,
@@ -283,7 +281,7 @@ def sliding_window_exact_relational(
     return out.select(*key_cols, "ts", _nan_as_null("value"), "validity")
 
 
-def rolling_values_relational(
+def _rolling_values_relational(
     df: DataFrame,
     key_cols: list[str],
     window_ms: int,
@@ -389,7 +387,7 @@ def rolling_values(
     through its END time, which is another row's attribute) -- but for the
     DECOMPOSABLE aggregates (sum/mean) it IS expressible as cumulative sums
     minus an as-of carry over end events, so those run the pure-Catalyst
-    :func:`rolling_values_relational` (zero Python). Every other agg
+    :func:`_rolling_values_relational` (zero Python). Every other agg
     (min/max: order statistics need the kernel's sparse-table RMQ) runs
     the contiguous-range kernel (kernel.window.rolling_grouped: one
     searchsorted + prefix sums / RMQ -- same argument as the exact sweep)
@@ -397,7 +395,7 @@ def rolling_values(
     on packed-axis overflow; arbitrary aggregators via
     kernel.window.rolling."""
     if agg in ("sum", "mean"):
-        return rolling_values_relational(
+        return _rolling_values_relational(
             df, key_cols, window_ms, agg=agg, compress=compress
         )
     return _rolling_values_kernel(df, key_cols, window_ms, agg, compress)

@@ -6,11 +6,14 @@ import struct
 import numpy as np
 import pytest
 
+from scala_timeseries_lib_spark.kernel import gorilla
 from scala_timeseries_lib_spark.kernel.gorilla import (
+    _LOCKSTEP_WIDTH,
+    _decompress_array_py,
     compress_array,
     compress_sampled_block,
     compress_tuple_block,
-    decompress_array,
+    decompress_arrays,
     decompress_sampled_block,
     decompress_tuple_block,
     deserialize_tuple_block,
@@ -75,7 +78,7 @@ class TestTupleBlock:
         with pytest.raises(ValueError):
             decompress_tuple_block(b"\x00\x00")
         with pytest.raises(ValueError):
-            decompress_array(b"garbage")
+            decompress_arrays([b"garbage"])
         # valid frame, garbage arrays
         with pytest.raises(ValueError):
             decompress_tuple_block(serialize_tuple_block(b"\x00" * 16, b"\x00" * 16))
@@ -121,14 +124,14 @@ class TestPropertyRoundTrips:
                 vals = np.full(n, 3.14159)
             ts_arr = np.asarray(ts, np.int64)
             data = compress_array(ts_arr, vals.view(np.uint64))
-            t2, v2 = decompress_array(data)
+            [(t2, v2)] = decompress_arrays([data])
             assert np.array_equal(t2, ts_arr)
             assert np.array_equal(v2.view(np.float64), vals)
 
     def test_special_doubles(self):
         vals = np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1e-308, 1.7e308])
         ts = np.arange(1, len(vals) + 1, dtype=np.int64)
-        t2, v2 = decompress_array(compress_array(ts, vals.view(np.uint64)))
+        [(t2, v2)] = decompress_arrays([compress_array(ts, vals.view(np.uint64))])
         assert np.array_equal(t2, ts)
         assert np.array_equal(v2, vals.view(np.uint64))
 
@@ -141,10 +144,22 @@ class TestPropertyRoundTrips:
         assert len(data) < n * 16 / 10  # >10x better than raw (ts,value) pairs
 
 
+def _count_sequential(monkeypatch):
+    """Count the blocks decompress_arrays hands to the sequential decoder."""
+    calls = []
+
+    def spy(data):
+        calls.append(data)
+        return _decompress_array_py(data)
+
+    monkeypatch.setattr(gorilla, "_decompress_array_py", spy)
+    return calls
+
+
 class TestLockstepBatchDecoder:
-    """decompress_arrays (lockstep lane decoder) must agree bit-for-bit with
-    both the two-phase single-block decoder and the sequential twin on every
-    block of a heterogeneous batch."""
+    """decompress_arrays must agree bit-for-bit with the sequential
+    reference decoder on every block of a heterogeneous batch, whichever
+    decoder the batch width picks."""
 
     def _random_batch(self, rng, n_blocks):
         blocks, expected = [], []
@@ -167,27 +182,40 @@ class TestLockstepBatchDecoder:
             expected.append((ts, vals))
         return blocks, expected
 
-    def test_matches_single_block_decoders(self):
-        from scala_timeseries_lib_spark.kernel.gorilla import (
-            _decompress_array_py,
-            decompress_arrays,
-        )
-
+    def test_matches_single_block_decoders(self, monkeypatch):
         rng = np.random.default_rng(99)
         blocks, expected = self._random_batch(rng, 60)
+        sequential = _count_sequential(monkeypatch)
         decoded = decompress_arrays(blocks)
+        assert not sequential  # the batch is wide: lockstep decoded it
         assert len(decoded) == len(blocks)
         for blob, (t_exp, v_exp), (t_got, v_got) in zip(blocks, expected, decoded):
             assert np.array_equal(t_got, t_exp)
             assert np.array_equal(v_got, v_exp)
-            t_two, v_two = decompress_array(blob)
             t_py, v_py = _decompress_array_py(blob)
-            assert np.array_equal(t_got, t_two) and np.array_equal(v_got, v_two)
             assert np.array_equal(t_got, t_py) and np.array_equal(v_got, v_py)
 
-    def test_single_entry_and_size_skew(self):
-        from scala_timeseries_lib_spark.kernel.gorilla import decompress_arrays
+    @pytest.mark.parametrize(
+        "lanes", [1, 2, _LOCKSTEP_WIDTH - 1, _LOCKSTEP_WIDTH, _LOCKSTEP_WIDTH + 1, 64]
+    )
+    def test_every_width_matches_sequential(self, lanes):
+        rng = np.random.default_rng(lanes)
+        blocks, _ = self._random_batch(rng, lanes)
+        for blob, (t_got, v_got) in zip(blocks, decompress_arrays(blocks)):
+            t_py, v_py = _decompress_array_py(blob)
+            assert np.array_equal(t_got, t_py) and np.array_equal(v_got, v_py)
 
+    @pytest.mark.parametrize("lanes", [1, 2, _LOCKSTEP_WIDTH - 1, _LOCKSTEP_WIDTH])
+    def test_width_picks_decoder(self, monkeypatch, lanes):
+        # equal blocks: lockstep from _LOCKSTEP_WIDTH lanes on; a lone tuple
+        # block (two lanes) decodes sequentially
+        blob = compress_array(1 + np.arange(50, dtype=np.int64),
+                              np.arange(50.0).view(np.uint64))
+        sequential = _count_sequential(monkeypatch)
+        decompress_arrays([blob] * lanes)
+        assert len(sequential) == (0 if lanes >= _LOCKSTEP_WIDTH else lanes)
+
+    def test_single_entry_and_size_skew(self):
         # one-entry blocks next to a long block: lanes retire at different steps
         long_ts = 1 + 1000 * np.arange(5000, dtype=np.int64)
         long_vals = np.cumsum(np.ones(5000)).view(np.uint64)
@@ -204,8 +232,6 @@ class TestLockstepBatchDecoder:
         assert np.array_equal(out[2][1].view(np.float64), [0.0, 0.0])
 
     def test_empty_and_corrupt_batch(self):
-        from scala_timeseries_lib_spark.kernel.gorilla import decompress_arrays
-
         assert decompress_arrays([]) == []
         good = compress_array(np.array([1, 2, 3], np.int64),
                               np.array([1.0, 2.0, 3.0]).view(np.uint64))
@@ -213,6 +239,19 @@ class TestLockstepBatchDecoder:
             decompress_arrays([good, b"garbage"])
         with pytest.raises(ValueError):
             decompress_arrays([good, good[:14]])
+
+    def test_corrupt_entry_count_fails_before_allocating(self):
+        # 2^31 entries cannot fit in 20 payload bytes: both decoders must
+        # reject the header instead of allocating 16 GiB per output array
+        good = compress_array(np.array([1, 2, 3], np.int64),
+                              np.array([1.0, 2.0, 3.0]).view(np.uint64))
+        bad = struct.pack("<Iq", 1 << 31, 5) + b"\0" * 20
+        with pytest.raises(ValueError, match="bad entry count"):
+            _decompress_array_py(bad)
+        with pytest.raises(ValueError, match="bad entry count"):
+            decompress_arrays([good, bad])
+        with pytest.raises(ValueError, match="bad entry count"):
+            decompress_arrays([good] * _LOCKSTEP_WIDTH + [bad])
 
     def test_tuple_blocks_batch(self):
         from scala_timeseries_lib_spark.kernel.gorilla import (
@@ -245,11 +284,7 @@ class TestVectorizedEncoderCrossCheck:
     def test_vec_and_sequential_encoders_roundtrip_identically(self):
         import numpy as np
 
-        from scala_timeseries_lib_spark.kernel.gorilla import (
-            _compress_array_py,
-            compress_array,
-            decompress_array,
-        )
+        from scala_timeseries_lib_spark.kernel.gorilla import _compress_array_py
 
         rng = np.random.default_rng(17)
         for trial in range(40):
@@ -264,6 +299,6 @@ class TestVectorizedEncoderCrossCheck:
                     np.uint64
                 )
             for enc in (compress_array, _compress_array_py):
-                t2, v2 = decompress_array(enc(ts, vals))
+                [(t2, v2)] = decompress_arrays([enc(ts, vals)])
                 assert np.array_equal(t2, ts)
                 assert np.array_equal(v2, vals)

@@ -72,3 +72,25 @@ def test_operators_take_no_plan_selector():
     for name in ("merge_series_relational", "merge_series_n_relational",
                  "strict_zip_series_relational", "_route_engine"):
         assert not hasattr(merge, name), name
+
+
+def test_kernel_twins_stay_gone():
+    """Each kernel keeps its production form and its sequential reference
+    only: the deleted twins, dead helpers and copied segment lookups are not
+    defined or referenced anywhere in the package, and the window's
+    relational functions are private."""
+    gone = {
+        "decompress_array", "decompress_tuple_block_arrays", "_within",
+        "sample_arrays_closest", "sample_arrays_strict",
+        "step_integral_arrays", "_value_at", "_union_segments", "_side_at",
+        "sliding_window_exact_relational", "rolling_values_relational",
+    }
+    found = []
+    for path in (ROOT / PKG).rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            for field in ("name", "asname", "id", "attr", "value"):
+                x = getattr(node, field, None)
+                if isinstance(x, str) and x in gone:
+                    found.append(f"{path.relative_to(ROOT)}:"
+                                 f"{getattr(node, 'lineno', '?')}: {x}")
+    assert not found, "\n".join(found)

@@ -310,7 +310,7 @@ class TestGroupedKernels:
     def test_sample_closest_grouped_matches_per_series(self, seed):
         from scala_timeseries_lib_spark.kernel.fitter import fit_arrays
         from scala_timeseries_lib_spark.kernel.sample import (
-            sample_arrays_closest,
+            sample,
             sample_arrays_closest_grouped,
         )
 
@@ -328,18 +328,19 @@ class TestGroupedKernels:
             ts_l.append(ts)
             val_l.append(val)
             dur_l.append(dur)
-            g, v, d = sample_arrays_closest(ts, val, dur, int(ts[0]), rate)
-            per_series.append((list(g), list(v), list(d)))
+            entries = list(zip(ts.tolist(), val.tolist(), dur.tolist()))
+            per_series.append(
+                sample(entries, int(ts[0]), rate, use_closest=True)
+            )
         codes = np.concatenate(codes_l)
         oc, og, ov, od = sample_arrays_closest_grouped(
             codes, np.concatenate(ts_l), np.concatenate(val_l),
             np.concatenate(dur_l), rate,
         )
-        for c, (e_g, e_v, e_d) in enumerate(per_series):
+        for c, want in enumerate(per_series):
             m = oc == c
-            assert og[m].tolist() == e_g
-            assert ov[m].tolist() == e_v
-            assert od[m].tolist() == e_d
+            got = zip(og[m].tolist(), ov[m].tolist(), od[m].tolist())
+            assert list(got) == want
 
     def test_sample_closest_grouped_overflow_returns_none(self):
         from scala_timeseries_lib_spark.kernel.sample import (

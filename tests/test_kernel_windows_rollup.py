@@ -24,7 +24,6 @@ from scala_timeseries_lib_spark.kernel.integral import (
 from scala_timeseries_lib_spark.kernel.sample import (
     fill,
     sample,
-    sample_arrays_strict,
     split_longer_than,
 )
 from scala_timeseries_lib_spark.kernel import window as kwin
@@ -122,14 +121,6 @@ class TestSampling:
         series = [(4, 0.123, 7), (14, 0.234, 8), (23, 0.345, 8)]
         got = sample(series, 0, 10, use_closest=True, compress=True)
         assert got == [(0, 0.123, 10), (10, 0.234, 10), (20, 0.345, 20)]
-
-    def test_strict_vectorized_equivalence(self):
-        series = [(4, 1.0, 7), (14, 2.0, 8), (30, 3.0, 8)]
-        seq = sample(series, 0, 5, use_closest=False)
-        ts, val, validity = sample_arrays_strict(
-            [e[0] for e in series], [e[1] for e in series], [e[2] for e in series], 0, 5
-        )
-        assert seq == [(int(t), float(v), int(d)) for t, v, d in zip(ts, val, validity)]
 
     def test_split_longer_than(self):
         assert split_longer_than([(0, 7.0, 25)], 10) == [

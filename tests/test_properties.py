@@ -198,25 +198,15 @@ def test_fit_arrays_grouped_equals_per_series_fit(series_list, compress):
 @given(multi_series, st.integers(min_value=2, max_value=600))
 @settings(max_examples=60, deadline=None)
 def test_sample_closest_grouped_equals_per_series(series_list, rate):
-    from scala_timeseries_lib_spark.kernel.sample import (
-        sample_arrays_closest,
-        sample_arrays_closest_grouped,
-    )
-
     fitted = [fit(s, compress=False) for s in series_list]
     codes, ts, val, dur = _grouped_arrays(fitted)
-    oc, og, ov, od = sample_arrays_closest_grouped(codes, ts, val, dur, rate)
+    oc, og, ov, od = ksample.sample_arrays_closest_grouped(
+        codes, ts, val, dur, rate
+    )
     for c, s in enumerate(fitted):
-        g, v, d = sample_arrays_closest(
-            np.array([e[0] for e in s], np.int64),
-            np.array([e[1] for e in s]),
-            np.array([e[2] for e in s], np.int64),
-            s[0][0], rate,
-        )
         m = oc == c
-        assert og[m].tolist() == list(g)
-        assert ov[m].tolist() == list(v)
-        assert od[m].tolist() == list(d)
+        got = zip(og[m].tolist(), ov[m].tolist(), od[m].tolist())
+        assert list(got) == ksample.sample(s, s[0][0], rate, use_closest=True)
 
 
 @given(multi_series, st.integers(min_value=1, max_value=2000),

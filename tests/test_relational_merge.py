@@ -398,7 +398,7 @@ def test_relational_time_slice_rejects_hole_filling_ops(spark, monkeypatch):
 
 def test_rolling_relational_matches_kernel(spark):
     """rolling(sum|mean) via cumulative sums minus an as-of end-event carry
-    (operators/window.py rolling_values_relational) must match the
+    (operators/window.py _rolling_values_relational) must match the
     contiguous-range kernel bit-for-bit on fitted series."""
     from scala_timeseries_lib_spark.operators.window import (
         _rolling_values_kernel,

@@ -309,11 +309,11 @@ class TestSampleClosestVectorized:
                 continue
             rate = int(rng.integers(1, 40)) * 10
             seq = ksample.sample(es, es[0][0], rate, use_closest=True)
-            g, v, d = ksample.sample_arrays_closest(
-                [e[0] for e in es], [e[1] for e in es], [e[2] for e in es],
-                es[0][0], rate,
+            _c, g, v, d = ksample.sample_arrays_closest_grouped(
+                np.zeros(len(es), np.int64), [e[0] for e in es],
+                [e[1] for e in es], [e[2] for e in es], rate,
             )
-            assert list(zip(g, v, d)) == seq
+            assert list(zip(g.tolist(), v.tolist(), d.tolist())) == seq
 
 
 class TestDynamicWindowRelational:
