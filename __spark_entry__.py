@@ -22,6 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# engine-agnostic rounding for oracle-hashed floats; every oracle SQL uses
+# the identical FLOOR expression (functions/rounding.py)
+from scala_timeseries_lib_spark.functions.rounding import eps_floor  # noqa: E402
+
 CAP_MS = 3_600_000  # default validity cap (1h)
 HOUR = 3_600_000
 DAY = 86_400_000
@@ -29,16 +33,6 @@ RATE_10M = 600_000
 SLICE_LO = 1_704_844_800_000  # 2024-01-10 00:00:00 UTC
 SLICE_HI = 1_705_708_800_000  # 2024-01-20 00:00:00 UTC
 KEYS = ["user_id", "event_type"]
-
-
-def _eps5(col, digits: int = 5):
-    """Engine-agnostic rounding for oracle-hashed floats (ROUND is half-up
-    in Spark, half-even in DuckDB; see functions/rounding.py). Every oracle
-    SQL uses the identical FLOOR expression."""
-    from pyspark.sql import functions as F
-
-    m = 10 ** digits
-    return F.floor(col * m + 0.5 + 1e-6) / m
 
 
 def _prep(spark: SparkSession) -> None:
@@ -125,19 +119,24 @@ def _q_step_integral(spark, sf_dir):
     from scala_timeseries_lib_spark.operators import series_ops as ops
 
     df = ops.step_integral(_entries(spark, sf_dir), KEYS, "ms")
-    return df.withColumn("value", _eps5(F.col("value")))
+    return df.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_rollup_1h(spark, sf_dir):
+    from pyspark.sql import functions as F
+
     from scala_timeseries_lib_spark.operators import series_ops as ops
 
-    return ops.rollup_time_weighted(
-        _entries(spark, sf_dir), KEYS, HOUR, round_to=5,
+    hour = ops.rollup_time_weighted(
+        _entries(spark, sf_dir), KEYS, HOUR,
         # sf0.1-scale inputs sit below the split rollup's crossover
         # (~10^7 pieces): the single-aggregate plan has fewer stages and
         # wins when the job is scheduling-bound (see rollup_time_weighted)
         disjoint=False,
     ).drop("n_pieces")
+    return hour.withColumn("twmean", eps_floor(F.col("twmean"))).withColumn(
+        "integral_s", eps_floor(F.col("integral_s"))
+    )
 
 
 def _q_rollup_1d_from_1h(spark, sf_dir):
@@ -149,8 +148,8 @@ def _q_rollup_1d_from_1h(spark, sf_dir):
         _entries(spark, sf_dir), KEYS, HOUR, disjoint=False
     )
     day = ops.reaggregate_rollup(tier_1h, KEYS, DAY).drop("n_pieces")
-    return day.withColumn("twmean", _eps5(F.col("twmean"))).withColumn(
-        "integral_s", _eps5(F.col("integral_s"))
+    return day.withColumn("twmean", eps_floor(F.col("twmean"))).withColumn(
+        "integral_s", eps_floor(F.col("integral_s"))
     )
 
 
@@ -207,7 +206,7 @@ def _q_sliding_integral_1h(spark, sf_dir):
 
     grid = _sampled_filled(spark, sf_dir)
     out = sliding_grid_agg(grid, KEYS, HOUR, RATE_10M, agg="integral", timeunit="ms")
-    return out.withColumn("value", _eps5(F.col("value")))
+    return out.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_sliding_mean_1h(spark, sf_dir):
@@ -217,7 +216,7 @@ def _q_sliding_mean_1h(spark, sf_dir):
 
     grid = _sampled_filled(spark, sf_dir)
     out = sliding_grid_agg(grid, KEYS, HOUR, RATE_10M, agg="mean", timeunit="ms")
-    return out.withColumn("value", _eps5(F.col("value")))
+    return out.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_rollup_hist_median(spark, sf_dir):
@@ -240,9 +239,7 @@ def _q_integrate_between(spark, sf_dir):
     from scala_timeseries_lib_spark.operators import series_ops as ops
 
     out = ops.integrate_between(_entries(spark, sf_dir), KEYS, SLICE_LO, SLICE_HI)
-    return out.withColumn(
-        "value_sum", F.floor(F.col("value_sum") * 100000 + 0.5 + 1e-6) / 100000
-    )
+    return out.withColumn("value_sum", eps_floor(F.col("value_sum")))
 
 
 def _q_series_stats(spark, sf_dir):
@@ -253,8 +250,7 @@ def _q_series_stats(spark, sf_dir):
     # epsilon-floor rounding (same rule as value_stats) to kill cross-engine
     # half-up tie-break divergence on the ratio
     return ops.series_stats(_entries(spark, sf_dir), KEYS).withColumn(
-        "support_ratio",
-        F.floor(F.col("support_ratio") * 100000 + 0.5 + 1e-6) / 100000,
+        "support_ratio", eps_floor(F.col("support_ratio"))
     )
 
 
@@ -405,7 +401,7 @@ def _q_dynamic_window(spark, sf_dir):
         stop_expr=F.col("value") < DYN_STOP,
         agg="mean",
     )
-    return out.withColumn("value", _eps5(F.col("value")))
+    return out.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_sample_closest(spark, sf_dir):
@@ -420,9 +416,7 @@ def _q_sample_closest(spark, sf_dir):
 def _round5(df):
     from pyspark.sql import functions as F
 
-    return df.withColumn(
-        "value", F.floor(F.col("value") * 100000 + 0.5 + 1e-6) / 100000
-    )
+    return df.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_sliding_exact_sum(spark, sf_dir):
@@ -487,15 +481,10 @@ def _q_reservoir_stats(spark, sf_dir):
 
     out = ops.reservoir_stats(_entries(spark, sf_dir), KEYS, size=1028)
 
-    def r5(c):
-        # epsilon-floor rounding, engine-agnostic (ROUND is half-even in
-        # DuckDB, half-up in Spark)
-        return F.floor(F.col(c) * 100000 + 0.5 + 1e-6) / 100000
-
     return (
-        out.withColumn("mean", r5("mean"))
-        .withColumn("stddev", r5("stddev"))
-        .withColumn("median", r5("median"))
+        out.withColumn("mean", eps_floor(F.col("mean")))
+        .withColumn("stddev", eps_floor(F.col("stddev")))
+        .withColumn("median", eps_floor(F.col("median")))
     )
 
 
@@ -670,7 +659,7 @@ def _q_sliding_std_1h(spark, sf_dir):
 
     grid = _sampled_filled(spark, sf_dir)
     out = sliding_grid_agg(grid, KEYS, HOUR, RATE_10M, agg="std")
-    return out.withColumn("value", _eps5(F.col("value")))
+    return out.withColumn("value", eps_floor(F.col("value")))
 
 
 def _q_strict_zip(spark, sf_dir):
@@ -712,7 +701,7 @@ def _q_sliding_median_1h(spark, sf_dir):
 
     grid = _sampled_filled(spark, sf_dir)
     out = sliding_grid_agg(grid, KEYS, HOUR, RATE_10M, agg="median")
-    return out.withColumn("value", _eps5(F.col("value")))
+    return out.withColumn("value", eps_floor(F.col("value")))
 
 
 MAP_FILTER_THRESHOLD = 50.0
@@ -725,7 +714,7 @@ def _q_map_filter(spark, sf_dir):
 
     entries = _entries(spark, sf_dir)
     return entries.filter(F.col("value") >= MAP_FILTER_THRESHOLD).withColumn(
-        "value", _eps5(F.col("value") * 1.5 + 1.0)
+        "value", eps_floor(F.col("value") * 1.5 + 1.0)
     )
 
 

@@ -347,7 +347,7 @@ def _lang_pred_expr(text_col: str = "text"):
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic document quality in [0,1]: length saturation + stopword
     plausibility + token-length plausibility. Deterministic linear blend."""
-    return df.select("doc_id", (F.floor(_quality_expr(text_col) * 100000 + 0.5 + 1e-6) / 100000).alias("quality"))
+    return df.select("doc_id", eps_floor(_quality_expr(text_col), 5).alias("quality"))
 
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -391,7 +391,7 @@ def quality_filter(
         "doc_id",
         _lang_pred_expr(text_col).alias("pred_lang"),
         F.size(_tokens(text_col)).cast("long").alias("n_tokens"),
-        (F.floor(_quality_expr(text_col) * 100000 + 0.5 + 1e-6) / 100000).alias("quality"),
+        eps_floor(_quality_expr(text_col), 5).alias("quality"),
     ).filter(
         (F.col("quality") >= min_quality)
         & F.col("n_tokens").between(min_tokens, max_tokens)

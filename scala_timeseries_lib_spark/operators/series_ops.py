@@ -8,8 +8,10 @@ operator inventory (SURVEY.md section 2.3-2.5, 2.7-2.8, 2.10).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.rounding import eps_floor
 
 __all__ = [
     "trim_right",
@@ -24,6 +26,7 @@ __all__ = [
     "step_integral",
     "rollup_time_weighted",
     "rollup_time_weighted_parts",
+    "rollup_stats",
     "reaggregate_rollup",
     "series_stats",
     "reservoir_stats",
@@ -189,18 +192,19 @@ def step_integral(
     )
 
 
-def _rollup_round(agg: DataFrame, round_to: int | None) -> DataFrame:
-    """``round_to`` exists for cross-engine hash comparison, so it uses
-    the engine-agnostic eps-floor rounding (functions.rounding) rather than
-    ROUND (half-up in Spark, half-even in DuckDB -- same value can round
-    differently at decimal boundaries)."""
-    if round_to is None:
-        return agg
-    from ..functions.rounding import eps_floor  # noqa: PLC0415
-
-    return agg.withColumn(
-        "twmean", eps_floor(F.col("twmean"), round_to)
-    ).withColumn("integral_s", eps_floor(F.col("integral_s"), round_to))
+def rollup_stats() -> list[Column]:
+    """The six reaggregatable sufficient statistics of one (key, bucket)
+    group of bucket-clipped pieces (``value``, ``validity``): the rollup
+    schema's ``twmean, vmin, vmax, integral_s, support_ms, n_pieces``."""
+    wsum = F.sum(F.col("value") * F.col("validity"))
+    return [
+        (wsum / F.sum("validity")).alias("twmean"),
+        F.min("value").alias("vmin"),
+        F.max("value").alias("vmax"),
+        (wsum / 1000.0).alias("integral_s"),
+        F.sum("validity").alias("support_ms"),
+        F.count(F.lit(1)).alias("n_pieces"),
+    ]
 
 
 def rollup_time_weighted_parts(
@@ -293,16 +297,7 @@ def rollup_time_weighted_parts(
             (F.col("p.puntil") - F.col("p.pts")).alias("validity"),
         )
         .groupBy(*key_cols, "bucket")
-        .agg(
-            (F.sum(F.col("value") * F.col("validity")) / F.sum("validity")).alias(
-                "twmean"
-            ),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            (F.sum(F.col("value") * F.col("validity")) / 1000.0).alias("integral_s"),
-            F.sum("validity").alias("support_ms"),
-            F.count(F.lit(1)).alias("n_pieces"),
-        )
+        .agg(*rollup_stats())
     )
     return full, partial
 
@@ -312,9 +307,7 @@ def rollup_time_weighted(
     key_cols: list[str],
     step: int,
     origin: int = 0,
-    round_to: int | None = None,
     disjoint: bool = False,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Continuous-aggregate rollup (TimeSeries.scala:501-508): boundary-split
     then per-bucket aggregates. Emits the reaggregatable sufficient
@@ -340,48 +333,33 @@ def rollup_time_weighted(
     Small jobs are scheduling-bound and the single-aggregate
     ``disjoint=False`` plan is faster (0.7 s vs 1.9 s at sf0.1/1h); at
     scale the split wins up to 7x (0.9 s vs 6.7 s at 76M pieces, 32
-    cores), and it is the hot-key plan (a key's 16M pieces aggregate in one
-    task at ~1 us a piece, 17 s; the split took 2.3 s). Callers that know
-    they are small may pass ``disjoint=False`` purely as a physical hint --
-    results are identical on well-formed input. ``TierPipeline`` picks by
-    a piece bound: single aggregate below 1M pieces (<= ~1 s even if one key
-    owns them all), split from there (``plans/tiers.py:SPLIT_MIN_PIECES``).
+    cores), and it is the hot-key plan: a key's pieces aggregate in one
+    task at ~1 us a piece (16M took 17 s, the split 2.3 s; on a 4M-entry
+    hot key the split also beat a round-robin spread of the input, 2.29 s
+    vs 4.02 s at 32 cores, BENCH/skew_r4.json). Callers that know they are
+    small may pass ``disjoint=False`` purely as a physical hint -- results
+    are identical on well-formed input. ``TierPipeline`` picks by a piece
+    bound: single aggregate below 1M pieces (<= ~1 s even if one key owns
+    them all), split from there (``plans/tiers.py:SPLIT_MIN_PIECES``).
 
     Physical shape (both paths): the compact input is repartitioned on the
     series key to full parallelism BEFORE the explode -- AQE happily
     coalesces the small pre-explode data into a handful of partitions, which
     would serialize the 60x-amplified Generate. Hash partitioning on the key
     satisfies the (key, bucket) group clustering, so no aggregation in the
-    plan needs a further exchange (verify with .explain).
-
-    ``skew_safe=True`` trades that shuffle-free chain for straggler
-    immunity: the input is spread round-robin instead of clustered by key,
-    so ONE pathological series (a hot domain with millions of snapshots)
-    splits across every core instead of serializing one task; Catalyst
-    inserts the (key, bucket) exchange the aggregation then needs. Use it
-    when a single key dominates the input (measured in
-    tools/skew_bench.py); the default is faster when keys are plentiful.
+    plan needs a further exchange (verify with .explain). Oracle-compared
+    floats are rounded by the caller (``functions.rounding.eps_floor``).
     """
     sc = df.sparkSession.sparkContext
-    if skew_safe:
-        df = df.repartition(sc.defaultParallelism * 2)
-    else:
-        df = df.repartition(sc.defaultParallelism * 2, *key_cols)
+    df = df.repartition(sc.defaultParallelism * 2, *key_cols)
     if disjoint:
         full, partial = rollup_time_weighted_parts(df, key_cols, step, origin)
-        return _rollup_round(full, round_to).unionByName(
-            _rollup_round(partial, round_to)
-        )
-    pieces = split_at_buckets(df, step, origin)
-    agg = pieces.groupBy(*key_cols, "bucket").agg(
-        (F.sum(F.col("value") * F.col("validity")) / F.sum("validity")).alias("twmean"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-        (F.sum(F.col("value") * F.col("validity")) / 1000.0).alias("integral_s"),
-        F.sum("validity").alias("support_ms"),
-        F.count(F.lit(1)).alias("n_pieces"),
+        return full.unionByName(partial)
+    return (
+        split_at_buckets(df, step, origin)
+        .groupBy(*key_cols, "bucket")
+        .agg(*rollup_stats())
     )
-    return _rollup_round(agg, round_to)
 
 
 def reaggregate_rollup(
@@ -637,17 +615,14 @@ def value_stats(df: DataFrame, key_cols: list[str], round_to: int = 5) -> DataFr
     # epsilon-biased half-up rounding: plain round() ties (exact .5 at the
     # last digit, common when averaging 2-decimal values) resolve
     # differently across engines
-    scale = float(10**round_to)
-
-    def r5(col):
-        return F.floor(col * scale + 0.5 + 1e-6) / scale
-
     return df.groupBy(*key_cols).agg(
         F.min("value").alias("vmin"),
         F.max("value").alias("vmax"),
-        r5(F.avg("value")).alias("vmean"),
-        r5(F.coalesce(F.stddev_samp("value"), F.lit(0.0))).alias("vstddev"),
-        r5(F.expr("percentile(value, 0.5)")).alias("vmedian"),
+        eps_floor(F.avg("value"), round_to).alias("vmean"),
+        eps_floor(
+            F.coalesce(F.stddev_samp("value"), F.lit(0.0)), round_to
+        ).alias("vstddev"),
+        eps_floor(F.expr("percentile(value, 0.5)"), round_to).alias("vmedian"),
         F.count(F.lit(1)).alias("n"),
     )
 

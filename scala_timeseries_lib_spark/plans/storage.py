@@ -18,8 +18,9 @@ Both backends implement the same contract the pipeline needs:
   ``writeTo(...).overwritePartitions()``; parquet:
   ``partitionOverwriteMode=dynamic``). This is what makes incremental
   reruns idempotent.
-- ``read(spark, ref)`` -- full-table read (partition pruning comes from
-  downstream filters either way).
+- ``read(spark, ref, schema=None)`` -- full-table read (partition pruning
+  comes from downstream filters either way). A known ``schema`` spares
+  parquet its schema-inference job; Iceberg tables carry their own.
 - ``ref(base_dir, name)`` -- backend-native table reference (a path for
   parquet, a catalog table identifier for Iceberg).
 - ``append(df, ref)`` -- append-only side tables (lineage metrics).
@@ -35,6 +36,7 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = [
     "StorageBackend",
@@ -71,7 +73,9 @@ class StorageBackend:
     ) -> None:
         raise NotImplementedError
 
-    def read(self, spark: SparkSession, ref: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, ref: str, schema: StructType | None = None
+    ) -> DataFrame:
         raise NotImplementedError
 
     def append(self, df: DataFrame, ref: str) -> None:
@@ -123,8 +127,11 @@ class ParquetBackend(StorageBackend):
             .parquet(ref)
         )
 
-    def read(self, spark: SparkSession, ref: str) -> DataFrame:
-        return spark.read.parquet(ref)
+    def read(
+        self, spark: SparkSession, ref: str, schema: StructType | None = None
+    ) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(ref)
 
     def append(self, df: DataFrame, ref: str) -> None:
         df.write.mode("append").parquet(ref)
@@ -257,7 +264,9 @@ class IcebergBackend(StorageBackend):
         else:
             df.writeTo(ref).overwritePartitions()
 
-    def read(self, spark: SparkSession, ref: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, ref: str, schema: StructType | None = None
+    ) -> DataFrame:
         return spark.table(ref)
 
     def append(self, df: DataFrame, ref: str) -> None:

@@ -14,11 +14,16 @@ Finest-tier plan, chosen by size: the run's stats aggregate (one job,
 needed anyway for rows in and watermarks) also sums entry validity, which
 bounds the finest-tier pieces by ``sum(validity) // step + 2 * rows``.
 Below ``SPLIT_MIN_PIECES`` (1M) the tier is one explode + hash aggregate
-(``rollup_time_weighted(disjoint=False)``) and 1h/1d reaggregate it; at or
-above, the full/partial split of ``rollup_time_weighted_parts`` takes over
-(no hash table for fully-covered buckets; its ~2 extra stages only pay off
-at scale). The choice is logged as one INFO record (``op``
-``tiers.finest_plan``) on the ``scala_timeseries_lib_spark`` logger.
+(``rollup_time_weighted(disjoint=False)``); at or above, the operator's
+full/partial split (``disjoint=True``: no hash table for fully-covered
+buckets; its ~2 extra stages only pay off at scale). The choice is logged
+as one INFO record (``op`` ``tiers.finest_plan``) on the
+``scala_timeseries_lib_spark`` logger.
+
+One tier chain, on cold and incremental runs alike: every coarser tier is
+``reaggregate_rollup`` of the STORED finer tier, read back with the schema
+of the frame just written (no inference job), so raw data is only ever
+scanned by the finest tier and nothing is persisted in memory.
 
 Incremental maintenance: each run processes, per key-salt partition, only
 entries whose domain reaches past that partition's checkpointed watermark
@@ -38,8 +43,7 @@ spread over ``n_salt`` files and time pruning works on the partition
 column. Partition slabs widen with the tier (>= 256 buckets per slab):
 coarser tiers have ~1/60th the rows, and per-dir commit cost would dominate
 their writes under a fixed daily layout. On incremental runs each coarser
-tier reads the STORED finer tier back for its full rewrite window, so raw
-data is only ever scanned by the finest tier.
+tier reads the stored finer tier back for its own full rewrite window.
 """
 
 from __future__ import annotations
@@ -50,12 +54,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..operators.series_ops import (
-    reaggregate_rollup,
-    rollup_time_weighted,
-    rollup_time_weighted_parts,
-)
+from ..operators.series_ops import reaggregate_rollup, rollup_time_weighted
 from .stateio import StateIO
 from .storage import ParquetBackend, StorageBackend
 
@@ -64,11 +65,10 @@ __all__ = ["TierPipeline", "TIER_STEPS"]
 TIER_STEPS = {"1m": 60_000, "1h": 3_600_000, "1d": 86_400_000}
 
 # Finest-tier piece bound from which the full/partial split plan is built.
-# Below it the single explode + hash aggregate is cheaper (fewer stages and
-# one persisted frame instead of two), and still safe for a hot key: the
-# aggregate runs ~1 us per piece in one task (16M hot-key pieces took 17 s,
-# BENCH/BASELINE.md), so <= 1M pieces cost <= ~1 s even if one key owns
-# them all.
+# Below it the single explode + hash aggregate is cheaper (fewer stages),
+# and still safe for a hot key: the aggregate runs ~1 us per piece in one
+# task (16M hot-key pieces took 17 s, BENCH/BASELINE.md), so <= 1M pieces
+# cost <= ~1 s even if one key owns them all.
 SPLIT_MIN_PIECES = 1_000_000
 
 # "no lower bound" for per-salt maps
@@ -92,18 +92,17 @@ class TierPipeline:
 
     Rerun idempotence is **up to rounding, not byte-exact** (ADVICE r3):
     coarser-tier float aggregates (``twmean``/``integral_s``) are sums of
-    doubles, and IEEE summation order differs between the first-run chain
-    (reaggregation of the in-memory finest tier, per branch under the
-    split plan) and an incremental rerun (single reaggregation of the
-    stored tier), and between the single and split finest-tier plans --
-    and is not even deterministic WITHIN one path, since hash-aggregate
-    accumulation order follows row arrival order. A rewrite of an unchanged
-    partition may therefore flip the last ulp of a float column. Exact
-    columns (``bucket``, ``vmin``/``vmax``, ``support_ms``, ``n_pieces``)
-    are byte-stable; float equality across reruns is pinned at 9 decimals
-    by tests/test_pipeline_e2e.py. Consumers needing cross-run hash
-    equality should round floats (functions/rounding.py:eps_floor), as the
-    oracle queries do."""
+    doubles, and IEEE summation order differs between the single and split
+    finest-tier plans -- and is not even deterministic WITHIN one plan,
+    since hash-aggregate accumulation order follows row arrival order.
+    Cold and incremental runs share one reaggregation path (the stored
+    finer tier), so they differ only in that arrival order. A rewrite of an
+    unchanged partition may therefore flip the last ulp of a float column.
+    Exact columns (``bucket``, ``vmin``/``vmax``, ``support_ms``,
+    ``n_pieces``) are byte-stable; float equality across reruns is pinned
+    at 9 decimals by tests/test_pipeline_e2e.py. Consumers needing
+    cross-run hash equality should round floats
+    (functions/rounding.py:eps_floor), as the oracle queries do."""
 
     def __init__(
         self,
@@ -290,96 +289,30 @@ class TierPipeline:
                 "elapsed_ms": stats_ms,
             },
         )
-        keep = (
-            self._per_salt_bucket_filter(lows[finest]) if changed_from else None
+        tier_df = rollup_time_weighted(
+            new_entries, self.key_cols, step, disjoint=split
         )
-
-        def window(df: DataFrame) -> DataFrame:
-            # drop partial buckets below the rewritten partitions (per salt)
-            return df if keep is None else df.filter(keep)
-
-        # first run: each coarser tier chains from the previous tier's
-        # in-memory frame, so that frame is persisted -- its own write and
-        # the next tier's reaggregation both read it, and every tier is
-        # computed once (caching the salted projection instead would not
-        # match the reaggregation's subplan and each tier would recompute
-        # the chain). Incremental runs read the stored finer tier back, so
-        # nothing is read twice and nothing is persisted.
-        chain = not changed_from
-        persisted: list[DataFrame] = []
-        if split:
-            # full/partial split: fully-covered buckets come straight out
-            # of a Generate+Project (no hash aggregate); only the <=2 edge
-            # pieces per entry aggregate. Both branches stay
-            # key-partitioned, so the first-run chain below reaggregates
-            # each branch shuffle-free (a union would report
-            # UnknownPartitioning and force a full finest-tier exchange).
-            par = spark.sparkContext.defaultParallelism * 2
-            base = new_entries.repartition(par, *self.key_cols)
-            b_full, b_part = (
-                window(b)
-                for b in rollup_time_weighted_parts(base, self.key_cols, step)
-            )
-            if chain:
-                persisted = [b_full.persist(), b_part.persist()]
-            tier_df = b_full.unionByName(b_part)
-        else:
-            # below the split's crossover one explode + one hash aggregate
-            # is cheaper: fewer stages, one persisted frame
-            tier_df = window(
-                rollup_time_weighted(
-                    new_entries, self.key_cols, step, disjoint=False
+        for i, name in enumerate(names):
+            if i > 0:
+                # a coarser tier reaggregates the STORED finer tier, never
+                # raw data; on an incremental run its partitions are wider
+                # than the finer tier's increment, so it reads the finer
+                # tier back for its own full rewrite window
+                tier_df = reaggregate_rollup(
+                    self.backend.read(
+                        spark, self.tier_path(names[i - 1]), schema
+                    ).drop("p_day", "p_salt"),
+                    self.key_cols,
+                    self.steps[name],
                 )
-            )
-            if chain:
-                tier_df = tier_df.persist()
-                persisted = [tier_df]
-        try:
-            for i, name in enumerate(names):
-                if i > 0:
-                    if not chain:
-                        # a coarser tier's partitions are wider than the
-                        # finer tier's increment, so read the STORED finer
-                        # tier back for the full rewrite window -- coarser
-                        # tiers never touch raw data, only the previous tier
-                        prev = self.backend.read(
-                            spark, self.tier_path(names[i - 1])
-                        ).drop("p_day", "p_salt")
-                        src = prev.filter(
-                            self._per_salt_bucket_filter(lows[name])
-                        )
-                        tier_df = reaggregate_rollup(
-                            src, self.key_cols, self.steps[name]
-                        )
-                    elif split and i == 1:
-                        # chain from the persisted finest-tier branches
-                        # (each key-partitioned -> shuffle-free partial
-                        # reaggregation; only the per-branch partial
-                        # results shuffle for the final combine)
-                        h_parts = reaggregate_rollup(
-                            b_full, self.key_cols, self.steps[name]
-                        ).unionByName(
-                            reaggregate_rollup(
-                                b_part, self.key_cols, self.steps[name]
-                            )
-                        )
-                        tier_df = reaggregate_rollup(
-                            h_parts, self.key_cols, self.steps[name]
-                        )
-                    else:
-                        # chain from the previous (persisted) tier frame
-                        tier_df = reaggregate_rollup(
-                            tier_df, self.key_cols, self.steps[name]
-                        )
-                    if chain and i < len(names) - 1:
-                        tier_df = tier_df.persist()
-                        persisted.append(tier_df)
-                self._write_tier(
-                    name, tier_df, lineage, lows[name] if changed_from else None
+            if changed_from:
+                # drop partial buckets below the rewritten partitions
+                tier_df = tier_df.filter(
+                    self._per_salt_bucket_filter(lows[name])
                 )
-        finally:
-            for df in persisted:
-                df.unpersist()
+            schema = self._write_tier(
+                name, tier_df, lineage, lows[name] if changed_from else None
+            )
 
         for r in stats:
             if r["max_until"] is not None:
@@ -395,22 +328,22 @@ class TierPipeline:
         df: DataFrame,
         lineage: dict,
         lows: dict[int, int] | None,
-    ) -> None:
+    ) -> StructType:
         """Overwrite the (day, salt) partitions present in ``df``, then
         record per-partition row/byte lineage from the committed files of
         this run's rewrite window: every partition on a first run (``lows``
-        is None), ``p_day >= lows[p_salt]`` on an incremental one."""
+        is None), ``p_day >= lows[p_salt]`` on an incremental one. Returns
+        the schema of the written frame, for reading the tier back."""
         spark = df.sparkSession
         path = self.tier_path(name)
+        salted = self._salted(df, self._part_step(name))
         # user-numbered repartition: AQE's size-based coalescing would squash
         # a small tier to ONE task, which then writes every (day, salt)
         # partition dir serially; pinning the count keeps the file fan-out
         # parallel (same trap as the Arrow kernel stages, operators/_kernel.py)
         n_write = spark.sparkContext.defaultParallelism * 2
         self.backend.overwrite_partitions(
-            self._salted(df, self._part_step(name)).repartition(
-                n_write, "p_day", "p_salt"
-            ),
+            salted.repartition(n_write, "p_day", "p_salt"),
             path,
             ["p_day", "p_salt"],
         )
@@ -432,6 +365,7 @@ class TierPipeline:
                 for p in sorted(parts, key=lambda p: (p["p_day"], p["p_salt"]))
             ],
         }
+        return salted.schema
 
     def _in_window(self, lows: dict[int, int]):
         """Partition pruning predicate for :meth:`StorageBackend.partition_stats`:

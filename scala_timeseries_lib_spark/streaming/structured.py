@@ -98,7 +98,7 @@ def stream_rollup(
     """
     from pyspark.sql import functions as F
 
-    from ..operators.series_ops import split_at_buckets
+    from ..operators.series_ops import rollup_stats, split_at_buckets
 
     pieces = split_at_buckets(entries, step_ms, origin)
     ev = pieces.withColumn("event_time", F.timestamp_millis(F.col("ts")))
@@ -108,16 +108,7 @@ def stream_rollup(
         f"{step_ms} milliseconds",
         startTime=f"{origin % step_ms} milliseconds",
     )
-    agg = wm.groupBy(*key_cols, win.alias("win")).agg(
-        (F.sum(F.col("value") * F.col("validity")) / F.sum("validity")).alias(
-            "twmean"
-        ),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-        (F.sum(F.col("value") * F.col("validity")) / 1000.0).alias("integral_s"),
-        F.sum("validity").alias("support_ms"),
-        F.count(F.lit(1)).alias("n_pieces"),
-    )
+    agg = wm.groupBy(*key_cols, win.alias("win")).agg(*rollup_stats())
     return agg.select(
         *key_cols,
         F.unix_millis(F.col("win.start")).alias("bucket"),

@@ -56,7 +56,8 @@ def test_operators_take_no_plan_selector():
     import pkgutil
 
     operators = importlib.import_module(f"{PKG}.operators")
-    selectors = {"engine", "skew_guard", "hot_threshold", "time_slice"}
+    selectors = {"engine", "skew_guard", "hot_threshold", "time_slice",
+                 "skew_safe"}
     checked = 0
     for info in pkgutil.iter_modules(operators.__path__):
         mod = importlib.import_module(f"{operators.__name__}.{info.name}")

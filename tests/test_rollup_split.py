@@ -136,24 +136,6 @@ def test_overlapping_entries_need_general_path(spark):
     assert out[0]["support_ms"] == 200
 
 
-@pytest.mark.parametrize("rows", EDGE_CASES[:6])
-def test_skew_safe_matches_default(spark, rows):
-    """skew_safe spreads input round-robin (Catalyst re-inserts the needed
-    exchange); results must equal the key-clustered default plan."""
-    df = spark.createDataFrame(rows, SCHEMA)
-    a = ops.rollup_time_weighted(df, ["k"], STEP, skew_safe=True)
-    b = ops.rollup_time_weighted(df, ["k"], STEP)
-    cols = a.columns
-    j = a.alias("n").join(
-        b.alias("o"),
-        on=[F.col(f"n.{c}").eqNullSafe(F.col(f"o.{c}")) for c in cols],
-        how="full",
-    )
-    assert j.filter(
-        F.col(f"n.{cols[0]}").isNull() | F.col(f"o.{cols[0]}").isNull()
-    ).count() == 0
-
-
 def test_split_matches_legacy_randomized(spark):
     """Property sweep: random disjoint series (random gaps/validities around
     several step multiples, positive and negative timestamps, multiple

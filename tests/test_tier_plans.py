@@ -7,7 +7,10 @@
 - Lineage is read from the committed files: per partition, ``rows`` equals a
   read-back count and ``bytes_approx`` the summed part-file sizes, and the
   ``_metrics`` side table holds exactly the lineage partitions of each run.
-- A cold update stays within a fixed number of Spark jobs.
+- Every coarser tier reaggregates the stored finer tier, so no update
+  persists or caches a frame.
+- A cold and an incremental update each stay within a fixed number of Spark
+  jobs.
 """
 
 import logging
@@ -28,18 +31,24 @@ FLOATS = ["twmean", "integral_s"]
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 
 # Spark jobs of one cold update of sf0.001 on local[4]: the stats aggregate,
-# the three tier writes (with their AQE shuffle-stage jobs) and the metrics
-# append -- 13 (the split plan with per-tier count jobs ran 22). A re-added
-# count job, or a second finest-tier branch, exceeds it.
+# the three tier writes (with their AQE shuffle-stage jobs; the 1h and 1d
+# writes read the stored finer tier back with its known schema) and the
+# metrics append -- 13 (the split plan with per-tier count jobs ran 22). A
+# re-added count job, a schema-inference job on a read-back, or a second
+# finest-tier branch exceeds it.
 MAX_COLD_UPDATE_JOBS = 13
+# The same jobs for an incremental update over a stored first run: 13.
+# Reading the finer tier back without its schema adds one inference job per
+# coarser tier (15).
+MAX_INCREMENTAL_UPDATE_JOBS = 13
 
 
 @pytest.fixture(scope="module")
 def entries(spark):
+    # not cached: a cached copy would stand in for the job-count tests'
+    # own derivation and change their counts with the test order
     ev = spark.read.parquet(EVENTS)
-    df = derive_entries(ev, KEYS, ts_col="ts", value_col="value").cache()
-    yield df
-    df.unpersist()
+    return derive_entries(ev, KEYS, ts_col="ts", value_col="value")
 
 
 def _cut(entries):
@@ -196,3 +205,40 @@ def test_cold_update_job_count(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_COLD_UPDATE_JOBS, len(jobs)
+
+
+@pytest.mark.parametrize("incremental", [False, True])
+@pytest.mark.parametrize("split_min", [0, 1 << 62], ids=["split", "single"])
+def test_update_persists_nothing(
+    spark, entries, tmp_path, monkeypatch, incremental, split_min
+):
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("TierPipeline.update persisted a frame")
+
+    monkeypatch.setattr(tiers, "SPLIT_MIN_PIECES", split_min)
+    # the session's concrete DataFrame class (pyspark 4 subclasses the API)
+    frame = type(entries)
+    monkeypatch.setattr(frame, "persist", refuse)
+    monkeypatch.setattr(frame, "cache", refuse)
+    tp = TierPipeline(str(tmp_path / "t"), KEYS)
+    if incremental:
+        tp.update(entries.filter(F.col("ts") <= _cut(entries)))
+    rec = tp.update(entries)
+    assert all(t["points"] > 0 for t in rec["tiers"].values())
+
+
+def test_incremental_update_job_count(spark, tmp_path):
+    ev = spark.read.parquet(EVENTS)
+    ents = derive_entries(ev, KEYS, ts_col="ts", value_col="value")
+    tp = TierPipeline(str(tmp_path / "t"), KEYS)
+    tp.update(ents.filter(F.col("ts") <= _cut(ents)))
+    sc = spark.sparkContext
+    group = f"tier-job-guard-incr-{os.getpid()}"
+    sc.setJobGroup(group, "incremental TierPipeline.update")
+    try:
+        tp.update(ents)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_INCREMENTAL_UPDATE_JOBS, len(jobs)

@@ -5,10 +5,11 @@ the sf0.1 entries (plentiful normal keys) PLUS one pathological series:
 a single key with ``--hot-entries`` entries (default 4M -- the "one domain
 with millions of snapshots" case). Two scenarios:
 
-1. **rollup 1m tier**: default plan (repartition BY KEY -> the hot key's
-   entire explode+aggregate serializes into one task) vs
-   ``skew_safe=True`` (round-robin spread; Catalyst inserts the (key,
-   bucket) exchange). Equal outputs checked by row count + support sum.
+1. **rollup 1m tier**: the single-aggregate plan (repartition BY KEY ->
+   the hot key's entire explode+aggregate serializes into one task) vs
+   the fused split (``disjoint=True``: the hot key's interior buckets
+   bypass the hash aggregate). Equal outputs checked by row count +
+   support sum.
 2. **merge (plus)**: hot series merged against a shifted copy of itself --
    one series is one window partition, so the plain relational plan runs
    one straggler task; a manual ``time_slice`` pre-splits both sides at
@@ -86,25 +87,21 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         return best, r
 
-    def rollup_probe(skew_safe, disjoint=False):
-        df = ops.rollup_time_weighted(
-            entries, keys, 60_000, skew_safe=skew_safe, disjoint=disjoint
-        )
+    def rollup_probe(disjoint):
+        df = ops.rollup_time_weighted(entries, keys, 60_000, disjoint=disjoint)
         row = df.agg(
             F.count(F.lit(1)).alias("n"), F.sum("support_ms").alias("sup")
         ).collect()[0]
         return int(row["n"]), int(row["sup"])
 
-    # warmup all three plans
+    # warmup both plans
     rollup_probe(False)
     rollup_probe(True)
-    rollup_probe(False, disjoint=True)
     t_def, out_def = timed(lambda: rollup_probe(False))
-    t_safe, out_safe = timed(lambda: rollup_probe(True))
     # the fused split (caller asserts fitted/disjoint input -- true here):
     # interior buckets of the hot key bypass the hash agg entirely, so it
     # is the hot-key winner when the precondition holds
-    t_split, out_split = timed(lambda: rollup_probe(False, disjoint=True))
+    t_split, out_split = timed(lambda: rollup_probe(True))
 
     # merge scenario: hot vs shifted hot (plus normals on both sides)
     shifted = entries.withColumn("ts", F.col("ts") + 37_000)
@@ -143,11 +140,10 @@ def main() -> None:
         "hot_entries": args.hot_entries,
         "rollup": {
             "default_sec": round(t_def, 2),
-            "skew_safe_sec": round(t_safe, 2),
             "disjoint_split_sec": round(t_split, 2),
-            "speedup": round(t_def / t_safe, 2),
+            "speedup": round(t_def / t_split, 2),
             "points": out_def[0],
-            "outputs_equal": out_def == out_safe == out_split,
+            "outputs_equal": out_def == out_split,
         },
         "merge": {
             "plain_sec": round(t_m_def, 2),
