@@ -16,7 +16,7 @@ Pipeline (the standard web-corpus preparation chain):
                          line with per-stage row counts
 
 Usage:
-    spark-submit --py-files /tmp/scala_timeseries_lib_spark.zip \\
+    spark-submit --py-files <package zip, see jobs/rollup_job.py> \\
         jobs/corpus_dedup_job.py --input /root/testdata/sf0.1 --out /data/corpus
 """
 

@@ -7,7 +7,7 @@ byte length of the extracted text at each snapshot, valid until the next
 snapshot (capped).
 
 Usage:
-    spark-submit --py-files scala_timeseries_lib_spark.zip \\
+    spark-submit --py-files <package zip, see jobs/rollup_job.py> \\
         jobs/pages_rollup_job.py --out /data/pages_tiers --n-urls 5000
 """
 

@@ -2,10 +2,10 @@
 tiers, resumable from the checkpoint in --out.
 
 Usage:
-    spark-submit --py-files /tmp/scala_timeseries_lib_spark.zip \\
+    spark-submit --py-files <package zip> \\
         jobs/rollup_job.py --input /root/testdata/sf0.1 --out /data/tiers
 
-(Build the zip with
+(Build the zip, named by a digest of the sources, and print its path with
 ``python -c "from scala_timeseries_lib_spark.plans.packaging import build_pyfiles_zip; print(build_pyfiles_zip())"``.)
 
 Rerunning after a crash resumes from the committed watermark and rewrites

@@ -21,14 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["eps_floor", "eps_floor_sql"]
+__all__ = ["eps_floor"]
 
 
 def eps_floor(col: Column, digits: int = 5) -> Column:
     m = 10 ** digits
     return F.floor(col * m + 0.5 + 1e-6) / m
-
-
-def eps_floor_sql(expr: str, digits: int = 5) -> str:
-    m = 10 ** digits
-    return f"FLOOR(({expr}) * {m} + 0.5 + 0.000001) / {m}"

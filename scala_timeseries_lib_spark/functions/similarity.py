@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from .rounding import eps_floor
 
 __all__ = ["cosine_sim", "knn_bruteforce", "lsh_bucket_expr", "lsh_buckets", "ann_lsh_topk",
-           "ivf_assign", "ivf_train_kmeans", "ann_ivf_topk", "embedding_neardup_pairs",
+           "ivf_train_kmeans", "ann_ivf_topk", "embedding_neardup_pairs",
            "N_PLANES", "IVF_Q", "plane_weight_expr"]
 
 N_PLANES = 4
@@ -114,37 +114,6 @@ def lsh_buckets(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     )
 
 
-def ivf_assign(
-    df: DataFrame, n_centroids: int = 8, round_to: int = 6
-) -> DataFrame:
-    """IVF coarse quantizer: assign every vector to its nearest centroid.
-
-    Deterministic centroid pick (no k-means iterations, so Spark and the
-    SQL oracle agree bit-for-bit): centroid c is the embedding of
-    ``vec_id = c``. Assignment is by max cosine, ties to the lower
-    centroid id. Returns (vec_id, centroid). The centroid table is tiny
-    and broadcast; the scan is one pass -- the inverted-list build step of
-    a standard IVF index.
-    """
-    from pyspark.sql import Window
-
-    base = df.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    cents = base.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("centroid"), F.col("emb").alias("c_emb")
-    )
-    scored = base.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "centroid",
-        eps_floor(cosine_sim(F.col("emb"), F.col("c_emb")), round_to).alias("csim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("centroid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", "centroid")
-    )
-
-
 def _quantized(col):
     """array<float> -> array<long> on the 1/IVF_Q fixed-point grid
     (floor(x*Q + 0.5): round-half-up, identical in DuckDB)."""
@@ -183,7 +152,7 @@ def ivf_train_kmeans(
     Deterministic by construction, no seed needed:
 
     - init: centroid c = (quantized) embedding of ``vec_id = c`` — the same
-      deterministic pick :func:`ivf_assign` uses;
+      deterministic pick as the untrained quantizer of :func:`ann_ivf_topk`;
     - assign: broadcast-centroid argmax of the QUANTIZED cosine
       (``eps_floor`` at ``round_to``, ties to the lower centroid id);
     - update: centroid := elementwise SUM of its members' quantized vectors.
@@ -291,9 +260,9 @@ def ann_ivf_topk(
             )
         )
         csim_base = eps_floor(cosine_sim(F.col("emb"), F.col("c_emb")), 6)
-    # same assignment rule as ivf_assign, but the embedding is carried
-    # THROUGH the argmax window instead of being joined back on vec_id
-    # afterwards -- one shuffle (the window) instead of two
+    # assign each vector to its max-cosine centroid, ties to the lower id;
+    # the embedding is carried THROUGH the argmax window instead of being
+    # joined back on vec_id afterwards -- one shuffle (the window), not two
     wa = Window.partitionBy("vec_id").orderBy(
         F.desc("csim"), F.asc("centroid")
     )

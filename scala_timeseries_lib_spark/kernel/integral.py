@@ -1,14 +1,14 @@
 """Integrals over step functions (TSEntry.scala:269-280,
 NumericTimeSeries.scala:66-130).
 
-``entry_integral`` = value x validity-in-seconds; the time unit of the
+An entry's integral is value x validity-in-seconds; the time unit of the
 validities is given by ``timeunit`` ('ms' default, 's', 'us'), mirroring the
 reference's ``java.util.concurrent.TimeUnit`` parameter.
 """
 
 from __future__ import annotations
 
-__all__ = ["seconds_factor", "entry_integral", "step_integral", "sliding_integral"]
+__all__ = ["seconds_factor", "step_integral", "sliding_integral"]
 
 _FACTORS = {"ms": 1e-3, "s": 1.0, "us": 1e-6, "ns": 1e-9, "m": 60.0, "h": 3600.0}
 
@@ -18,10 +18,6 @@ def seconds_factor(timeunit: str) -> float:
         return _FACTORS[timeunit]
     except KeyError:
         raise ValueError(f"unknown time unit {timeunit!r}") from None
-
-
-def entry_integral(value: float, validity: int, timeunit: str = "ms") -> float:
-    return float(value) * validity * seconds_factor(timeunit)
 
 
 def step_integral(entries, timeunit: str = "ms"):

@@ -53,19 +53,22 @@ from __future__ import annotations
 
 import functools
 import math
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .._env import env_int
+from .._records import decision_record
 
 __all__ = ["apply_per_bucket", "apply_grouped", "per_series_kernel", "factorize_series"]
 
 # Estimated (Catalyst sizeInBytes, i.e. roughly compressed-input) bytes per
 # salt bucket. Each bucket is materialized as ONE pandas frame in a Python
-# worker, so this bounds kernel-stage worker memory at any input size; it
-# also sets the task-wave count at toy size (see _default_buckets).
+# worker, so this bounds kernel-stage worker memory at any input size. An
+# input below defaultParallelism buckets' worth of bytes runs one bucket per
+# core: one task wave (see _default_buckets).
 _BUCKET_BYTES = env_int("SPARK_GRAFT_KERNEL_BUCKET_BYTES", 8 << 20)
 
 
@@ -73,28 +76,44 @@ def _default_buckets(df: DataFrame) -> int:
     """Size-adaptive salt-bucket count for the kernel stage.
 
     ``ceil(estimated_bytes / _BUCKET_BYTES)`` clamped to
-    ``[max(defaultParallelism, 16), defaultParallelism * 32]``. The estimate
-    is Catalyst's driver-side ``sizeInBytes`` on the already-built plan (no
-    job runs). Rationale, measured round 6 (OPTIMIZATION_r06.md): per-task
-    Arrow/Python overhead dominates small inputs, so tiny inputs want as few
-    buckets as possible -- the floor of ``max(defaultParallelism, 16)`` is
-    one task wave only when there are >= 16 cores, and more waves below
-    that (1.33 s -> 0.97 s on the sf0.1 gorilla roundtrip vs the old fixed
-    4x); huge inputs want buckets bounded by BYTES, not core count, so
-    worker memory stays flat while parallelism grows with the data. Falls
-    back to the old fixed
-    ``4 * defaultParallelism`` when the estimate is unusable (streaming
-    frames, unknown-stat sources report 2^63-ish sentinels).
+    ``[defaultParallelism, defaultParallelism * 32]``. The estimate is
+    Catalyst's driver-side ``sizeInBytes`` on the already-built plan (no job
+    runs). A small input gets one bucket per core, so the stage is exactly
+    one task wave; a large one gets byte-bounded buckets, so worker memory
+    stays flat while parallelism grows with the data, up to 32 waves.
+
+    Why no more tasks than cores at small size: every Python task has a
+    fixed cost with no data in it, ~0.3 s of CPU on 4 cores, much of it
+    pyspark's per-task ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``, 0.15-0.5 s a call), which re-reads
+    the ``pyspark.zip`` directory once per zip importer on the worker's
+    path. Extra tasks buy no parallelism, only that cost (16 small buckets
+    on 4 cores run in 4 waves; BENCH/kernel_one_wave_r11.json).
+
+    Falls back to ``max(4 * defaultParallelism, 16)`` when the estimate is
+    unusable (streaming frames, unknown-stat sources report 2^63-ish
+    sentinels). The choice is one decision record (``op`` ``kernel.buckets``).
     """
+    t0 = time.perf_counter()
     sc = df.sparkSession.sparkContext
     p = max(sc.defaultParallelism, 1)
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         est = -1
-    if est <= 0 or est >= (1 << 50):
-        return max(p * 4, 16)
-    return min(max(math.ceil(est / _BUCKET_BYTES), p, 16), p * 32)
+    fallback = est <= 0 or est >= (1 << 50)
+    if fallback:
+        n = max(p * 4, 16)
+    else:
+        n = min(max(math.ceil(est / _BUCKET_BYTES), p), p * 32)
+    decision_record(
+        "kernel.buckets",
+        n,
+        {"est_bytes": est, "default_parallelism": p,
+         "bucket_bytes": _BUCKET_BYTES, "fallback": fallback},
+        (time.perf_counter() - t0) * 1000.0,
+    )
+    return n
 
 
 def apply_per_bucket(df: DataFrame, key_cols: list[str], bucket_fn, out_schema):

@@ -48,7 +48,6 @@ tier reads the stored finer tier back for its own full rewrite window.
 
 from __future__ import annotations
 
-import logging
 import os
 import time
 
@@ -56,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .._records import decision_record
 from ..operators.series_ops import reaggregate_rollup, rollup_time_weighted
 from .stateio import StateIO
 from .storage import ParquetBackend, StorageBackend
@@ -79,8 +79,6 @@ _METRICS_SCHEMA = (
     "bytes_approx long, rows_in long, started long"
 )
 _METRICS_COLS = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
-
-_log = logging.getLogger("scala_timeseries_lib_spark")
 
 
 class TierPipeline:
@@ -273,21 +271,15 @@ class TierPipeline:
         )
         split = pieces_bound >= SPLIT_MIN_PIECES
         plan = "split" if split else "single"
-        _log.info(
-            "tiers.finest_plan: %s (piece bound %d, split from %d)",
+        decision_record(
+            "tiers.finest_plan",
             plan,
-            pieces_bound,
-            SPLIT_MIN_PIECES,
-            extra={
-                "op": "tiers.finest_plan",
-                "decision": plan,
-                "inputs": {
-                    "pieces_bound": pieces_bound,
-                    "rows_in": int(rows_in),
-                    "split_min_pieces": SPLIT_MIN_PIECES,
-                },
-                "elapsed_ms": stats_ms,
+            {
+                "pieces_bound": pieces_bound,
+                "rows_in": int(rows_in),
+                "split_min_pieces": SPLIT_MIN_PIECES,
             },
+            stats_ms,
         )
         tier_df = rollup_time_weighted(
             new_entries, self.key_cols, step, disjoint=split

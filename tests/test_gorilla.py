@@ -302,3 +302,34 @@ class TestVectorizedEncoderCrossCheck:
                 [(t2, v2)] = decompress_arrays([enc(ts, vals)])
                 assert np.array_equal(t2, ts)
                 assert np.array_equal(v2, vals)
+
+
+@pytest.mark.parametrize("buckets", ["one", "per_core"])
+def test_roundtrip_query_splits_wide_gaps(spark, tmp_path, monkeypatch, buckets):
+    """``_q_gorilla_roundtrip`` splits a series into separate blocks at each
+    gap of >= 2^31 ms (the wire format cannot carry it), and the decoded
+    output is still exactly the derived entries, whether the gapped series
+    shares its bucket with an ordinary one or not."""
+    import pandas as pd
+
+    import __spark_entry__ as entry
+    from scala_timeseries_lib_spark.operators import _kernel
+
+    t0 = 1_700_000_000_000
+    gapped = [t0, t0 + 1_000, t0 + 1_000 + 2**31, t0 + 2_000 + 2**31,
+              t0 + 2_000 + 2**32 + 7]
+    ordinary = [t0 + 500 * i for i in range(6)]
+    rows = [(1, "click", t, float(i)) for i, t in enumerate(gapped)]
+    rows += [(2, "view", t, 10.0 + i) for i, t in enumerate(ordinary)]
+    pdf = pd.DataFrame(rows, columns=["user_id", "event_type", "ts_ms", "value"])
+    pdf["ts"] = pd.to_datetime(pdf.pop("ts_ms"), unit="ms").astype("datetime64[us]")
+    pdf.to_parquet(tmp_path / "events.parquet", index=False)
+
+    n = 1 if buckets == "one" else max(spark.sparkContext.defaultParallelism, 1)
+    monkeypatch.setattr(_kernel, "_default_buckets", lambda df: n)
+    got = entry._q_gorilla_roundtrip(spark, str(tmp_path))
+    assert got.rdd.getNumPartitions() == n
+    want = sorted(map(tuple, entry._entries(spark, str(tmp_path)).collect()))
+    assert sorted(map(tuple, got.collect())) == want
+    gaps = np.diff([r[2] for r in want if r[0] == 1])
+    assert len(want) == 11 and (gaps >= 2**31).sum() == 2
