@@ -30,7 +30,6 @@ __all__ = [
     "frame_sample",
     "extract_features",
     "decode_stub",
-    "resize_stub",
     "parse_ppm",
     "resize_nearest",
     "synthesize_ppm",
@@ -67,20 +66,6 @@ def decode_stub(payload: bytes) -> tuple[int, int]:
         except ValueError:
             pass  # not actually a well-formed ppm: fall through to fake
     return (len(payload) % 640 + 16, len(payload) % 480 + 16)
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic FAKE resize: strided byte resampling to width*height
-    bytes (repeat-truncate). Stands in for a real image resizer; the
-    signature and the bytes-in/bytes-out contract are what a real codec
-    plug-in must satisfy."""
-    if width <= 0 or height <= 0:
-        raise ValueError("target dimensions must be positive")
-    if not payload:
-        raise ValueError("cannot resize an empty payload")
-    n = width * height
-    reps = -(-n // len(payload))
-    return (payload * reps)[:n]
 
 
 # ---------------------------------------------------------------------------

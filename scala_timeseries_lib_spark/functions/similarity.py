@@ -32,6 +32,9 @@ N_PLANES = 4
 # (|x|<=1, 64 dims, ~1e6 vectors summed) far inside int64.
 IVF_Q = 1 << 14
 
+# Lloyd rounds of the coarse quantizer that ann_ivf_topk trains inline
+IVF_TRAIN_ITERS = 3
+
 
 def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -151,8 +154,7 @@ def ivf_train_kmeans(
 
     Deterministic by construction, no seed needed:
 
-    - init: centroid c = (quantized) embedding of ``vec_id = c`` — the same
-      deterministic pick as the untrained quantizer of :func:`ann_ivf_topk`;
+    - init: centroid c = (quantized) embedding of ``vec_id = c``;
     - assign: broadcast-centroid argmax of the QUANTIZED cosine
       (``eps_floor`` at ``round_to``, ties to the lower centroid id);
     - update: centroid := elementwise SUM of its members' quantized vectors.
@@ -165,7 +167,10 @@ def ivf_train_kmeans(
     Returns (centroid, c_emb array<long>); empty clusters drop out (both
     engines agree). One broadcast join + one explode-aggregate per round;
     round cost is one corpus pass — at 100 TB train on a sample, the
-    assignment math does not change."""
+    assignment math does not change. Each round's centroids are collected
+    and rebuilt as a driver-side local relation, so the plan stays one
+    round deep and the result depends on no executor-local block."""
+    spark = df.sparkSession
     base = df.select("vec_id", _quantized(F.col("embedding")).alias("q"))
     cents = base.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("centroid"), F.col("q").alias("c_emb")
@@ -202,7 +207,7 @@ def ivf_train_kmeans(
             .groupBy("centroid", "dim")
             .agg(F.sum("v").alias("s"))
         )
-        cents = (
+        cents = spark.createDataFrame(
             sums.groupBy("centroid")
             .agg(
                 F.transform(
@@ -210,7 +215,7 @@ def ivf_train_kmeans(
                     lambda x: x["s"],
                 ).alias("c_emb")
             )
-            .localCheckpoint(eager=True)
+            .toArrow()
         )
     return cents
 
@@ -222,24 +227,17 @@ def ann_ivf_topk(
     n_centroids: int = 8,
     n_probe: int = 2,
     round_to: int = 4,
-    train_iters: int = 3,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: score only candidates whose centroid is among
     the query's ``n_probe`` closest centroids. The candidate join is an
     equi-join on the centroid id (inverted lists), so the scan cost drops
     by ~n_centroids/n_probe versus brute force -- the standard IVF trade.
 
-    ``train_iters > 0`` (default 3) runs the exact-integer spherical
-    k-means (:func:`ivf_train_kmeans`) for the coarse quantizer; assignment
-    and probe selection then use the quantized cosine against the trained
-    centroids (recall vs brute force measured in BENCH/BASELINE.md).
-    ``train_iters=0`` keeps the untrained identity-pick quantizer.
-
-    At scale, build the index ONCE: pass ``centroids`` (the persisted
-    output of :func:`ivf_train_kmeans`, ``(centroid, c_emb array<long>)``)
-    and no training runs at query time — the standard index-build / query
-    split."""
+    The coarse quantizer is trained inline by ``IVF_TRAIN_ITERS`` rounds of
+    the exact-integer spherical k-means (:func:`ivf_train_kmeans`);
+    assignment and probe selection use the quantized cosine against the
+    trained centroids (recall vs brute force measured in
+    BENCH/ann_recall_r5.json)."""
     from pyspark.sql import Window
 
     base = df.select(
@@ -247,19 +245,8 @@ def ann_ivf_topk(
         _to_double(F.col("embedding")).alias("emb"),
         _quantized(F.col("embedding")).alias("q"),
     )
-    if centroids is not None:
-        cents = F.broadcast(centroids)
-        csim_base = eps_floor(_cos_int(F.col("q"), F.col("c_emb")), 6)
-    elif train_iters > 0:
-        cents = F.broadcast(ivf_train_kmeans(df, n_centroids, train_iters))
-        csim_base = eps_floor(_cos_int(F.col("q"), F.col("c_emb")), 6)
-    else:
-        cents = F.broadcast(
-            base.filter(F.col("vec_id") < n_centroids).select(
-                F.col("vec_id").alias("centroid"), F.col("emb").alias("c_emb")
-            )
-        )
-        csim_base = eps_floor(cosine_sim(F.col("emb"), F.col("c_emb")), 6)
+    cents = F.broadcast(ivf_train_kmeans(df, n_centroids, IVF_TRAIN_ITERS))
+    csim_base = eps_floor(_cos_int(F.col("q"), F.col("c_emb")), 6)
     # assign each vector to its max-cosine centroid, ties to the lower id;
     # the embedding is carried THROUGH the argmax window instead of being
     # joined back on vec_id afterwards -- one shuffle (the window), not two
@@ -279,10 +266,7 @@ def ann_ivf_topk(
         F.col("emb").alias("q_emb"),
         F.col("q").alias("q_q"),
     )
-    if centroids is not None or train_iters > 0:
-        q_csim = eps_floor(_cos_int(F.col("q_q"), F.col("c_emb")), 6)
-    else:
-        q_csim = eps_floor(cosine_sim(F.col("q_emb"), F.col("c_emb")), 6)
+    q_csim = eps_floor(_cos_int(F.col("q_q"), F.col("c_emb")), 6)
     q_cent = queries.crossJoin(cents).select(
         "query_id", "q_emb", "centroid", q_csim.alias("csim")
     )
@@ -313,18 +297,15 @@ def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
     n_planes: int = N_PLANES,
-    block_lsh: bool = True,
     round_to: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a, vec_b, sim) with
     ``sim >= threshold`` and ``vec_a < vec_b``.
 
-    ``block_lsh=True`` is the scale path: candidates must share a
-    random-hyperplane LSH bucket, turning the O(n^2) cross product into a
-    bucket-equi self-join (shuffle on an int key; bucket sizes ~ n/2^planes,
-    so pair work drops by ~2^planes at a known recall cost -- the standard
-    SimHash/LSH dedup blocking trade). ``block_lsh=False`` is the exact
-    all-pairs baseline for small n.
+    Candidates must share a random-hyperplane LSH bucket, turning the
+    O(n^2) cross product into a bucket-equi self-join (shuffle on an int
+    key; bucket sizes ~ n/2^planes, so pair work drops by ~2^planes at a
+    known recall cost -- the standard SimHash/LSH dedup blocking trade).
 
     **Sizing rule for n_planes**: expected pair work is
     ~ n^2 / 2^n_planes, so pick ``n_planes ~ 2*log2(n) - log2(P)`` where P
@@ -335,25 +316,21 @@ def embedding_neardup_pairs(
     rotate-band trick for hyperplane LSH. The default n_planes=4 is sized
     for the sf0.01/0.1 test corpus, not for production n.
     """
-    base = df.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    if block_lsh:
-        # bucket is a column EXPRESSION over the same row (no join back to a
-        # separate buckets frame), and one repartition on the self-join key
-        # lets ReuseExchange compute scan+projections once for both sides
-        base = base.withColumn(
-            "bucket", lsh_bucket_expr(F.col("emb"), n_planes)
-        ).repartition("bucket")
-        a = base.select(
-            F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"), "bucket"
-        )
-        b = base.select(
-            F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"), "bucket"
-        )
-        pairs = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
-    else:
-        a = base.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
-        b = base.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
-        pairs = a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b"))
+    # bucket is a column EXPRESSION over the same row (no join back to a
+    # separate buckets frame), and one repartition on the self-join key
+    # lets ReuseExchange compute scan+projections once for both sides
+    base = df.select(
+        "vec_id", _to_double(F.col("embedding")).alias("emb")
+    ).withColumn(
+        "bucket", lsh_bucket_expr(F.col("emb"), n_planes)
+    ).repartition("bucket")
+    a = base.select(
+        F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"), "bucket"
+    )
+    b = base.select(
+        F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"), "bucket"
+    )
+    pairs = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
     scored = pairs.select(
         "vec_a",
         "vec_b",

@@ -17,7 +17,6 @@ __all__ = [
     "hash32",
     "token_stats",
     "bpe_token_count",
-    "bpe_train",
     "bpe_encode_stats",
     "quality_score",
     "lang_id",
@@ -48,10 +47,10 @@ LANG_STOPWORDS = {
 FP_MOD = 1_000_000_007
 
 # Closed-form fixture merge table: the sequential reference BPE trainer
-# (tests/test_bpe.py) run on the sf0.001 documents corpus with n_merges=48,
-# min_count=2 (stopped at 47 — no pair reaches count 2 after that). The
-# distributed trainer (bpe_train) reproduces this list exactly (pinned by
-# test); the DuckDB oracle for text_bpe_encode replays the same table.
+# (tests/test_bpe.py ``train_ref``) run on the sf0.001 documents corpus with
+# n_merges=48, min_count=2 (all 48 merges reach the count);
+# tests/test_bpe.py reruns it and pins this list. The DuckDB oracle for
+# text_bpe_encode replays the same table.
 BPE_FIXTURE_MERGES: list[tuple[str, str]] = [
     ("e", "r"), ("o", "r"), ("i", "n"), ("o", "w"), ("s", "t"),
     ("l", "u"), ("a", "r"), ("p", "ar"), ("m", "er"), ("a", "t"),
@@ -108,100 +107,11 @@ def bpe_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real BPE: corpus-trained merge table + exact greedy encode
+# Real BPE: exact greedy encode of a corpus-trained merge table
 # ---------------------------------------------------------------------------
 
 def _pretokens(text_col: str = "text"):
     return F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), F.lit(0))
-
-
-def _chars(col):
-    # split-to-chars without the trailing empty element a bare '' split emits
-    return F.split(col, "(?!$)")
-
-
-def _apply_merge_expr(syms_col, p: str, q: str):
-    """One greedy left-to-right merge pass of pair (p, q) over a symbol
-    array, as a pure Catalyst fold: append each symbol, or replace the
-    accumulator's last element with ``p+q`` when (last, current) == (p, q).
-    Exact: a merged token ``p+q`` can never equal ``p`` (q is non-empty), so
-    the last element matching ``p`` is always an unconsumed original —
-    left-to-right greedy by construction (pinned against the sequential
-    reference in tests/test_bpe.py)."""
-    merged = p + q
-    return F.aggregate(
-        syms_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(p))
-            & (s == F.lit(q)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(F.lit(merged)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def bpe_train(
-    df: DataFrame,
-    n_merges: int = 48,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> list[tuple[str, str]]:
-    """Corpus-trained BPE merge table, computed distributed.
-
-    The classic trainer (Sennrich et al. 2016, public algorithm) over the
-    word-frequency table: pretokenize every document (the same JVM regex the
-    counts use), aggregate to (word, freq) — the only corpus-sized pass —
-    then iterate: count adjacent symbol pairs weighted by freq (one groupBy
-    per round on the SMALL word table), take the most frequent pair
-    (deterministic tie-break: count DESC, pair ASC), merge it greedily in
-    every word. Stops early when no pair reaches ``min_count``.
-
-    Scale shape: round cost is proportional to DISTINCT pretokens, not
-    corpus size; the word table is checkpointed per round so the plan never
-    deepens. Returns the merge list (driver-side, bounded by ``n_merges``)
-    — broadcast it into :func:`bpe_encode_stats`.
-
-    Equality with the sequential reference trainer is pinned by
-    tests/test_bpe.py; BPE_FIXTURE_MERGES is that trainer's output on the
-    sf0.001 documents corpus."""
-    words = (
-        df.select(F.explode(_pretokens(text_col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select("word", "freq", _chars(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
-    )
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs = words.select(
-            "freq",
-            F.explode(
-                F.transform(
-                    F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1),
-                    lambda s, i: F.struct(
-                        s.alias("p"), F.get(F.col("syms"), i + 1).alias("q")
-                    ),
-                )
-            ).alias("pair"),
-        )
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("pair.p"), F.asc("pair.q"))
-            .first()
-        )
-        if best is None or int(best["cnt"]) < min_count:
-            break
-        p, q = best["pair"]["p"], best["pair"]["q"]
-        merges.append((p, q))
-        words = words.withColumn(
-            "syms", _apply_merge_expr(F.col("syms"), p, q)
-        ).localCheckpoint(eager=True)
-    return merges
 
 
 def _encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
@@ -230,7 +140,6 @@ def bpe_encode_stats(
     df: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Real BPE encode over the corpus: per-doc encoded token count plus an
     order-sensitive fingerprint of the full token SEQUENCE.
@@ -239,9 +148,8 @@ def bpe_encode_stats(
     Arrow ``mapInPandas`` over the deduplicated vocabulary — cost is
     vocabulary-sized, not corpus-sized); the corpus-sized work is pure
     Catalyst: pretokenize (JVM regex), equi-join each (doc, word-position)
-    row to its word's encoded stats (broadcast when the vocab is small; set
-    ``broadcast_vocab=False`` at web vocab scale and let AQE pick), and one
-    per-doc window cumsum for sequence offsets.
+    row to its word's encoded stats (the encoded vocabulary is broadcast),
+    and one per-doc window cumsum for sequence offsets.
 
     The fingerprint is position-exact over the flattened token stream:
     ``sum_g hash32(tok_g) * (g+1) mod FP_MOD``, decomposed per word as
@@ -278,12 +186,10 @@ def bpe_encode_stats(
         F.posexplode(_pretokens(text_col)).alias("wpos", "word"),
     )
     vocab = pre.select("word").distinct()
-    enc = vocab.mapInPandas(
+    enc = F.broadcast(vocab.mapInPandas(
         _encode_batches,
         schema="word string, n_toks long, s_hash long, wfp long",
-    )
-    if broadcast_vocab:
-        enc = F.broadcast(enc)
+    ))
     w = (
         Window.partitionBy("doc_id")
         .orderBy("wpos")

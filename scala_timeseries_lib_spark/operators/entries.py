@@ -29,7 +29,6 @@ def derive_entries(
     ts_col: str = "ts",
     value_col: str = "value",
     default_validity: int = 3_600_000,
-    ts_is_timestamp: bool = True,
 ) -> DataFrame:
     """Turn an event log into an entries table.
 
@@ -44,14 +43,9 @@ def derive_entries(
     """
     # cast covers TIMESTAMP_NTZ parquet columns; session timezone is pinned
     # to UTC in plans.session.get_spark so wall-clock == epoch semantics
-    ts_ms = (
-        F.unix_millis(F.col(ts_col).cast("timestamp"))
-        if ts_is_timestamp
-        else F.col(ts_col).cast("long")
-    )
     base = df.select(
         *key_cols,
-        ts_ms.alias("ts"),
+        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts"),
         F.col(value_col).cast("double").alias("value"),
     )
     dedup_w = Window.partitionBy(*key_cols, "ts").orderBy(F.desc("value"))

@@ -514,10 +514,10 @@ def rollup_histogram(
     equi-width, TIME-WEIGHTED histogram of the values in each (series,
     bucket) -- ``hist[i]`` = total milliseconds the series spent in value
     bin i (values clamped to [lo, hi)). Because the sufficient statistic is
-    an integer vector, coarser tiers reaggregate EXACTLY by element-wise
-    sum (see :func:`reaggregate_histogram`; pinned by test), giving the
-    retention tiers approximate quantiles at any granularity without
-    revisiting raw data -- the sketch analog of the wsum/dur statistics.
+    an integer vector, a coarser bucket's histogram is EXACTLY the
+    element-wise sum of its nested finer buckets' (pinned by test), so
+    approximate quantiles at any granularity need no raw data -- the sketch
+    analog of the wsum/dur statistics.
 
     Pure Catalyst: boundary-split explode, then one hash aggregate with
     ``bins`` conditional sums (map-side combine applies). Output: key_cols
@@ -541,27 +541,6 @@ def rollup_histogram(
             ]
         ).alias("hist"),
         F.sum("validity").alias("support_ms"),
-    )
-
-
-def reaggregate_histogram(
-    df: DataFrame, key_cols: list[str], coarser_step: int, bins: int = 32,
-    origin: int = 0,
-) -> DataFrame:
-    """Roll a histogram tier up to a coarser bucket width by element-wise
-    integer sum -- exact, no raw data touched (buckets must nest).
-    ``origin`` must match the anchor the finer tier was built with
-    (rollup_histogram's ``origin``), like reaggregate_rollup's."""
-    coarse = df.withColumn(
-        "bucket",
-        (F.col("bucket") - F.pmod(F.col("bucket") - origin, F.lit(coarser_step))),
-    )
-    return coarse.groupBy(*key_cols, "bucket").agg(
-        F.array(
-            *[F.sum(F.element_at("hist", i + 1)).cast("long")
-              for i in range(bins)]
-        ).alias("hist"),
-        F.sum("support_ms").alias("support_ms"),
     )
 
 

@@ -60,7 +60,11 @@ def build_pyfiles_zip(dest_dir: str | None = None) -> str:
 
 
 def ship_package(spark) -> str:
-    """Make the package importable on all Python workers of this session."""
+    """Make the package importable on all Python workers of this session.
+    Adds the zip once per session: a repeated ``addPyFile`` would append it
+    to the worker includes and the driver's ``sys.path`` again."""
     zip_path = build_pyfiles_zip()
-    spark.sparkContext.addPyFile(zip_path)
+    sc = spark.sparkContext
+    if os.path.basename(zip_path) not in sc._python_includes:
+        sc.addPyFile(zip_path)
     return zip_path

@@ -3,13 +3,13 @@
 BASELINE.json mandates the retention tiers as incrementally-maintained
 Iceberg tables. This sandbox ships no ``iceberg-spark-runtime`` jar, so the
 storage seam is an explicit interface instead of an asserted "one-line
-swap": ``TierPipeline`` talks only to :class:`StorageBackend`, the parquet
-implementation is the default, and the Iceberg implementation activates
-whenever the runtime jar is on the session classpath
-(:func:`iceberg_available`). The tier e2e tests parameterize over both
-backends and skip the Iceberg leg cleanly when the jar is absent
-(tests/test_storage_backend.py), so checkpoint/lineage behavior is pinned
-to be backend-independent.
+swap": ``TierPipeline`` talks only to :class:`StorageBackend` and uses
+:class:`ParquetBackend` unless the caller passes another backend. Iceberg
+is used only when a caller passes ``IcebergBackend()``, which needs the
+runtime jar on the session classpath (:func:`iceberg_available`). The tier
+e2e tests parameterize over both backends and skip the Iceberg leg cleanly
+when the jar is absent (tests/test_storage_backend.py), so
+checkpoint/lineage behavior is pinned to be backend-independent.
 
 Both backends implement the same contract the pipeline needs:
 
@@ -43,7 +43,6 @@ __all__ = [
     "ParquetBackend",
     "IcebergBackend",
     "iceberg_available",
-    "default_backend",
 ]
 
 
@@ -293,10 +292,3 @@ class IcebergBackend(StorageBackend):
                     "bytes": int(r["total_data_file_size_in_bytes"]),
                 })
         return out
-
-
-def default_backend(spark: SparkSession | None = None) -> StorageBackend:
-    """Iceberg when the runtime jar is present, parquet otherwise."""
-    if spark is not None and iceberg_available(spark):
-        return IcebergBackend()
-    return ParquetBackend()

@@ -112,11 +112,11 @@ class TierPipeline:
         backend: StorageBackend | None = None,
     ):
         self.base_dir = base_dir
-        # physical table format seam (plans/storage.py): parquet by default,
-        # IcebergBackend when the runtime jar is present -- the pipeline
-        # only ever calls ref/read/overwrite_partitions/append, so the
-        # checkpoint + lineage behavior is backend-independent (pinned by
-        # tests/test_storage_backend.py)
+        # physical table format seam (plans/storage.py): parquet unless the
+        # caller passes another backend (IcebergBackend() needs its runtime
+        # jar) -- the pipeline only ever calls ref/read/overwrite_partitions/
+        # append, so the checkpoint + lineage behavior is backend-independent
+        # (pinned by tests/test_storage_backend.py)
         self.backend = backend or ParquetBackend()
         # checkpoint/pointer state goes through the Hadoop FS router so a
         # DFS base dir (hdfs://, s3a://, shared file://) works cluster-wide

@@ -29,38 +29,11 @@ from pyspark.sql.types import (
 
 __all__ = [
     "stream_fit_entries",
-    "stream_rollup",
-    "stream_exact_dedup",
     "stream_merge_series",
     "STATE_SCHEMA",
     "MERGE_STATE_SCHEMA",
 ]
 
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    watermark_ms: int,
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming exact dedup of a document stream: emit each distinct text
-    (by md5) once; duplicates arriving within ``watermark_ms`` of the first
-    sighting are dropped (``dropDuplicatesWithinWatermark`` -- dedup state
-    is evicted once the watermark passes, so state is bounded by the late
-    window instead of the corpus). This is the streaming twin of
-    ``functions.dedup.exact_dedup``: at-most-once per text inside any
-    watermark window, with bounded state at unbounded input.
-    """
-    from pyspark.sql import functions as F
-
-    ev = docs.withColumn(
-        "_event_time", F.timestamp_millis(F.col(ts_col))
-    ).withColumn("_text_hash", F.md5(F.col(text_col)))
-    return (
-        ev.withWatermark("_event_time", f"{watermark_ms} milliseconds")
-        .dropDuplicatesWithinWatermark(["_text_hash"])
-        .drop("_event_time", "_text_hash")
-    )
 
 STATE_SCHEMA = StructType(
     [
@@ -69,51 +42,6 @@ STATE_SCHEMA = StructType(
         StructField("validity", LongType()),
     ]
 )
-
-
-def stream_rollup(
-    entries: DataFrame,
-    key_cols: list[str],
-    step_ms: int,
-    watermark_ms: int,
-    origin: int = 0,
-) -> DataFrame:
-    """Streaming continuous-aggregate rollup: the finest tier's sufficient
-    statistics over an unbounded entries stream, 100% built-in Structured
-    Streaming (no Python in the pipeline).
-
-    Entries are boundary-split at bucket edges BEFORE the windowed
-    aggregation (the same stateless ``sequence``/``explode`` the batch
-    rollup uses, so time-weighting is exact), then aggregated per
-    (key, tumbling window) with watermark-based state eviction: a bucket
-    emits once the watermark passes its end (append mode), rows older than
-    the watermark are dropped by the engine, and state is one row per OPEN
-    (key, bucket). The emitted rows equal ``rollup_time_weighted`` over the
-    in-watermark data (pinned in tests) -- this is the streaming twin of
-    the TierPipeline's finest tier; coarser tiers reaggregate its output in
-    batch exactly as they do today.
-
-    Output: key_cols + bucket, twmean, vmin, vmax, integral_s, support_ms,
-    n_pieces (same schema as rollup_time_weighted).
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators.series_ops import rollup_stats, split_at_buckets
-
-    pieces = split_at_buckets(entries, step_ms, origin)
-    ev = pieces.withColumn("event_time", F.timestamp_millis(F.col("ts")))
-    wm = ev.withWatermark("event_time", f"{watermark_ms} milliseconds")
-    win = F.window(
-        F.col("event_time"),
-        f"{step_ms} milliseconds",
-        startTime=f"{origin % step_ms} milliseconds",
-    )
-    agg = wm.groupBy(*key_cols, win.alias("win")).agg(*rollup_stats())
-    return agg.select(
-        *key_cols,
-        F.unix_millis(F.col("win.start")).alias("bucket"),
-        "twmean", "vmin", "vmax", "integral_s", "support_ms", "n_pieces",
-    )
 
 
 MERGE_STATE_SCHEMA = StructType(

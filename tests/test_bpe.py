@@ -1,4 +1,4 @@
-"""Real BPE: distributed trainer + exact greedy encode.
+"""Real BPE: the fixture merge table's trainer + exact greedy encode.
 
 Semantics: the public byte-pair-encoding algorithm (Sennrich et al. 2016) —
 train = iterate (count adjacent symbol pairs weighted by word frequency,
@@ -13,16 +13,12 @@ import hashlib
 import random
 import re
 
-import pytest
-
 from scala_timeseries_lib_spark.functions.text import (
     BPE_FIXTURE_MERGES,
     BPE_ISH_PATTERN,
     FP_MOD,
-    _apply_merge_expr,
     _encode_word,
     bpe_encode_stats,
-    bpe_train,
 )
 
 # ---------------------------------------------------------------------------
@@ -102,53 +98,20 @@ def test_replay_equals_priority_encode():
         assert _encode_word(w, merges) == encode_priority(w, merges), w
 
 
-def test_apply_merge_expr_matches_greedy_pass(spark):
-    """The Catalyst fold (one merge pass) vs the sequential pass, one wide
-    batch of random symbol arrays including same-symbol runs."""
-    from pyspark.sql import functions as F
+def test_bpe_train_reproduces_fixture():
+    """BPE_FIXTURE_MERGES is the sequential trainer's output on the sf0.001
+    documents (n_merges=48, min_count=2)."""
+    import pyarrow.parquet as pq
 
-    rng = random.Random(7)
-    cases = []
-    for i in range(200):
-        syms = [rng.choice(["a", "b", "ab"]) for _ in range(rng.randint(0, 12))]
-        cases.append((i, syms))
-    df = spark.createDataFrame(cases, "id long, syms array<string>")
-    for p, q in [("a", "a"), ("a", "b"), ("ab", "a"), ("b", "ab")]:
-        got = {
-            r["id"]: r["out"]
-            for r in df.select(
-                "id", _apply_merge_expr(F.col("syms"), p, q).alias("out")
-            ).collect()
-        }
-        for i, syms in cases:
-            assert got[i] == greedy_pass(syms, p, q), (syms, p, q)
-
-
-def test_bpe_train_matches_reference(spark):
-    rng = random.Random(13)
-    vocab = ["merge", "sort", "scan", "join", "group", "aggregate", "window",
-             "filter", "select", "order", "42", "3.14", "a,b"]
-    docs = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 30))))
-        for i in range(80)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
+    texts = pq.read_table(
+        "/root/testdata/sf0.001/documents.parquet", columns=["text"]
+    ).column("text").to_pylist()
     pat = re.compile(BPE_ISH_PATTERN)
     freq = {}
-    for _, t in docs:
+    for t in texts:
         for w in pat.findall(t):
             freq[w] = freq.get(w, 0) + 1
-    expected = train_ref(freq, 24)
-    got = bpe_train(df, n_merges=24)
-    assert got == expected
-    assert len(got) == 24
-
-
-def test_bpe_train_reproduces_fixture(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = bpe_train(docs, n_merges=48)
-    assert got == BPE_FIXTURE_MERGES
+    assert train_ref(freq, 48, min_count=2) == BPE_FIXTURE_MERGES
 
 
 def test_bpe_encode_stats_matches_sequential(spark):
@@ -193,8 +156,3 @@ def test_encode_plan_shape(spark):
     )
     assert plan.count("MapInPandas") == 1
     assert "BroadcastHashJoin" in plan
-    # web-vocab escape: no broadcast hint, AQE picks the join, same rows
-    no_bc = bpe_encode_stats(df, BPE_FIXTURE_MERGES, broadcast_vocab=False)
-    assert sorted(map(tuple, no_bc.collect())) == sorted(
-        map(tuple, bpe_encode_stats(df, BPE_FIXTURE_MERGES).collect())
-    )

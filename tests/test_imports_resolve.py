@@ -95,3 +95,79 @@ def test_kernel_twins_stay_gone():
                     found.append(f"{path.relative_to(ROOT)}:"
                                  f"{getattr(node, 'lineno', '?')}: {x}")
     assert not found, "\n".join(found)
+
+
+# Package code kept although no entry point reaches it, each with its
+# reason. A key ending in ".py" or "/" roots every def of that module or
+# package directory; any other key roots the defs of that name.
+REACHABILITY_ROOTS = {
+    "entity.py": "the reference's entry algebra (TSEntry, TsId)",
+    "kernel/": "sequential references and kernels the operators are "
+               "twin-tested against",
+    "fit_entries": "the reference's TSEntryFitter as a batch operator",
+    "dynamic_window_exact": "the reference's dynamic-window aggregation",
+    "stream_fit_entries": "the reference's AppendableEntryStream fitter",
+    "extract_text_py": "sequential twin of the vectorized text extraction",
+    "IcebergBackend": "the Iceberg storage leg, for callers with its jar",
+    "iceberg_available": "the Iceberg leg's classpath probe",
+}
+
+
+def _mentions(node):
+    """Every name a node mentions: identifiers, attributes, imported names
+    and identifier-like string constants (getattr dispatch, name tables)."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.split(".")[-1]
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            yield n.value
+
+
+def test_every_package_def_is_reached_from_an_entry_point():
+    """Each module-level def or class of the package is reachable from the
+    entry points (``__spark_entry__.py``, ``bench*.py``, ``jobs/``,
+    ``tools/``, ``tsbench/``), from package module-level statements, or
+    from ``REACHABILITY_ROOTS``, through the names each reached def
+    mentions. ``__all__`` lists and imports do not count as use. Matching
+    is by name, so dead code that shares a name with live code is missed,
+    but live code is never flagged."""
+    root_mods = tuple(k for k in REACHABILITY_ROOTS if k.endswith((".py", "/")))
+    roots = set(REACHABILITY_ROOTS) - set(root_mods)
+    defs = {}
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        rel = path.relative_to(ROOT / PKG).as_posix()
+        whole = rel.startswith(root_mods)
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append(
+                    (f"{rel}:{stmt.lineno}", set(_mentions(stmt))))
+                if whole:
+                    roots.add(stmt.name)
+            elif not (isinstance(stmt, (ast.Import, ast.ImportFrom))
+                      or isinstance(stmt, ast.Assign) and any(
+                          getattr(t, "id", None) == "__all__"
+                          for t in stmt.targets)):
+                roots.update(_mentions(stmt))
+    entries = [ROOT / "__spark_entry__.py", *ROOT.glob("bench*.py")]
+    for d in ("jobs", "tools", "tsbench"):
+        entries += (ROOT / d).rglob("*.py")
+    for path in entries:
+        roots.update(_mentions(ast.parse(path.read_text())))
+
+    reached, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for _loc, names in defs.get(name, ()):
+                todo.extend(names - reached)
+    assert len(defs) > 200
+    unreached = sorted(f"{loc} {name}" for name, found in defs.items()
+                       if name not in reached for loc, _ in found)
+    assert not unreached, "\n".join(unreached)

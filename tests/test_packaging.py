@@ -51,3 +51,11 @@ def test_each_checkout_ships_its_own_sources(tmp_path):
         shipped = set(zf.namelist())
     assert shipped == {str(p.relative_to(old_pkg.parent))
                        for p in old_pkg.rglob("*.py")}
+
+
+def test_ship_package_adds_the_zip_once_per_session(spark):
+    from scala_timeseries_lib_spark.plans.packaging import ship_package
+
+    name = os.path.basename(ship_package(spark))
+    ship_package(spark)
+    assert spark.sparkContext._python_includes.count(name) == 1

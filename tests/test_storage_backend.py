@@ -12,7 +12,6 @@ from scala_timeseries_lib_spark.operators.entries import derive_entries
 from scala_timeseries_lib_spark.plans.storage import (
     IcebergBackend,
     ParquetBackend,
-    default_backend,
     iceberg_available,
 )
 from scala_timeseries_lib_spark.plans.tiers import TierPipeline
@@ -66,13 +65,6 @@ class TestBackendParity:
         snap_parquet = self._run(spark, tmp_path / "pq", ParquetBackend())
         # identical tier contents across physical formats
         assert snap_iceberg == snap_parquet
-
-    def test_default_backend_selection(self, spark):
-        b = default_backend(spark)
-        if iceberg_available(spark):
-            assert isinstance(b, IcebergBackend)
-        else:
-            assert isinstance(b, ParquetBackend)
 
     # NOTE: the incremental path through the backend interface (stored-tier
     # readback, watermark batching, idempotent reruns) is pinned by
